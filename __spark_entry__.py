@@ -2684,6 +2684,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "extract_doc_content": q_extract_doc_content,
         "extract_doc_assembly": q_extract_doc_assembly,
         "extract_rtf_content": q_extract_rtf_content,
+        # -- 1b. operators/similarity.py changed (empty query set) after
+        #        their latest green round -----------------------------
+        "sim_topk_cosine": q_sim_topk_cosine,
+        "sim_embedding_neardup": q_sim_embedding_neardup,
+        "sim_ann_lsh_topk": q_sim_ann_lsh_topk,
+        "sim_ann_ivf_topk": q_sim_ann_ivf_topk,
         # -- 2. no green r4 row, untouched code (17) --------------------
         "dedup_exact": q_dedup_exact,
         "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
@@ -2754,10 +2760,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_quality_scores": q_text_quality_scores,
         "text_fingerprint": q_text_fingerprint,
         "text_repetition": q_text_repetition,
-        "sim_topk_cosine": q_sim_topk_cosine,
-        "sim_embedding_neardup": q_sim_embedding_neardup,
-        "sim_ann_lsh_topk": q_sim_ann_lsh_topk,
-        "sim_ann_ivf_topk": q_sim_ann_ivf_topk,
         "events_asof_join": q_events_asof_join,
         "events_range_join": q_events_range_join,
     })

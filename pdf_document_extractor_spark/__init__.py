@@ -14,9 +14,9 @@ Spark-first:
                 embedding), similarity search, text analysis, skew salting.
 - ``sources``   pages-table readers/synthesis + snapshot-commit catalog
                 (Iceberg when available, atomic parquet snapshots otherwise).
-- ``plans``     the end-to-end job: resume anti-join -> skew pre-pass ->
-                salted repartition -> light/heavy split -> extract ->
-                lineage merge.
+- ``plans``     the end-to-end job: resume anti-join -> url-hash
+                repartition -> extract -> staged commit of the extracted
+                rows and their lineage.
 - ``streaming`` Structured Streaming variant of the extraction pass.
 """
 

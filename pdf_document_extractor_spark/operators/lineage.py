@@ -10,7 +10,8 @@ id, doc count, byte count, failure manifest)").
 
 Zero extra passes over the document bytes: ``extracted`` rows already carry
 ``partition_id`` (TaskContext, captured inside the extract UDF) and
-``byte_count``; lineage is a groupBy over the (tiny) extracted metadata.
+``byte_count``; lineage is a groupBy over the (tiny) extracted metadata,
+one exchange keyed on partition_id.
 """
 
 from __future__ import annotations
@@ -33,31 +34,34 @@ LINEAGE_COLS = [
 
 
 def _per_doc(extracted: "DataFrame"):
-    """Collapse page rows to one row per document (page_number<=1 keeps the
-    single row of both failure docs (0) and one-page docs (1))."""
+    """One row per input document, without a shuffle: every doc has
+    exactly one row with page_number<=1 (the single row of a failure doc
+    (0), the first page of a success doc (1)), and page_count, status and
+    byte_count are the same on all of a doc's rows. An input url that
+    appears twice is two documents here, as it is in the job's docs_in."""
     from pyspark.sql import functions as F  # noqa: N812
 
-    return (
-        extracted.groupBy("url")
-        .agg(
-            F.first("partition_id").alias("partition_id"),
-            F.first("status").alias("status"),
-            F.first("error_type").alias("error_type"),
-            F.first("error_message").alias("error_message"),
-            F.first("byte_count").alias("byte_count"),
-            F.max("page_count").alias("page_count"),
-        )
+    return extracted.filter(F.col("page_number") <= 1).select(
+        "url",
+        "partition_id",
+        "status",
+        "error_type",
+        "error_message",
+        "byte_count",
+        "page_count",
     )
 
 
-def lineage_rows(extracted: "DataFrame", run_id: str) -> "DataFrame":
-    """Per-partition lineage: doc/page/byte counts + JSON failure manifest
-    of hard-failure urls (sorted for determinism)."""
+# partition_id of the run rollup row in the lineage table
+ROLLUP_PARTITION = -1
+
+
+def _lineage_agg(per_doc: "DataFrame", run_id: str) -> "DataFrame":
     from pyspark.sql import functions as F  # noqa: N812
 
-    per_doc = _per_doc(extracted)
     fail_struct = F.when(
-        F.col("status") != "success",
+        (F.col("status") != "success")
+        & (F.col("partition_id") != ROLLUP_PARTITION),
         F.struct(
             F.col("url"), F.col("error_type"), F.col("error_message")
         ),
@@ -84,6 +88,12 @@ def lineage_rows(extracted: "DataFrame", run_id: str) -> "DataFrame":
     )
 
 
+def lineage_rows(extracted: "DataFrame", run_id: str) -> "DataFrame":
+    """Per-partition lineage: doc/page/byte counts + JSON failure manifest
+    of hard-failure urls (sorted for determinism)."""
+    return _lineage_agg(_per_doc(extracted), run_id)
+
+
 def run_rollup(extracted: "DataFrame") -> "DataFrame":
     """Run-level summary (the PipelineEvent/status-summary analog,
     lib/models/pipeline_event.py:11-80): one row of totals."""
@@ -106,3 +116,19 @@ def run_rollup(extracted: "DataFrame") -> "DataFrame":
         .alias("total_pages"),
         F.sum("byte_count").cast("long").alias("total_bytes"),
     )
+
+
+def lineage_with_rollup(extracted: "DataFrame", run_id: str) -> "DataFrame":
+    """A run's rows of the lineage table: ``lineage_rows`` plus the run
+    rollup as the row with partition_id -1 (failure_manifest "[]"), in
+    ONE aggregation, so one scan and one exchange: every doc counts once
+    toward its partition's row and once toward the rollup row. The rollup
+    equals ``run_rollup``'s totals (failure docs carry page_count 0). An
+    empty input gives no rows."""
+    from pyspark.sql import functions as F  # noqa: N812
+
+    per_doc = _per_doc(extracted).withColumn(
+        "partition_id",
+        F.explode(F.array("partition_id", F.lit(ROLLUP_PARTITION))),
+    )
+    return _lineage_agg(per_doc, run_id)

@@ -80,6 +80,8 @@ def _collect_queries(embeddings: "DataFrame", query_ids_below: int):
         .collect(),
         key=lambda r: r["vec_id"],
     )
+    if not rows:  # empty query set: callers score nothing
+        return [], np.zeros((0, 0), dtype="float64")
     ids = [int(r["vec_id"]) for r in rows]
     mat = np.array(
         [list(r["embedding"]) for r in rows], dtype="float64"

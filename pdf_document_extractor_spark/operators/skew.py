@@ -3,11 +3,15 @@
 North-rule requirement; replaces the reference's serial semaphore
 concurrency (kafka_background_service.py:112, settings.py:56) with explicit
 data-parallel placement. The Scarlett paper (EUROSYS'11, PAPERS.md)
-motivates popularity-skew handling: a Common-Crawl host distribution is
-Zipfian, so hashing urls alone leaves the hot host's documents concentrated.
+balances by the popularity of the PLACEMENT UNIT. The extraction job
+(plans/run.py) places by url, and urls are unique, so plain
+``repartition(P, url)`` already spreads a hot host over every partition:
+the job runs none of the salting below.
 
-Design (placement-only — provably output-invariant, tested in
-tests/test_pipeline.py::test_salting_output_invariance):
+Salting applies only when the placement key is coarser than the url, e.g.
+a table bucketed ``bucket(8, url)`` for locality, where a Zipfian host
+distribution concentrates in a few keys (tested in
+tests/test_pipeline.py::test_salting_rebalances_coarse_buckets):
 
   bucket = pmod(xxhash64(url), B)
   salt   = pmod(xxhash64(url, 1), S)   for rows whose host is "hot",
@@ -18,7 +22,7 @@ Hot hosts come from a cheap pre-pass ``groupBy(host).count()`` — at 100 TB
 this aggregates to ~#distinct-hosts rows (tiny) and the hot set is collected
 to the driver and broadcast into the literal filter. All placement columns
 are dropped before extraction output, so the result is independent of B, S,
-P, and the hot-host set.
+P, and the hot-host set (the extract_salted_invariance registry query).
 """
 
 from __future__ import annotations
@@ -161,11 +165,12 @@ def split_heavy(
     heavy_bytes: int,
     html_col: str = "html",
 ) -> tuple["DataFrame", "DataFrame"]:
-    """(light, heavy) split on payload size — the heavy pass runs with its
-    own (smaller) Arrow batch size and stage (reference analog: the
-    oversize guards at src/utils/image_validator.py:36-150 and the north
-    rule's separate heavy-doc pass). Both branches produce identical output
-    schema; union happens at the sink."""
+    """(light, heavy) split on payload size, for a caller that runs heavy
+    docs as their own stage (reference analog: the oversize guards at
+    src/utils/image_validator.py:36-150). Both branches produce identical
+    output schema; union happens at the sink. The extraction job does not
+    split: the Arrow byte cap in plans/run.py RECOMMENDED_CONF bounds its
+    batches instead."""
     from pyspark.sql import functions as F  # noqa: N812
 
     cond = F.length(F.col(html_col)) > heavy_bytes

@@ -4,19 +4,26 @@ Pipeline (SURVEY.md §3.1's Spark translation, north rule wiring):
 
   read pages ->
   RESUME anti-join against committed extracted urls (P1/A5) ->
-  hot-host pre-pass + salted url-hash-bucket repartition (P3/Scarlett) ->
-  light/heavy split on payload bytes (D6) ->
-  one fused mapInPandas extraction per branch (M1-M13, D1-D3, P2) ->
-  union -> atomic snapshot commit of `extracted` ->
-  per-partition lineage rows + run rollup committed to `lineage` (A1/S7/P4)
+  url-hash repartition into P partitions (P3) ->
+  ONE fused mapInPandas extraction (M1-M13, D1-D3, P2) ->
+  stage `extracted` -> per-partition lineage rows + run rollup from the
+  staged files, staged to `lineage` (A1/S7/P4) ->
+  docs_in read back from the staged rollup row -> publish both manifests
+  (or, with nothing to do, discard both staged dirs)
 
 Scale notes:
-- The ONLY shuffle on the 100 TB path is the explicit salted repartition;
-  everything else is scan -> narrow ops -> write.
-- The heavy branch gets many small partitions (repartition by url) so a task
-  never holds more than a few multi-MB payloads in one Arrow batch.
-- Lineage is aggregated from the committed snapshot's metadata columns
-  (partition_id/byte_count), not from a second pass over the bytes.
+- The ONLY shuffle on the extraction path is the url-hash repartition.
+  Urls are unique, so hashing them spreads a hot host over every
+  partition without a host pre-pass; the salt in operators/skew.py is for
+  placement keys coarser than the url. Every shuffle partition gets work
+  at any P well below the url count.
+- Heavy payloads are bounded by the Arrow batch byte cap in
+  RECOMMENDED_CONF (spark.sql.execution.arrow.maxBytesPerBatch): a batch
+  closes at the row that reaches the cap, so a task holds at most the cap
+  plus one document in an input batch, with no second pass over the input.
+- Lineage is aggregated from the staged snapshot's metadata columns
+  (partition_id/byte_count), not from a second pass over the bytes, and
+  gives docs_in: the job runs no Spark action before the extraction write.
 - Soft failures raise inside the UDF => Spark task retry
   (spark.task.maxFailures); a job that dies leaves NO manifest entry, so the
   rerun resumes exactly (snapshot-commit discipline, sources/catalog.py).
@@ -36,13 +43,14 @@ from dataclasses import dataclass
 from typing import TYPE_CHECKING
 
 from ..operators.extract import extract_pages
-from ..operators.lineage import lineage_rows, run_rollup
-from ..operators.skew import host_stats, salted_repartition, split_heavy
+from ..operators.lineage import ROLLUP_PARTITION, lineage_with_rollup
 from ..sources.catalog import SnapshotTable
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame, SparkSession
 
+# Payload size above which skew.split_heavy routes a doc to its heavy
+# branch; the job itself no longer splits (see the Arrow byte cap below).
 HEAVY_BYTES_DEFAULT = 1 << 20  # 1 MiB
 
 
@@ -56,15 +64,37 @@ class RunResult:
     snapshot_id: int
 
 
+def extraction_plan(
+    spark: "SparkSession",
+    pages: "DataFrame",
+    extracted_tbl: SnapshotTable,
+    num_partitions: int,
+    quarantine_soft: bool = False,
+    config=None,
+) -> "DataFrame":
+    """The job's lazy extraction plan: the pages no committed snapshot of
+    ``extracted_tbl`` holds, placed by url hash, through the one fused
+    extraction stage."""
+    todo = pages
+    prior = extracted_tbl.read(spark)
+    if prior is not None:
+        # each committed doc has exactly one page_number<=1 row
+        # (operators/lineage.py): its urls without a distinct's exchange
+        done = prior.filter("page_number <= 1").select("url")
+        todo = pages.join(done, "url", "left_anti")
+    return extract_pages(
+        todo.repartition(num_partitions, "url"),
+        config=config,
+        quarantine_soft=quarantine_soft,
+    )
+
+
 def run_extraction_job(
     spark: "SparkSession",
     pages: "DataFrame",
     warehouse: str,
     run_id: str,
     num_partitions: int | None = None,
-    heavy_bytes: int = HEAVY_BYTES_DEFAULT,
-    hot_fraction: float = 0.05,
-    salt_buckets: int = 16,
     quarantine_soft: bool = False,
     config=None,
 ) -> RunResult:
@@ -80,77 +110,49 @@ def run_extraction_job(
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism * 2
 
-    # -- resume: only un-extracted urls ------------------------------------
-    prior = extracted_tbl.read(spark)
-    todo = pages
-    if prior is not None:
-        done_urls = prior.select("url").distinct()
-        todo = pages.join(done_urls, "url", "left_anti")
-
-    # ONE url-column pre-pass yields both the doc count and the hot set
-    # (the input is scanned again only by the extraction stage itself)
-    hot, docs_in = host_stats(todo, hot_fraction=hot_fraction)
+    extracted = extraction_plan(
+        spark, pages, extracted_tbl, num_partitions,
+        quarantine_soft=quarantine_soft, config=config,
+    )
+    staged = extracted_tbl.stage(extracted, run_id)
+    this_run = extracted_tbl.read_staged(spark, staged)
+    staged_lin = lineage_tbl.stage(lineage_with_rollup(this_run, run_id), run_id)
+    rollup = (
+        lineage_tbl.read_staged(spark, staged_lin)
+        .filter(f"partition_id = {ROLLUP_PARTITION}")
+        .select("doc_count")
+        .first()
+    )
+    docs_in = rollup.doc_count if rollup is not None else 0
     if docs_in == 0:
+        # nothing left to extract: publish nothing, keep no staged files
+        extracted_tbl.discard(staged)
+        lineage_tbl.discard(staged_lin)
         return RunResult(run_id, 0, 0, time.time() - t0, False,
                          extracted_tbl.current_snapshot_id())
-    placed = salted_repartition(
-        todo, num_partitions, hot=hot, salt_buckets=salt_buckets
-    )
-    light, heavy = split_heavy(placed, heavy_bytes)
-
-    ext_light = extract_pages(
-        light, config=config, quarantine_soft=quarantine_soft
-    )
-    # heavy pass: spread big payloads thin (more, smaller partitions)
-    ext_heavy = extract_pages(
-        heavy.repartition(num_partitions, "url"),
-        config=config,
-        quarantine_soft=quarantine_soft,
-    )
-    extracted = ext_light.unionByName(ext_heavy)
-
-    snap = extracted_tbl.commit(extracted, run_id)
-
-    # -- lineage from THIS run's committed snapshot (no recompute) ----------
-    this_run = extracted_tbl.read_snapshot(spark, snap.snapshot_id)
-    lin = lineage_rows(this_run, run_id)
-    rollup = run_rollup(this_run).withColumnRenamed("total_docs", "doc_count")
-    from pyspark.sql import functions as F  # noqa: N812
-
-    lineage_out = lin.unionByName(
-        rollup.select(
-            F.lit(-1).alias("partition_id"),
-            F.col("doc_count"),
-            F.col("total_pages").alias("page_count"),
-            F.col("total_bytes").alias("byte_count"),
-            F.col("success_docs").alias("success_count"),
-            F.col("hard_fail_docs").alias("hard_fail_count"),
-            F.col("soft_fail_docs").alias("soft_fail_count"),
-            F.lit("[]").alias("failure_manifest"),
-            F.lit(run_id).alias("run_id"),
-            F.current_timestamp().alias("committed_at"),
-        ),
-        allowMissingColumns=False,
-    )
-    lineage_tbl.commit(lineage_out, run_id)
-
-    docs_done = docs_in
+    snap = extracted_tbl.publish(staged)
+    lineage_tbl.publish(staged_lin)
     return RunResult(
-        run_id, docs_in, docs_done, time.time() - t0, True, snap.snapshot_id
+        run_id, docs_in, docs_in, time.time() - t0, True, snap.snapshot_id
     )
 
 
 # Production conf for the 100 TB run (applied by main(); local tests use
 # their own sessions). Rationale per key:
 RECOMMENDED_CONF = {
-    # runtime re-planning: post-shuffle coalesce + skew-split the salted
-    # repartition's output
+    # runtime re-planning: post-shuffle coalesce and skew-join splits for
+    # the downstream queries (the job's url repartition has an explicit
+    # partition count, which AQE keeps)
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # multi-MB html cells: a 10k-row default batch of 1 MB docs is 10 GB in
     # one Arrow chunk — cap rows per batch (output side is further bounded
     # by the UDF's FLUSH_ROWS/FLUSH_BYTES)
     "spark.sql.execution.arrow.maxRecordsPerBatch": "1024",
+    # ...and bytes per batch: a batch closes at the row that reaches 64 MiB,
+    # so heavy docs need no separate pass. An integer string: some pyspark
+    # worker paths read it with int().
+    "spark.sql.execution.arrow.maxBytesPerBatch": str(64 << 20),
     # binary-heavy scans: smaller splits keep per-task memory bounded and
     # give AQE finer units to coalesce
     "spark.sql.files.maxPartitionBytes": "64m",
@@ -172,7 +174,6 @@ def main() -> None:
     ap.add_argument("--pages", required=True, help="pages parquet path")
     ap.add_argument("--warehouse", required=True)
     ap.add_argument("--run-id", required=True)
-    ap.add_argument("--heavy-bytes", type=int, default=HEAVY_BYTES_DEFAULT)
     ap.add_argument("--num-partitions", type=int, default=None)
     ap.add_argument(
         "--output-format",
@@ -205,7 +206,6 @@ def main() -> None:
         args.warehouse,
         args.run_id,
         num_partitions=args.num_partitions,
-        heavy_bytes=args.heavy_bytes,
         quarantine_soft=args.quarantine_soft,
         config=config,
     )

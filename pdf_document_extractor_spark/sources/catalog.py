@@ -6,12 +6,20 @@ commit-after-process Kafka offsets (kafka_background_service.py:130-158,
 from Iceberg atomic snapshot commits:
 
 - output becomes visible ONLY when the manifest gains a snapshot entry
-  (written via tmp-file + ``os.replace`` — atomic on POSIX);
+  (written via tmp-file + ``os.replace`` — atomic on POSIX). ``commit`` is
+  ``stage`` (write the data files, invisible) + ``publish`` (flip the
+  manifest); a job that must inspect its own output before deciding to
+  publish it stages, reads the staged files back, then publishes or
+  ``discard``s;
 - a failed/killed job leaves data files but no manifest entry => invisible
   => the rerun re-reads the same input (exactly-once VISIBLE effect);
 - committing the same ``run_id`` twice is a no-op (idempotent resume);
 - ``VERSION AS OF`` analog via ``read(..., as_of=snapshot_id)`` (reference
-  replay/seek analog: lib/kafka/kafka.py:195-251).
+  replay/seek analog: lib/kafka/kafka.py:195-251);
+- each entry records the schema of its data files, so reads pass it to
+  ``spark.read.schema(...)`` instead of running a schema-inference job
+  (entries written before the schema was recorded still load: their reads
+  infer it).
 
 In production this class is replaced 1:1 by Iceberg
 (``df.writeTo(tbl).append()`` + incremental reads); the sandbox has no
@@ -29,7 +37,7 @@ import time
 import uuid
 from dataclasses import dataclass
 from pathlib import Path
-from typing import TYPE_CHECKING
+from typing import TYPE_CHECKING, Any
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame, SparkSession
@@ -47,6 +55,8 @@ class Snapshot:
     # expired: data files removed by compaction/expiry; the ENTRY stays so
     # committed_run_ids keeps its idempotency guarantee forever
     expired: bool = False
+    # StructType.jsonValue() of the data files; None in older manifests
+    schema: dict[str, Any] | None = None
 
 
 class SnapshotTable:
@@ -74,31 +84,67 @@ class SnapshotTable:
         return {s.run_id for s in self.snapshots()}
 
     # -- write ------------------------------------------------------------
-    def commit(self, df: "DataFrame", run_id: str) -> Snapshot | None:
-        """Write df as a new snapshot; no-op if run_id already committed."""
+    def stage(self, df: "DataFrame", run_id: str) -> Snapshot | None:
+        """Write df's data files for the next snapshot WITHOUT publishing
+        them: until ``publish`` they are an orphan dir no reader sees.
+        None if run_id is already committed (idempotent rerun)."""
         entries = self.snapshots()
         if any(e.run_id == run_id for e in entries):
-            return None  # idempotent: rerun of a committed run
+            return None
         snapshot_id = (entries[-1].snapshot_id + 1) if entries else 1
-        out_dir = self.data_dir / f"snap-{snapshot_id:06d}-{run_id}"
+        snap = Snapshot(
+            snapshot_id=snapshot_id,
+            run_id=run_id,
+            committed_at=0.0,
+            n_files=0,
+            schema=df.schema.jsonValue(),
+        )
+        out_dir = Path(self._snap_path(snap))
         # overwrite, NOT errorifexists: a commit that died mid-write leaves
         # an orphan data dir with no manifest entry (invisible). The retry/
         # replay must be able to reclaim that path — erroring on it would
         # turn every replay into a permanent PATH_ALREADY_EXISTS crash loop.
-        # Visibility still flips only at the atomic manifest replace below.
+        # Visibility still flips only at the atomic manifest replace in
+        # publish.
         df.write.mode("overwrite").parquet(str(out_dir))
-        n_files = len(list(out_dir.glob("*.parquet")))
-        snap = Snapshot(
-            snapshot_id=snapshot_id,
-            run_id=run_id,
-            committed_at=time.time(),
-            n_files=n_files,
-        )
+        snap.n_files = len(list(out_dir.glob("*.parquet")))
+        return snap
+
+    def publish(self, snap: Snapshot) -> Snapshot:
+        """Make a staged snapshot visible (the atomic manifest flip)."""
+        entries = self.snapshots()
+        last = entries[-1].snapshot_id if entries else 0
+        if snap.snapshot_id != last + 1:
+            raise RuntimeError(
+                f"staged snapshot {snap.snapshot_id} is stale: the table "
+                f"moved to {last} after it was staged"
+            )
+        snap.committed_at = time.time()
         self._write_manifest(entries + [snap])
         return snap
 
+    def discard(self, snap: Snapshot) -> None:
+        """Delete a staged snapshot's data files (never published)."""
+        shutil.rmtree(self._snap_path(snap), ignore_errors=True)
+
+    def commit(self, df: "DataFrame", run_id: str) -> Snapshot | None:
+        """Write df as a new snapshot; no-op if run_id already committed."""
+        snap = self.stage(df, run_id)
+        return None if snap is None else self.publish(snap)
+
     def _snap_path(self, s: Snapshot) -> str:
         return str(self.data_dir / f"snap-{s.snapshot_id:06d}-{s.run_id}")
+
+    def _scan(self, spark: "SparkSession", snaps: list[Snapshot]) -> "DataFrame":
+        """Read the snapshots' data files, with their recorded schema when
+        they all record the same one (no inference job), else inferred."""
+        from pyspark.sql.types import StructType
+
+        reader = spark.read
+        schemas = [s.schema for s in snaps]
+        if schemas[0] is not None and all(x == schemas[0] for x in schemas):
+            reader = reader.schema(StructType.fromJson(schemas[0]))
+        return reader.parquet(*[self._snap_path(s) for s in snaps])
 
     # -- read -------------------------------------------------------------
     def read(
@@ -135,7 +181,7 @@ class SnapshotTable:
             snaps = [s for s in snaps if s.snapshot_id <= as_of]
         if not snaps:
             return None
-        return spark.read.parquet(*[self._snap_path(s) for s in snaps])
+        return self._scan(spark, snaps)
 
     def read_snapshot(self, spark: "SparkSession", snapshot_id: int) -> "DataFrame":
         """Read exactly one snapshot's files (the incremental-read analog)."""
@@ -146,8 +192,12 @@ class SnapshotTable:
                         f"snapshot {snapshot_id} expired by compaction — "
                         "time travel past the retention horizon"
                     )
-                return spark.read.parquet(self._snap_path(s))
+                return self._scan(spark, [s])
         raise KeyError(f"snapshot {snapshot_id} not found")
+
+    def read_staged(self, spark: "SparkSession", snap: Snapshot) -> "DataFrame":
+        """Read a staged (not yet published) snapshot's files."""
+        return self._scan(spark, [snap])
 
     def read_since(
         self, spark: "SparkSession", after_snapshot_id: int
@@ -169,7 +219,7 @@ class SnapshotTable:
         ]
         if not snaps:
             return None
-        return spark.read.parquet(*[self._snap_path(s) for s in snaps])
+        return self._scan(spark, snaps)
 
     def current_snapshot_id(self) -> int:
         snaps = self.snapshots()
@@ -188,18 +238,11 @@ class SnapshotTable:
         live = [s for s in entries if not s.expired]
         if len(live) <= 1:
             return None
-        df = spark.read.parquet(*[self._snap_path(s) for s in live])
-        snapshot_id = entries[-1].snapshot_id + 1
-        run_id = f"compact-{snapshot_id}"
-        out_dir = self.data_dir / f"snap-{snapshot_id:06d}-{run_id}"
-        df.write.mode("overwrite").parquet(str(out_dir))
-        snap = Snapshot(
-            snapshot_id=snapshot_id,
-            run_id=run_id,
-            committed_at=time.time(),
-            n_files=len(list(out_dir.glob("*.parquet"))),
-            kind="compact",
+        snap = self.stage(
+            self._scan(spark, live), f"compact-{entries[-1].snapshot_id + 1}"
         )
+        snap.kind = "compact"
+        snap.committed_at = time.time()
         for s in live:
             s.expired = True
         self._write_manifest(entries + [snap])  # visibility flip FIRST

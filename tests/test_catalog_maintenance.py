@@ -110,3 +110,45 @@ def test_read_as_of_at_or_after_compaction_is_fine(spark, tmp_path):
     assert got_at_compact == before
     got_head = {(r.k, r.v) for r in tbl.read(spark, as_of=5).collect()}
     assert got_head == before | {(100, "new")}
+
+
+def test_staged_snapshot_is_invisible_until_published(spark, tmp_path):
+    """stage writes the files, publish flips the manifest, discard drops
+    a staged snapshot that is never published."""
+    tbl = SnapshotTable(str(tmp_path), "t")
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
+    staged = tbl.stage(df, "run-1")
+    assert tbl.read(spark) is None and tbl.current_snapshot_id() == 0
+    assert {(r.k, r.v) for r in tbl.read_staged(spark, staged).collect()} == {
+        (1, "a"),
+        (2, "b"),
+    }
+    assert tbl.publish(staged).snapshot_id == 1
+    assert tbl.read(spark).count() == 2
+    assert tbl.stage(df, "run-1") is None  # idempotent, like commit
+
+    dropped = tbl.stage(df, "run-2")
+    tbl.discard(dropped)
+    assert sorted(p.name for p in tbl.data_dir.iterdir()) == ["snap-000001-run-1"]
+    assert tbl.current_snapshot_id() == 1
+
+
+def test_manifest_records_schema_and_old_manifests_still_load(spark, tmp_path):
+    """Each entry records its files' schema (reads pass it to the reader
+    instead of inferring it); an entry written before schemas were
+    recorded still reads, by inference."""
+    import json
+
+    tbl = SnapshotTable(str(tmp_path), "t")
+    _commit_three(spark, tbl)
+    (entry,) = tbl.snapshots()[:1]
+    assert [f["name"] for f in entry.schema["fields"]] == ["k", "v"]
+    want = {(r.k, r.v) for r in tbl.read(spark).collect()}
+
+    old = json.loads(tbl.manifest_path.read_text(encoding="utf-8"))
+    for e in old:
+        del e["schema"]
+    tbl.manifest_path.write_text(json.dumps(old), encoding="utf-8")
+    assert all(s.schema is None for s in tbl.snapshots())
+    assert {(r.k, r.v) for r in tbl.read(spark).collect()} == want
+    assert tbl.read_snapshot(spark, 2).count() == 4

@@ -1,10 +1,12 @@
 """Pipeline tests on local Spark (SURVEY.md §5.2 items 3-4): resume
-idempotency, crash-resume, salting output-invariance, heavy-doc routing,
-lineage reconciliation."""
+idempotency, crash-resume, placement output-invariance, the job's shape
+(one extraction pass, no schema inference), heavy-doc bounds, lineage
+reconciliation."""
 
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 
@@ -92,25 +94,78 @@ def test_partial_run_resumes_exactly(spark, tmp_path, corpus_df):
     assert resumed == oneshot  # byte-identical content, same statuses
 
 
-def test_salting_and_heavy_split_are_output_invariant(spark, tmp_path):
-    """Plan A (salted, heavy threshold 64 KiB) vs plan B (no salt, no heavy
-    split) produce byte-identical extracted content."""
+def test_placement_is_output_invariant(spark, tmp_path):
+    """The job at 16 partitions and at 2 commits byte-identical extracted
+    content: url-hash placement never changes output."""
     docs = gen_unit_corpus()
     pages = pages_df_from_fixtures(spark, docs)
 
     wh_a = str(tmp_path / "a")
-    run_extraction_job(
-        spark, pages, wh_a, "r1",
-        num_partitions=16, heavy_bytes=HEAVY_BYTES_TEST, salt_buckets=8,
-    )
+    run_extraction_job(spark, pages, wh_a, "r1", num_partitions=16)
     wh_b = str(tmp_path / "b")
-    run_extraction_job(
-        spark, pages, wh_b, "r1",
-        num_partitions=2, heavy_bytes=1 << 40, hot_fraction=1.1,
-    )
+    run_extraction_job(spark, pages, wh_b, "r1", num_partitions=2)
     a = _contents(SnapshotTable(wh_a, "extracted").read(spark))
     b = _contents(SnapshotTable(wh_b, "extracted").read(spark))
     assert a == b
+
+
+def _spark_work(spark, fn):
+    """Run fn; return (its result, the physical plans of the SQL
+    executions it ran, in order, the ids of the jobs it ran outside any
+    SQL execution, e.g. parquet schema inference), read from the status
+    store."""
+    conv = spark._jvm.scala.jdk.javaapi.CollectionConverters
+    store = spark._jsparkSession.sharedState().statusStore()
+    tracker = spark.sparkContext.statusTracker()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def state():
+        bus.waitUntilEmpty()
+        execs = conv.asJava(store.executionsList())
+        return {e.executionId(): e for e in execs}, set(tracker.getJobIdsForGroup())
+
+    execs0, jobs0 = state()
+    out = fn()
+    execs1, jobs1 = state()
+    new = [e for i, e in sorted(execs1.items()) if i not in execs0]
+    in_sql = {int(j) for e in new for j in conv.asJava(e.jobs()).keySet()}
+    return out, [e.physicalPlanDescription() for e in new], jobs1 - jobs0 - in_sql
+
+
+def test_job_runs_no_action_before_the_extraction_write(spark, tmp_path, corpus_df):
+    """A resuming run's first Spark work is the extraction write itself
+    (no pre-pass, no count), placed by url hash, and no job runs outside
+    a SQL execution (no parquet schema inference): write extracted, write
+    lineage, read back the rollup row."""
+    from pyspark.sql import functions as F  # noqa: N812
+
+    wh = str(tmp_path / "wh")
+    half = corpus_df.filter(F.crc32(F.col("url")) % 2 == 0)
+    run_extraction_job(spark, half, wh, "r1", num_partitions=8)
+    res, plans, outside = _spark_work(
+        spark, lambda: run_extraction_job(spark, corpus_df, wh, "r2", num_partitions=8)
+    )
+    assert res.committed and 0 < res.docs_in < 300
+    assert len(plans) == 3, plans
+    assert "MapInPandas" in plans[0] and "hashpartitioning(url" in plans[0]
+    assert "LeftAnti" in plans[0]
+    assert "MapInPandas" not in plans[1] + plans[2]
+    assert not outside
+
+
+def test_all_done_rerun_publishes_nothing(spark, tmp_path, corpus_df):
+    """A new run_id over fully extracted input leaves both manifests
+    byte-unchanged and no staged snapshot dir behind."""
+    wh = str(tmp_path / "wh")
+    run_extraction_job(spark, corpus_df, wh, "r1", num_partitions=8)
+    tables = [SnapshotTable(wh, n) for n in ("extracted", "lineage")]
+    manifests = [t.manifest_path.read_bytes() for t in tables]
+
+    res = run_extraction_job(spark, corpus_df, wh, "r2", num_partitions=8)
+    assert not res.committed and res.docs_in == 0 and res.snapshot_id == 1
+    assert [t.manifest_path.read_bytes() for t in tables] == manifests
+    for t in tables:
+        assert sorted(os.listdir(t.data_dir)) == ["snap-000001-r1"]
 
 
 def test_heavy_docs_actually_route(spark, tmp_path):
@@ -122,6 +177,69 @@ def test_heavy_docs_actually_route(spark, tmp_path):
     n_heavy = heavy.count()
     assert n_heavy >= 2  # the oversize fixture class
     assert light.count() + n_heavy == 36
+
+
+def test_arrow_byte_cap_bounds_input_batches(spark):
+    """With RECOMMENDED_CONF's row and byte caps (the byte cap scaled to
+    the oversize fixture class), a mapInPandas input batch closes at the
+    row that reaches the cap: without its last row every batch is under
+    the cap, so a doc larger than the cap never shares a batch with more
+    than the cap's worth of others, and is the last row of its batch."""
+    import pandas as pd
+
+    from pdf_document_extractor_spark.plans.run import RECOMMENDED_CONF
+
+    cap_key = "spark.sql.execution.arrow.maxBytesPerBatch"
+    rows_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    assert RECOMMENDED_CONF[cap_key] == str(64 << 20)
+    cap = 3 * HEAVY_BYTES_TEST
+    heavy = [d for d in gen_unit_corpus() if len(d.html) > HEAVY_BYTES_TEST]
+    assert len(heavy) >= 2 and all(len(d.html) < cap for d in heavy)
+    giant = heavy[0].html + b"<!--" + b"x" * cap + b"-->"
+    light = [
+        (f"https://light.example/{i}", b"<p>" + b"y" * (HEAVY_BYTES_TEST // 8) + b"</p>")
+        for i in range(40)
+    ]
+    rows = light[:20] + [(d.url, d.html) for d in heavy] * 3
+    rows += [("https://giant.example/0", giant)] + light[20:]
+    pages = spark.createDataFrame(rows, "url string, html binary").coalesce(1)
+
+    def probe(batches):
+        for b in batches:
+            sizes = b["html"].map(len).tolist()
+            yield pd.DataFrame({"sizes": [sizes]})
+
+    saved = {k: spark.conf.get(k, None) for k in (cap_key, rows_key)}
+    spark.conf.set(rows_key, RECOMMENDED_CONF[rows_key])
+    spark.conf.set(cap_key, str(cap))
+    try:
+        batches = [r.sizes for r in pages.mapInPandas(probe, "sizes array<long>").collect()]
+    finally:
+        for k, v in saved.items():
+            spark.conf.unset(k) if v is None else spark.conf.set(k, v)
+    assert sorted(n for b in batches for n in b) == sorted(len(h) for _, h in rows)
+    assert len(batches) > 3
+    for b in batches:
+        assert sum(b[:-1]) < cap, b
+    assert any(b[-1] == len(giant) for b in batches)
+
+
+@pytest.mark.parametrize("n_parts", [512, 2048, 4096])
+def test_url_repartition_fills_every_partition(spark, n_parts):
+    """The job's placement, repartition(P, "url"), leaves no partition
+    empty over 200k urls of 5k hosts, also above 1024 partitions."""
+    from pyspark.sql import functions as F  # noqa: N812
+
+    urls = spark.range(200_000).select(
+        F.format_string("https://host%d.example/doc/%d", F.col("id") % 5000, F.col("id")).alias("url")
+    )
+    filled = (
+        urls.repartition(n_parts, "url")
+        .select(F.spark_partition_id().alias("p"))
+        .distinct()
+        .count()
+    )
+    assert filled == n_parts
 
 
 def test_time_travel_reads_past_snapshot(spark, tmp_path, corpus_df):

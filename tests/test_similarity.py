@@ -119,3 +119,13 @@ def test_lsh_topk_shape(spark):
         per_query.setdefault(r.query_id, []).append(r.rank)
     for ranks in per_query.values():
         assert sorted(ranks) == list(range(1, len(ranks) + 1))
+
+
+def test_empty_query_set_returns_no_rows(spark):
+    """No vec_id below query_ids_below: every top-k path returns an empty
+    result instead of raising."""
+    emb = _emb(spark)
+    dim = len(emb.select("embedding").first()["embedding"])
+    assert brute_force_topk(emb, query_ids_below=0).collect() == []
+    assert ivf_topk(emb, dim, query_ids_below=0).collect() == []
+    assert lsh_bucketed_topk(emb, dim, query_ids_below=0).collect() == []

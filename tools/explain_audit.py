@@ -59,7 +59,8 @@ def main() -> None:
     from pdf_document_extractor_spark.operators.similarity import (
         brute_force_topk,
     )
-    from pdf_document_extractor_spark.operators.skew import salted_repartition
+    from pdf_document_extractor_spark.plans.run import extraction_plan
+    from pdf_document_extractor_spark.sources.catalog import SnapshotTable
     from pdf_document_extractor_spark.sources.pages import (
         synthesize_pages_from_documents,
     )
@@ -103,16 +104,22 @@ def main() -> None:
         "(row-group/page skip via min-max stats at scale).",
     )
 
+    extracted_tbl = SnapshotTable(os.path.join(tmp, "wh"), "extracted")
+    extracted_tbl.commit(extract_pages(pages.limit(50)), "prior")
     audit(
-        "salted repartition (the ONE shuffle)",
-        salted_repartition(pages, 8, hot=["synth.example"], salt_buckets=4),
-        ["hashpartitioning(_bucket", "REPARTITION_BY_NUM"],
-        "Placement shuffle keyed on (url-hash bucket, hot-host salt) — "
-        "computed in a Project directly over the scan, no extra stage. "
-        "This is the only wide dependency in the job; its partition count "
-        "and salt width are the two knobs that absorb Zipfian host skew. "
-        "Both helper columns are projected away after the Exchange, so "
-        "placement provably cannot change output content.",
+        "extraction job: url placement (the ONE shuffle)",
+        extraction_plan(spark, pages, extracted_tbl, num_partitions=8),
+        ["LeftAnti", "hashpartitioning(url", "REPARTITION_BY_NUM", "MapInPandas"],
+        "plans/run.py's extraction plan after one committed run: the "
+        "resume anti-join against the committed urls (each doc's "
+        "page_number<=1 row, so the broadcast side needs no distinct and "
+        "no exchange), then the placement shuffle hashpartitioning(url, "
+        "P) straight over the scan (no host pre-pass, no salt columns: "
+        "urls are unique, so their hash already spreads a hot host over "
+        "all P partitions), then the one fused MapInPandas. This is the "
+        "only wide dependency on the extraction path; the committed side "
+        "is read with the schema its manifest entry records, so planning "
+        "runs no inference job.",
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -276,17 +283,10 @@ def main() -> None:
     from pdf_document_extractor_spark.operators.multimodal import (
         render_figures,
     )
-    from pdf_document_extractor_spark.sources.pages import (
-        synthesize_pages_from_documents,
-    )
 
-    figs_plan = capture(
-        render_figures(
-            synthesize_pages_from_documents(
-                spark, "/root/testdata/sf0.001", "pdf_scanned"
-            )
-        )
-    )
+    # over the stored pages table: synthesis itself spreads its one-file
+    # input with a round-robin exchange, which is not the render's
+    figs_plan = capture(render_figures(pages))
     assert "Exchange" not in figs_plan, (
         "figure render must be a single narrow mapInPandas pass"
     )
