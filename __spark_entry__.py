@@ -2635,191 +2635,89 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Registry order IS the verification-coverage policy: the driver
-    oracles only the first 50 entries each round, so entries are sorted
-    LEAST-RECENTLY-VERIFIED FIRST (round-4 verdict task 1; rotated for
-    round 5 per the round-4 verdict) —
-
-    1. the 11 queries whose implementation changed in round 4 but were
-       not re-oracled (the EXTRACTED_SCHEMA widening consumers) — front
-       half so nothing can push them out;
-    2. the 17 other queries with no green round-4 row (untouched code,
-       two-round cadence);
-    3. queries whose implementation changes THIS round (scanned figures,
-       AES key cache, xref-repair bisect, coalesce_content guard);
-    4. fillers to 50 from the round-4-green set;
-    5. tail: round-4-green queries on untouched code (rotate next).
-
-    tests/test_staleness.py enforces this mechanically: any query without
-    a green row in the latest CORRECTNESS artifact must sit inside
-    queries()[:50], and nothing may go two consecutive rounds unchecked.
-
-    The hand order below is then passed through
-    :func:`_rotate_least_verified_first`, which re-sorts it against the
-    COMMITTED CORRECTNESS artifacts at call time. The round-4 verdict's
-    one red test happened because the artifact lands AFTER the round's
-    final commit, so a frozen order was always one round behind; the
-    stable re-sort (never-verified first, then stale-in-latest, then
-    verified — hand order preserved within each class) keeps the window
-    invariants true by construction the moment a new artifact appears.
-    """
-    return _rotate_least_verified_first({
-        # -- 0. loop leader: the registry-first query absorbs the
-        #       session's one-off first-SQL-query warm-up (~2-3 s:
-        #       first file listing, first scan codegen — measured on
-        #       every rotation's leader incl. r05's). sketch has the
-        #       round's largest headroom, so the warm-up hides inside
-        #       its improvement instead of turning a fast query's
-        #       per-query comparison into a phantom regression ---------
-        "sketch_ngram_counts": q_sketch_ngram_counts,
-        # -- 1. changed in r4, not re-oracled (11) ----------------------
-        "extract_dispatch_mixed": q_extract_dispatch_mixed,
-        "extract_failure_taxonomy": q_extract_failure_taxonomy,
-        "extract_heavy_split": q_extract_heavy_split,
-        "extract_resume_antijoin": q_extract_resume_antijoin,
-        "extract_lineage_rollup": q_extract_lineage_rollup,
-        "extract_salted_invariance": q_extract_salted_invariance,
-        "extract_txt_content": q_extract_txt_content,
-        "extract_docx_content": q_extract_docx_content,
-        "extract_doc_content": q_extract_doc_content,
-        "extract_doc_assembly": q_extract_doc_assembly,
-        "extract_rtf_content": q_extract_rtf_content,
-        # -- 1b. operators/similarity.py changed (empty query set) after
-        #        their latest green round -----------------------------
-        "sim_topk_cosine": q_sim_topk_cosine,
-        "sim_embedding_neardup": q_sim_embedding_neardup,
-        "sim_ann_lsh_topk": q_sim_ann_lsh_topk,
-        "sim_ann_ivf_topk": q_sim_ann_ivf_topk,
-        # -- 2. no green r4 row, untouched code (17) --------------------
+    """The query registry, in sorted name order."""
+    return {
+        "decontaminate": q_decontaminate,
+        "dedup_clusters": q_dedup_clusters,
         "dedup_exact": q_dedup_exact,
-        "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
+        "dedup_lines": q_dedup_lines,
         "dedup_minhash_lsh": q_dedup_minhash_lsh,
+        "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
         "dedup_simhash": q_dedup_simhash,
         "dedup_simhash_pairs": q_dedup_simhash_pairs,
-        "dedup_clusters": q_dedup_clusters,
-        # -- 3. implementation changes in round 5 -----------------------
-        "extract_pdf_scanned": q_extract_pdf_scanned,
-        "extract_pdf_encrypted": q_extract_pdf_encrypted,
-        "extract_pdf_aes": q_extract_pdf_aes,
-        "extract_pdf_badxref": q_extract_pdf_badxref,
-        "extract_content_fallback": q_extract_content_fallback,
-        "extract_pdf_foreign": q_extract_pdf_foreign,
-        "mm_figure_render": q_mm_figure_render,
-        # -- 4. fillers to 50 (r4-green) --------------------------------
-        "extract_pdf_content": q_extract_pdf_content,
-        "extract_pdf_multipage": q_extract_pdf_multipage,
-        "extract_pdf_markdown": q_extract_pdf_markdown,
-        "extract_pdf_headers": q_extract_pdf_headers,
-        "extract_pdf_tounicode": q_extract_pdf_tounicode,
-        "extract_pdf_xrefstream": q_extract_pdf_xrefstream,
-        "extract_pdf_incremental": q_extract_pdf_incremental,
-        "extract_pdf_hexstrings": q_extract_pdf_hexstrings,
-        "extract_pdf_encdiff": q_extract_pdf_encdiff,
-        "extract_pdf_ascii85": q_extract_pdf_ascii85,
-        "extract_pdf_formxobject": q_extract_pdf_formxobject,
-        "extract_html_content": q_extract_html_content,
-        "extract_html_charset": q_extract_html_charset,
-        "extract_html_tables": q_extract_html_tables,
-        "extract_html_figures": q_extract_html_figures,
-        "extract_pdf_grid_tables": q_extract_pdf_grid_tables,
-        # -- 5. tail: r4-green, untouched code (rotate next round) ------
-        "extract_element_spans": q_extract_element_spans,
-        "extract_docx_tables": q_extract_docx_tables,
-        "extract_xlsx_cells": q_extract_xlsx_cells,
-        "extract_xls_cells": q_extract_xls_cells,
-        "extract_pptx_slides": q_extract_pptx_slides,
-        "extract_image_metadata": q_extract_image_metadata,
-        "extract_pdf_htmlout": q_extract_pdf_htmlout,
-        "extract_pdf_jsonout": q_extract_pdf_jsonout,
-        "extract_docx_jsonout": q_extract_docx_jsonout,
-        "extract_html_htmlout": q_extract_html_htmlout,
-        "extract_gzip_content": q_extract_gzip_content,
-        "extract_gif_metadata": q_extract_gif_metadata,
-        "extract_odt_content": q_extract_odt_content,
-        "extract_ods_cells": q_extract_ods_cells,
-        "extract_epub_chapters": q_extract_epub_chapters,
-        "sim_ann_recall": q_sim_ann_recall,
-        "sample_stratified": q_sample_stratified,
-        "events_rollup_cascade": q_events_rollup_cascade,
-        "mm_media_metadata": q_mm_media_metadata,
-        "pipeline_training_corpus": q_pipeline_training_corpus,
-        "pipeline_clean_corpus": q_pipeline_clean_corpus,
-        "dedup_lines": q_dedup_lines,
-        "text_redact_pii": q_text_redact_pii,
-        "filter_blocklist": q_filter_blocklist,
-        "url_canonicalize": q_url_canonicalize,
-        "text_chunking": q_text_chunking,
-        "sample_split": q_sample_split,
-        "decontaminate": q_decontaminate,
-        # -- 6. round-6 unchanged implementations (textstats/similarity/
-        #       asof files untouched by the optimization round): behind
-        #       every slot a churned query needs, per the overflow
-        #       window policy ------------------------------------------
-        "text_token_stats": q_text_token_stats,
-        "text_language_id": q_text_language_id,
-        "text_quality_scores": q_text_quality_scores,
-        "text_fingerprint": q_text_fingerprint,
-        "text_repetition": q_text_repetition,
         "events_asof_join": q_events_asof_join,
         "events_range_join": q_events_range_join,
-    })
-
-
-def _rotate_least_verified_first(
-    base: dict[str, Callable[[SparkSession, str], DataFrame]],
-) -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Stable re-sort of the hand-ordered registry against the committed
-    CORRECTNESS artifacts: rank 0 = never green in the last two rounds
-    (new or aging queries), rank 1 = green before but not in the latest
-    round, rank 2 = green in the latest round. Hand order is preserved
-    within each rank (it encodes churn priorities), so the driver's
-    50-query window always starts with exactly the queries that most
-    need re-oracling — even for an artifact committed after this file's
-    last edit. Any read/parse problem falls back to the hand order: the
-    rotation must never break the driver contract."""
-    try:
-        import json
-        import pathlib
-        import re
-
-        here = pathlib.Path(__file__).resolve().parent
-        rounds = []
-        for p in here.glob("CORRECTNESS_r*.json"):
-            m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", p.name)
-            if not m:
-                continue
-            data = json.loads(p.read_text())
-            if isinstance(data, dict) and data:
-                rounds.append((int(m.group(1)), data))
-        if not rounds:
-            return base
-        rounds.sort()
-
-        def green(row) -> bool:
-            return isinstance(row, dict) and (
-                row.get("hash_match") is True
-                or (
-                    row.get("err") == "no_oracle"
-                    and (row.get("spark_rows") or 0) > 0
-                )
-            )
-
-        latest = {q for q, r in rounds[-1][1].items() if green(r)}
-        prev = (
-            {q for q, r in rounds[-2][1].items() if green(r)}
-            if len(rounds) > 1
-            else set()
-        )
-
-        def rank(q: str) -> int:
-            if q in latest:
-                return 2
-            return 1 if q in prev else 0
-
-        names = sorted(base, key=rank)  # stable within ranks
-        return {q: base[q] for q in names}
-    except Exception:  # noqa: BLE001 — driver contract over rotation
-        return base
+        "events_rollup_cascade": q_events_rollup_cascade,
+        "extract_content_fallback": q_extract_content_fallback,
+        "extract_dispatch_mixed": q_extract_dispatch_mixed,
+        "extract_doc_assembly": q_extract_doc_assembly,
+        "extract_doc_content": q_extract_doc_content,
+        "extract_docx_content": q_extract_docx_content,
+        "extract_docx_jsonout": q_extract_docx_jsonout,
+        "extract_docx_tables": q_extract_docx_tables,
+        "extract_element_spans": q_extract_element_spans,
+        "extract_epub_chapters": q_extract_epub_chapters,
+        "extract_failure_taxonomy": q_extract_failure_taxonomy,
+        "extract_gif_metadata": q_extract_gif_metadata,
+        "extract_gzip_content": q_extract_gzip_content,
+        "extract_heavy_split": q_extract_heavy_split,
+        "extract_html_charset": q_extract_html_charset,
+        "extract_html_content": q_extract_html_content,
+        "extract_html_figures": q_extract_html_figures,
+        "extract_html_htmlout": q_extract_html_htmlout,
+        "extract_html_tables": q_extract_html_tables,
+        "extract_image_metadata": q_extract_image_metadata,
+        "extract_lineage_rollup": q_extract_lineage_rollup,
+        "extract_ods_cells": q_extract_ods_cells,
+        "extract_odt_content": q_extract_odt_content,
+        "extract_pdf_aes": q_extract_pdf_aes,
+        "extract_pdf_ascii85": q_extract_pdf_ascii85,
+        "extract_pdf_badxref": q_extract_pdf_badxref,
+        "extract_pdf_content": q_extract_pdf_content,
+        "extract_pdf_encdiff": q_extract_pdf_encdiff,
+        "extract_pdf_encrypted": q_extract_pdf_encrypted,
+        "extract_pdf_foreign": q_extract_pdf_foreign,
+        "extract_pdf_formxobject": q_extract_pdf_formxobject,
+        "extract_pdf_grid_tables": q_extract_pdf_grid_tables,
+        "extract_pdf_headers": q_extract_pdf_headers,
+        "extract_pdf_hexstrings": q_extract_pdf_hexstrings,
+        "extract_pdf_htmlout": q_extract_pdf_htmlout,
+        "extract_pdf_incremental": q_extract_pdf_incremental,
+        "extract_pdf_jsonout": q_extract_pdf_jsonout,
+        "extract_pdf_markdown": q_extract_pdf_markdown,
+        "extract_pdf_multipage": q_extract_pdf_multipage,
+        "extract_pdf_scanned": q_extract_pdf_scanned,
+        "extract_pdf_tounicode": q_extract_pdf_tounicode,
+        "extract_pdf_xrefstream": q_extract_pdf_xrefstream,
+        "extract_pptx_slides": q_extract_pptx_slides,
+        "extract_resume_antijoin": q_extract_resume_antijoin,
+        "extract_rtf_content": q_extract_rtf_content,
+        "extract_salted_invariance": q_extract_salted_invariance,
+        "extract_txt_content": q_extract_txt_content,
+        "extract_xls_cells": q_extract_xls_cells,
+        "extract_xlsx_cells": q_extract_xlsx_cells,
+        "filter_blocklist": q_filter_blocklist,
+        "mm_figure_render": q_mm_figure_render,
+        "mm_media_metadata": q_mm_media_metadata,
+        "pipeline_clean_corpus": q_pipeline_clean_corpus,
+        "pipeline_training_corpus": q_pipeline_training_corpus,
+        "sample_split": q_sample_split,
+        "sample_stratified": q_sample_stratified,
+        "sim_ann_ivf_topk": q_sim_ann_ivf_topk,
+        "sim_ann_lsh_topk": q_sim_ann_lsh_topk,
+        "sim_ann_recall": q_sim_ann_recall,
+        "sim_embedding_neardup": q_sim_embedding_neardup,
+        "sim_topk_cosine": q_sim_topk_cosine,
+        "sketch_ngram_counts": q_sketch_ngram_counts,
+        "text_chunking": q_text_chunking,
+        "text_fingerprint": q_text_fingerprint,
+        "text_language_id": q_text_language_id,
+        "text_quality_scores": q_text_quality_scores,
+        "text_redact_pii": q_text_redact_pii,
+        "text_repetition": q_text_repetition,
+        "text_token_stats": q_text_token_stats,
+        "url_canonicalize": q_url_canonicalize,
+    }
 
 
 def oracle_sql() -> dict[str, str]:

@@ -12,11 +12,12 @@ Scale design notes (100 TB target):
 - Input projection is ``url, html`` only — Catalyst prunes the remaining
   columns at the Parquet/Iceberg scan (verify via .explain ReadSchema).
 - One fused stage: no shuffle is introduced by extraction itself; the only
-  shuffle in the full job is the explicit salted repartition (operators/
-  skew.py), which exists for placement, not semantics.
-- Arrow batch size must be tuned down for multi-MB binary cells
-  (spark.sql.execution.arrow.maxRecordsPerBatch; see plans/run.py) so a
-  batch of heavy documents cannot blow executor memory.
+  shuffle in the full job is ``repartition(P, "url")`` (plans/run.py), which
+  exists for placement, not semantics.
+- Input Arrow batches are bounded in bytes for multi-MB binary cells
+  (spark.sql.execution.arrow.maxBytesPerBatch in plans/run.py's
+  RECOMMENDED_CONF) so a batch of heavy documents cannot blow executor
+  memory.
 - Per-partition lineage is captured in-band: every output row carries
   ``partition_id`` (TaskContext) and ``byte_count``; lineage aggregates them
   without a second pass over the bytes (operators/lineage.py).
@@ -243,8 +244,8 @@ def extract_rows_py(
 
 
 # Output flush thresholds: bound Python-side memory regardless of how many
-# multi-MB documents the JVM packed into one input Arrow batch (the heavy
-# pass runs with these, not with a session-wide batch-size knob).
+# multi-MB documents the JVM packed into one input Arrow batch (the input
+# side is bounded by spark.sql.execution.arrow.maxBytesPerBatch).
 FLUSH_ROWS = 4096
 FLUSH_BYTES = 64 << 20
 

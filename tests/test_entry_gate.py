@@ -42,13 +42,22 @@ def test_query_matches_oracle(spark, duck, name):
     srows = [tuple(r) for r in sdf.collect()]
     oracle = mod.oracle_sql().get(name)
     if oracle is None:
-        assert len(srows) >= 0  # rows-only contract: runs, stable schema
+        # rows-only contract for the approximate ANN queries
+        assert srows
+        assert sdf.columns == ["query_id", "rank", "neighbor_id"]
+        keys = [(r[0], r[1]) for r in srows]
+        assert len(set(keys)) == len(keys)
         return
     ddf = duck.sql(oracle)
     drows = ddf.fetchall()
     assert sorted(sdf.columns) == sorted(list(ddf.columns))
     assert len(srows) == len(drows)
     assert value_hash(srows, sdf.columns) == value_hash(drows, list(ddf.columns))
+
+
+def test_registry_is_sorted():
+    names = list(_entry_module().queries())
+    assert names == sorted(names)
 
 
 def test_entry_smoke(spark):

@@ -1,9 +1,11 @@
 """Local stand-in for the driver's correctness gate: runs every
 ``__spark_entry__.queries()`` entry at sf0.01 and compares with its DuckDB
 oracle — row count + column names + order-insensitive value hash (columns
-sorted by name, rows sorted, values stringified).
+sorted by name, rows sorted, values stringified). A query without an oracle
+(the two approximate ANN queries) must return rows: 0 rows is a failure.
+Exits 1 on any failure.
 
-Usage: python tools/check_entry.py [sf_dir]
+Usage: python tools/check_entry.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
@@ -79,7 +81,9 @@ def main() -> None:
         srows = sdf.collect()
         scols = sdf.columns
         if name not in oracles:
-            print(f"{name:34s} rows-only: {len(srows)}")
+            failures += not srows
+            status = "OK " if srows else "FAIL"
+            print(f"{name:34s} {status} rows-only: {len(srows)}")
             continue
         ddf = con.sql(oracles[name])
         dcols = list(ddf.columns)
