@@ -15,6 +15,9 @@ Before the timed query loop, every parquet table in the sf dir is read once
 into a noop sink (untimed), so the session's one-off first-scan cost lands
 on no query's time.
 
+A plain run writes no file. ``BENCH_SELF_SECTION=<key>`` also records the
+result under that key of the tracked ``BENCH_SELF.json``.
+
 Flags (for tools/bench_scaling.py):
   --throughput-only   run only the throughput job, skip per-query timings
 """
@@ -268,36 +271,26 @@ def main() -> None:
         "throughput_floor": floor,
         "throughput_regression": regression,
     }
-    # the same object, merged into the BENCH_SELF.json sidecar
-    try:
+    # BENCH_SELF_SECTION=<key> embeds this run under a named key of the
+    # tracked BENCH_SELF.json sidecar (e.g. the 1M-doc "sf1" datapoint);
+    # without it the sidecar is left alone, so a plain run on another
+    # host cannot overwrite the recorded figures
+    section = os.environ.get("BENCH_SELF_SECTION")
+    if section:
         self_path = os.path.join(
             os.path.dirname(os.path.abspath(__file__)), "BENCH_SELF.json"
         )
-        if os.environ.get("BENCH_SELF_SKIP"):
-            self_path = os.devnull  # probe runs (bench_scaling) opt out
-        # BENCH_SELF_SECTION=<key> embeds this run under a named key of
-        # the existing sidecar instead of replacing it — used for the
-        # at-scale datapoints (e.g. the 1M-doc "sf1" run, round-4
-        # verdict task 7) so one file carries the whole round's evidence
-        section = os.environ.get("BENCH_SELF_SECTION")
         try:
             with open(self_path, encoding="utf-8") as fh:
                 full = json.load(fh)
-            if not isinstance(full, dict):
-                full = {}
         except (OSError, ValueError):
             full = {}
-        if section:
-            full[section] = out
-        else:
-            # merge at top level so named sections (sf1_1m_docs, ...)
-            # survive the driver's plain per-round run
-            full.update(out)
+        if not isinstance(full, dict):
+            full = {}
+        full[section] = out
         with open(self_path, "w", encoding="utf-8") as fh:
             json.dump(full, fh, indent=1, sort_keys=True)
             fh.write("\n")
-    except OSError:
-        pass
     print(json.dumps(out))
     if regression:
         print(

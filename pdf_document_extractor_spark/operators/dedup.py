@@ -7,11 +7,13 @@ Scale design (the whole point of each variant):
 - ngram_jaccard_pairs: exact all-pairs similarity via a shingle-inverted
   index (explode -> self-join on shingle -> per-pair intersection counts).
   Quadratic in the worst case — correct baseline, used as the verifier.
-- minhash_lsh_pairs: the scale path. K=32 minhash signatures, banded 16x2;
-  candidate pairs only where a band bucket collides, then EXACT Jaccard
-  verification of candidates. Output = verified pairs, so results equal the
-  brute-force oracle while touching ~O(n) + collisions instead of O(n^2)
-  (miss probability at s>=0.8 is (1-s^2)^16 <= 8.3e-8).
+- minhash_lsh_pairs: the scale path. One per-doc state (doc_id, shingle
+  set, 16 band keys of K=32 minhash values banded 16x2) is materialized
+  once; candidate pairs only where a band bucket collides, then EXACT
+  Jaccard verification of candidates by intersecting the two docs' shingle
+  arrays. Output = verified pairs, so results equal the brute-force oracle
+  while touching ~O(n) + collisions instead of O(n^2) (miss probability at
+  s>=0.8 is (1-s^2)^16 <= 8.3e-8).
 - simhash64: 60-bit sign-sum fingerprint; near-dup candidates = small
   Hamming distance (bucketable by 4x15-bit chunks at scale).
 
@@ -121,25 +123,20 @@ def shingle_structs(docs: "DataFrame", n: int = 3) -> "DataFrame":
     )
 
 
-def _pair_jaccard(
-    sh: "DataFrame", candidates: "DataFrame" = None
-) -> "DataFrame":
-    """Exact per-pair intersection/union counts from a (doc_id, shingle,
-    sh_size) frame (see :func:`shingle_structs`); optionally restricted
-    to candidate (id_a, id_b) pairs.
+def _pair_jaccard(sh: "DataFrame") -> "DataFrame":
+    """Exact all-pairs intersection/union counts from a (doc_id, shingle,
+    sh_size) frame (see :func:`shingle_structs`).
 
     Set sizes ride the exploded rows and the pair groupBy key instead of
     being re-derived by a groupBy(doc_id) + two joins — the old shape
     paid three extra exchanges to recompute a value that is a narrow
     per-row expression of the source (guide §2.4)."""
-    src = sh
-    if candidates is None:
-        # pre-shuffle the shingle stream by the join key ONCE and rename
-        # per side AFTER the exchange: both self-join branches then hang
-        # off the same exchange (runtime stage reuse), so the shingle
-        # construction + shuffle write happen once instead of per side.
-        # This is the exchange the join required anyway — not an extra.
-        src = sh.repartition(F.col("shingle"))
+    # pre-shuffle the shingle stream by the join key ONCE and rename per
+    # side AFTER the exchange: both self-join branches then hang off the
+    # same exchange (runtime stage reuse), so the shingle construction +
+    # shuffle write happen once instead of per side. This is the exchange
+    # the join required anyway — not an extra.
+    src = sh.repartition(F.col("shingle"))
     a = src.select(
         F.col("doc_id").alias("id_a"),
         "shingle",
@@ -150,36 +147,19 @@ def _pair_jaccard(
         "shingle",
         F.col("sh_size").alias("size_b"),
     )
-    if candidates is not None:
-        # Expand ONLY candidate pairs: (id_a,id_b) x a's shingles, matched
-        # against b's shingles. Cost is O(|candidates| * shingles/doc), not
-        # the O(sum_s df(s)^2) full inverted-index self-join — this is what
-        # makes LSH a win over the brute path at scale.
-        # Enforce the pair invariant here rather than trusting callers:
-        # self-pairs would score jaccard=1, duplicates would double counts.
-        candidates = candidates.filter(
-            F.col("id_a") < F.col("id_b")
-        ).distinct()
-        inter = (
-            candidates.join(a, "id_a")
-            .join(b, ["id_b", "shingle"])
-            .groupBy("id_a", "id_b", "size_a", "size_b")
-            .agg(F.count("*").alias("inter"))
-        )
-    else:
-        # shuffled-hash over sort-merge for the inverted-index self-join
-        # (guide §3.1): both sides are the same size, neither sorts, and
-        # the hash build avoids two full sorts of the shingle stream
-        # (measured ~1.5x on the sf0.1 corpus). This exact all-pairs
-        # branch is the documented VERIFIER, not the 100-TB scale path
-        # (minhash_lsh_pairs is); a skewed-hot-shingle build partition
-        # would need the max_df guard long before it OOMs a hash table.
-        inter = (
-            a.join(b.hint("shuffle_hash"), "shingle")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .groupBy("id_a", "id_b", "size_a", "size_b")
-            .agg(F.count("*").alias("inter"))
-        )
+    # shuffled-hash over sort-merge for the inverted-index self-join
+    # (guide §3.1): both sides are the same size, neither sorts, and the
+    # hash build avoids two full sorts of the shingle stream (measured
+    # ~1.5x on the sf0.1 corpus). This exact all-pairs path is the
+    # documented VERIFIER, not the 100-TB scale path (minhash_lsh_pairs
+    # is); a skewed-hot-shingle build partition would need the max_df
+    # guard long before it OOMs a hash table.
+    inter = (
+        a.join(b.hint("shuffle_hash"), "shingle")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .groupBy("id_a", "id_b", "size_a", "size_b")
+        .agg(F.count("*").alias("inter"))
+    )
     return inter.select(
         F.col("id_a").cast("long"),
         F.col("id_b").cast("long"),
@@ -227,21 +207,47 @@ def ngram_jaccard_pairs(
     )
 
 
-def minhash_signatures(sh: "DataFrame") -> "DataFrame":
-    """(doc_id, mh_0..mh_{K-1}): min over shingles of (a*h64+b) mod P.
-    One shuffle (groupBy doc_id); all K mins computed map-side first.
-    Reference implementation over exploded (doc_id, shingle) rows — the
-    LSH hot path fuses signatures straight into band keys instead (see
-    :func:`minhash_lsh_pairs`)."""
-    # reduce the 60-bit hash mod P first so a*h stays < 2^62 (ANSI-safe)
-    hcol = h64(F.col("shingle")) % F.lit(_MH_PRIME)
-    aggs = [
-        F.min((F.lit(MH_A[j]) * hcol + F.lit(MH_B[j])) % F.lit(_MH_PRIME)).alias(
-            f"mh_{j}"
+def _minhash_state(docs: "DataFrame", n: int = 3) -> "DataFrame":
+    """(doc_id, sh, keys), materialized: each doc's distinct shingle set
+    (:func:`_shingle_base`) and its LSH_BANDS band keys. Band b's key is
+    "m0,m1", the mins over the set of (a*h+b) mod P for its LSH_ROWS hash
+    functions. h64 is reduced mod P first so a*h stays < 2^62 (ANSI-safe),
+    and the hash array is bound once via lambda binding so the md5 work is
+    not re-evaluated per hash function.
+
+    The checkpoint is eager, so one job builds the state before any
+    branch of the pair plan reads it."""
+    base, sh = _shingle_base(docs, n)
+    prime = F.lit(_MH_PRIME)
+
+    def _mh_min(hs, j: int):
+        aj, bj = F.lit(MH_A[j]), F.lit(MH_B[j])
+        return F.array_min(
+            F.transform(hs, lambda h: (aj * h + bj) % prime)
+        ).cast("string")
+
+    def _keys(hs):
+        return F.array(
+            *[
+                F.concat_ws(
+                    ",",
+                    *[_mh_min(hs, band * LSH_ROWS + r) for r in range(LSH_ROWS)],
+                )
+                for band in range(LSH_BANDS)
+            ]
         )
-        for j in range(MINHASH_K)
-    ]
-    return sh.groupBy("doc_id").agg(*aggs)
+
+    keys = F.element_at(
+        F.transform(
+            F.array(F.transform(F.col("sh"), lambda s: h64(s) % prime)), _keys
+        ),
+        1,
+    )
+    return (
+        base.select("doc_id", sh.alias("sh"))
+        .select("doc_id", "sh", keys.alias("keys"))
+        .localCheckpoint(eager=True)
+    )
 
 
 def minhash_lsh_pairs(
@@ -250,57 +256,36 @@ def minhash_lsh_pairs(
     """MinHash+LSH candidate generation + exact verification (see module
     docstring). Output schema/semantics identical to ngram_jaccard_pairs.
 
-    Band keys are built in ONE narrow expression per doc: shingle set ->
-    h64 hash array (bound once via lambda binding, so the md5 work is
-    not re-evaluated per band) -> per-band array_min of the K affine
-    transforms -> exploded (band, key) rows. Zero shuffles before the
-    band self-join; the old shape exploded shingles and paid a
-    groupBy(doc_id) exchange just to reassemble per-doc state."""
-    prime = F.lit(_MH_PRIME)
-    base, sh = _shingle_base(docs, n)
-
-    def _mh_min(hsa, j: int):
-        aj, bj = F.lit(MH_A[j]), F.lit(MH_B[j])
-        return F.array_min(
-            F.transform(hsa, lambda h: (aj * h + bj) % prime)
-        ).cast("string")
-
-    def _band_structs(hsa):
-        return F.array(
-            *[
-                F.struct(
-                    F.lit(band).alias("band"),
-                    F.concat_ws(
-                        ",",
-                        *[
-                            _mh_min(hsa, band * LSH_ROWS + r)
-                            for r in range(LSH_ROWS)
-                        ],
-                    ).alias("key"),
-                )
-                for band in range(LSH_BANDS)
-            ]
-        )
-
-    bands_expr = F.element_at(
-        F.transform(
-            F.array(F.transform(sh, lambda s: h64(s) % prime)),
-            _band_structs,
-        ),
-        1,
-    )
-    bands = base.select(
-        "doc_id", F.explode(bands_expr).alias("bk")
-    ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    left = bands.select(F.col("doc_id").alias("id_a"), "band", "key")
-    right = bands.select(F.col("doc_id").alias("id_b"), "band", "key")
+    The band self-join and both verification sides read one materialized
+    per-doc state (:func:`_minhash_state`), so the shingle and hash work
+    runs once per doc instead of once per branch."""
+    state = _minhash_state(docs, n)
+    bands = state.select("doc_id", F.posexplode("keys").alias("band", "key"))
     candidates = (
-        left.join(right, ["band", "key"])
+        bands.select(F.col("doc_id").alias("id_a"), "band", "key")
+        .join(
+            bands.select(F.col("doc_id").alias("id_b"), "band", "key"),
+            ["band", "key"],
+        )
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .distinct()
     )
-    verified = _pair_jaccard(shingle_structs(docs, n), candidates)
+    sets_a = state.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
+    sets_b = state.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
+    # exact Jaccard on the shingle strings of each candidate pair: both
+    # sets are distinct, so the intersection's size is the shared count
+    verified = (
+        candidates.join(sets_a, "id_a")
+        .join(sets_b, "id_b")
+        .select(
+            F.col("id_a").cast("long"),
+            F.col("id_b").cast("long"),
+            F.size(F.array_intersect("sh_a", "sh_b")).cast("long").alias("inter"),
+            F.size("sh_a").cast("long").alias("size_a"),
+            F.size("sh_b").cast("long").alias("size_b"),
+        )
+    )
     return verified.filter(
         100 * F.col("inter")
         >= tau_pct * (F.col("size_a") + F.col("size_b") - F.col("inter"))

@@ -10,8 +10,8 @@ per-upload status), turned into durable, exactly-once keyed state:
 Each trigger emits the UPDATED totals for hosts seen in that batch; state
 lives in the checkpointed state store, so totals keep accumulating across
 restarts (tested). At scale this is the politeness/skew dashboard: hot
-hosts surface as outliers in docs_total between micro-batches, feeding the
-salting pre-pass without a separate batch job.
+hosts surface as outliers in docs_total between micro-batches, without a
+separate batch job.
 """
 
 from __future__ import annotations

@@ -1,0 +1,135 @@
+"""MinHash+LSH: the per-doc state, its exact verification and its cost.
+
+The entry gate checks ``dedup_minhash_lsh`` against the DuckDB oracle on
+one corpus. These tests pin the pieces under it: the band keys against a
+pure-Python reference of the MinHash formula (whitespace and short-doc
+edge cases the corpus lacks), LSH output against the exact all-pairs
+path, and that the shingle sets are built once per call.
+"""
+
+from __future__ import annotations
+
+import hashlib
+import random
+import re
+
+from pdf_document_extractor_spark.operators.dedup import (
+    LSH_BANDS,
+    LSH_ROWS,
+    MH_A,
+    MH_B,
+    MINHASH_K,
+    _minhash_state,
+    minhash_lsh_pairs,
+    ngram_jaccard_pairs,
+)
+
+P = 2_147_483_647
+
+EDGE_TEXTS = [
+    "the quick brown fox jumps over the lazy dog",
+    "tab\tseparated\twords here\tand there",
+    "runs   of    spaces   between    words",
+    "  leading and trailing spaces  ",
+    "\tleading tab then words",
+    "trailing tab after words\t",
+    "two words",
+    "one",
+    "",
+    "a b c a b c a b c a b c",  # repeated shingles
+    "x y z x y z",
+]
+
+
+def _shingle_set(text: str, n: int = 3) -> set[str]:
+    """Spark's tokens(): trim spaces (only 0x20), then split on Java's
+    ASCII \\s runs, keeping empty leading/trailing tokens."""
+    toks = re.split(r"[ \t\n\x0b\f\r]+", text.strip(" "))
+    return {" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)}
+
+
+def _ref_keys(shingles: set[str]) -> list[str]:
+    hs = [int(hashlib.md5(s.encode()).hexdigest()[:15], 16) % P for s in shingles]
+    mins = [min((MH_A[j] * h + MH_B[j]) % P for h in hs) for j in range(MINHASH_K)]
+    return [
+        ",".join(str(mins[b * LSH_ROWS + r]) for r in range(LSH_ROWS))
+        for b in range(LSH_BANDS)
+    ]
+
+
+def _docs(spark, texts):
+    return spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+
+
+def test_state_band_keys_match_python_reference(spark):
+    state = {
+        r.doc_id: (set(r.sh), list(r.keys))
+        for r in _minhash_state(_docs(spark, EDGE_TEXTS)).collect()
+    }
+    want = {
+        i: (sh, _ref_keys(sh))
+        for i, sh in ((i, _shingle_set(t)) for i, t in enumerate(EDGE_TEXTS))
+        if sh
+    }
+    assert state == want
+    # the edge cases are really there: short docs drop, a tab-led doc
+    # carries an empty first token, repeated shingles collapse
+    assert {6, 7, 8} & set(state) == set()
+    assert " leading tab" in state[4][0]
+    assert len(state[9][0]) == 3
+
+
+def _near_copy_corpus(seed: int = 11) -> list[str]:
+    rng = random.Random(seed)
+    vocab = [f"w{i}" for i in range(400)]
+    texts = []
+    for _ in range(60):
+        base = [rng.choice(vocab) for _ in range(rng.randint(30, 60))]
+        texts.append(" ".join(base))
+        for _ in range(rng.randint(0, 3)):
+            copy = list(base)
+            for _ in range(rng.randint(0, 3)):
+                copy[rng.randrange(len(copy))] = rng.choice(vocab)
+            texts.append(" ".join(copy))
+    return texts + EDGE_TEXTS
+
+
+def test_lsh_equals_exact_jaccard_on_near_copies(spark):
+    docs = _docs(spark, _near_copy_corpus())
+    for tau in (80, 90):
+        lsh = sorted(tuple(r) for r in minhash_lsh_pairs(docs, tau_pct=tau).collect())
+        exact = sorted(tuple(r) for r in ngram_jaccard_pairs(docs, tau_pct=tau).collect())
+        assert lsh == exact
+        # near copies, not only identical ones
+        assert any(i < sa + sb - i for _, _, i, sa, sb in lsh), lsh
+
+
+def _executions(spark) -> list[int]:
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    conv = spark._jvm.scala.jdk.javaapi.CollectionConverters
+    return [e.executionId() for e in conv.asJava(store.executionsList())]
+
+
+def _plan_nodes(spark, ids) -> list[tuple[int, str]]:
+    """(execution id, node description) of every plan node of the given
+    SQL executions, read from the status store."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    conv = spark._jvm.scala.jdk.javaapi.CollectionConverters
+    return [
+        (i, node.desc())
+        for i in ids
+        for node in conv.asJava(store.planGraph(i).allNodes())
+    ]
+
+
+def test_lsh_builds_shingle_sets_once(spark):
+    docs = _docs(spark, _near_copy_corpus())
+    before = set(_executions(spark))
+    assert minhash_lsh_pairs(docs).count() > 0
+    nodes = _plan_nodes(spark, sorted(set(_executions(spark)) - before))
+    building = [i for i, desc in nodes if "sequence(" in desc]
+    assert len(building) == 1, building
+    # the later executions read the materialized state: no re-hashing
+    hashing = {i for i, desc in nodes if "md5(" in desc}
+    assert hashing == set(building)

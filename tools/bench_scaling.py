@@ -47,10 +47,6 @@ def run_once(cpus: int, replicas: int, sf_dir: str) -> dict:
     env["SPARK_GRAFT_CPUS"] = str(cpus)
     env["BENCH_REPLICAS"] = str(replicas)
     env["SPARK_GRAFT_SF_DIR"] = sf_dir
-    # scaling probes must not clobber the repo's headline sidecar (a
-    # pre-round-5 probe run silently wiped the sf1 section of
-    # BENCH_SELF.json this way)
-    env["BENCH_SELF_SKIP"] = "1"
     out = subprocess.run(
         [
             "taskset",

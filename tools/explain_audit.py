@@ -141,31 +141,52 @@ def main() -> None:
         "O(queries * k) rows, not the scored corpus.",
     )
 
-    # -- LSH verification joins candidates, not the full inverted index ----
+    # -- LSH joins read one materialized state, keyed on band and doc ids --
     from pdf_document_extractor_spark.operators.dedup import minhash_lsh_pairs
 
     docs_small = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet"
     ).select("doc_id", "text")
     lsh_plan = capture(minhash_lsh_pairs(docs_small))
-    assert "[id_b" in lsh_plan and "shingle" in lsh_plan, "candidate join shape"
-    print(f"{'LSH verify joins candidate pairs only':45s} OK")
+    join_keys = [
+        ln for ln in lsh_plan.splitlines()
+        if ln.startswith(("Left keys", "Right keys"))
+    ]
+    assert join_keys, "LSH plan has no keyed join"
+    assert not any("shingle" in ln for ln in join_keys), "join keyed on a shingle"
+    assert any("[id_a#" in ln for ln in join_keys), "no verify join on id_a"
+    assert any("[id_b#" in ln for ln in join_keys), "no verify join on id_b"
+    assert "Scan ExistingRDD" in lsh_plan and "Scan parquet" not in lsh_plan, (
+        "every LSH branch must read the materialized per-doc state"
+    )
+    assert "md5(" not in lsh_plan, "verification plan re-hashes shingles"
+    title = "LSH joins read one per-doc state"
+    print(f"{title:45s} OK")
     SECTIONS.append(
         (
-            "LSH verify joins candidate pairs only",
+            title,
             "\n".join(
                 ln
                 for ln in lsh_plan.splitlines()
-                if "keys" in ln or "Join" in ln
+                if "keys" in ln or "Join" in ln or "Scan" in ln
             ),
-            ["join keys include (id_b, shingle)"],
-            "The exact-Jaccard verification of LSH candidates expands "
-            "candidate pairs against per-doc shingle sets (join keyed on "
-            "(id_b, shingle)) instead of self-joining the full shingle "
-            "inverted index and filtering afterwards. The latter is "
-            "O(sum_s df(s)^2) — it silently re-introduces the quadratic "
-            "cost LSH exists to avoid (this regressed once; the audit "
-            "pins the join shape). Only join-key lines shown.",
+            [
+                "no join keyed on a shingle",
+                "verify joins keyed on id_a / id_b",
+                "every scan is the materialized state (Scan ExistingRDD)",
+                "no md5(",
+            ],
+            "minhash_lsh_pairs materializes one per-doc state (doc_id, "
+            "shingle set, band keys) with an eager localCheckpoint; the "
+            "plan that follows reads only that state. The band self-join "
+            "is keyed on (band, key); the exact-Jaccard verification joins "
+            "candidate pairs to the state on id_a and on id_b and "
+            "intersects the two shingle arrays. No join is keyed on a "
+            "shingle, so neither the full inverted-index self-join (O(sum_s "
+            "df(s)^2), the quadratic cost LSH exists to avoid) nor an "
+            "exploded per-pair shingle join can come back, and no md5( "
+            "means the shingles are not hashed again after the state is "
+            "built. Only join, key and scan lines shown.",
         )
     )
 
