@@ -7,9 +7,10 @@ ONE JSON line with the full per-query map::
 
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-plus a throughput headline: the full extraction job plan (synthesize pages
--> salted repartition -> heavy split -> fused mapInPandas extract) over a
-replicated corpus (documents x BENCH_REPLICAS), reported as docs/sec.
+plus a throughput headline: the extraction job's own plan
+(plans.run.extraction_plan: url-hash repartition -> fused mapInPandas
+extract, into a noop sink) over synthesized pages of a replicated corpus
+(documents x BENCH_REPLICAS), reported as docs/sec.
 
 Before the timed query loop, every parquet table in the sf dir is read once
 into a noop sink (untimed), so the session's one-off first-scan cost lands
@@ -155,19 +156,18 @@ def warm_python_workers(spark, cpus: int) -> None:
 
 
 def throughput_job(spark, sf_dir: str, cpus: int, replicas: int) -> dict:
-    """The north-rule job shape: synthesize -> salt -> split -> extract."""
-    from pdf_document_extractor_spark.operators.extract import extract_pages
-    from pdf_document_extractor_spark.operators.skew import (
-        host_stats,
-        salted_repartition,
-        split_heavy,
-    )
+    """The job's own extraction plan (plans.run.extraction_plan) over an
+    empty warehouse: url-hash repartition -> fused extract, noop sink."""
+    import tempfile
+
+    from pdf_document_extractor_spark.plans.run import extraction_plan
+    from pdf_document_extractor_spark.sources.catalog import SnapshotTable
     from pdf_document_extractor_spark.sources.pages import synthesize_pages
 
     # documents.parquet is ONE file; without a repartition the exploded
-    # corpus stays a single partition and synthesis + the url pre-pass +
-    # the shuffle-map side all run on one core (a real pages table has
-    # many files/buckets — this models that, it doesn't cheat the metric)
+    # corpus stays a single partition and synthesis runs on one core (a
+    # real pages table has many files/buckets — this models that, it
+    # doesn't cheat the metric)
     docs = replicated_docs(spark, sf_dir, replicas).repartition(cpus * 4)
     n_docs = docs.count()
     pages = synthesize_pages(docs, mode="mixed")
@@ -183,15 +183,13 @@ def throughput_job(spark, sf_dir: str, cpus: int, replicas: int) -> dict:
     # corpus stays persisted and workers warm — the north-rule metric is
     # steady-state docs/sec on long-lived executors.
     walls: list[float] = []
-    for _ in range(3):
-        t0 = time.perf_counter()
-        # sampled hot detection (the at-scale design; placement-only)
-        hot, _ = host_stats(pages, hot_fraction=0.5, sample_fraction=0.02)
-        placed = salted_repartition(pages, cpus * 2, hot=hot, salt_buckets=cpus)
-        light, heavy = split_heavy(placed, 1 << 20)
-        out = extract_pages(light).unionByName(extract_pages(heavy))
-        _noop_write(out)
-        walls.append(time.perf_counter() - t0)
+    with tempfile.TemporaryDirectory(prefix="bench-wh-") as wh:
+        # nothing committed: the plan has no resume anti-join
+        empty = SnapshotTable(wh, "extracted")
+        for _ in range(3):
+            t0 = time.perf_counter()
+            _noop_write(extraction_plan(spark, pages, empty, cpus * 2))
+            walls.append(time.perf_counter() - t0)
     wall = min(walls)
     pages.unpersist()
     return {

@@ -17,8 +17,10 @@ Scale design (the whole point of each variant):
 - simhash64: 60-bit sign-sum fingerprint; near-dup candidates = small
   Hamming distance (bucketable by 4x15-bit chunks at scale).
 
-All thresholds compare with integer arithmetic (100*inter >= tau*union) —
-float-free, byte-stable against the DuckDB oracles.
+All Jaccard thresholds compare with integer arithmetic: 100*inter >=
+tau*union, with union = a+b-inter, written (100+tau)*inter >= tau*(a+b) so
+inter is evaluated once per pair — float-free, byte-stable against the
+DuckDB oracles.
 """
 
 from __future__ import annotations
@@ -169,12 +171,22 @@ def _pair_jaccard(sh: "DataFrame") -> "DataFrame":
     )
 
 
+def _jaccard_at_least(tau_pct: int):
+    """inter/(size_a+size_b-inter) >= tau_pct/100 over a pair frame, in
+    integers: 100*inter >= tau*(a+b-inter) is (100+tau)*inter >= tau*(a+b),
+    which names inter once, so the optimizer substitutes its expression
+    (an array_intersect on the LSH path) once."""
+    return (100 + tau_pct) * F.col("inter") >= tau_pct * (
+        F.col("size_a") + F.col("size_b")
+    )
+
+
 def ngram_jaccard_pairs(
     docs: "DataFrame", tau_pct: int = 80, n: int = 3,
     max_df: int | None = None,
 ) -> "DataFrame":
     """Exact n-gram Jaccard near-dup pairs: jaccard >= tau_pct/100, compared
-    as 100*inter >= tau_pct*(size_a+size_b-inter) (integer exact).
+    in integers (:func:`_jaccard_at_least`).
 
     ``max_df``: the inverted-index self-join is O(sum_s df(s)^2) — one
     boilerplate shingle shared by 10^6 docs explodes it at 100 TB. Setting
@@ -201,10 +213,7 @@ def ngram_jaccard_pairs(
             "_kept_size", "sh_size"
         )
     pairs = _pair_jaccard(sh)
-    return pairs.filter(
-        100 * F.col("inter")
-        >= tau_pct * (F.col("size_a") + F.col("size_b") - F.col("inter"))
-    )
+    return pairs.filter(_jaccard_at_least(tau_pct))
 
 
 def _minhash_state(docs: "DataFrame", n: int = 3) -> "DataFrame":
@@ -286,10 +295,7 @@ def minhash_lsh_pairs(
             F.size("sh_b").cast("long").alias("size_b"),
         )
     )
-    return verified.filter(
-        100 * F.col("inter")
-        >= tau_pct * (F.col("size_a") + F.col("size_b") - F.col("inter"))
-    )
+    return verified.filter(_jaccard_at_least(tau_pct))
 
 
 def dedup_clusters(pairs: "DataFrame", max_iter: int = 20) -> "DataFrame":

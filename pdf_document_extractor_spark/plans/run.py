@@ -6,10 +6,13 @@ Pipeline (SURVEY.md §3.1's Spark translation, north rule wiring):
   RESUME anti-join against committed extracted urls (P1/A5) ->
   url-hash repartition into P partitions (P3) ->
   ONE fused mapInPandas extraction (M1-M13, D1-D3, P2) ->
-  stage `extracted` -> per-partition lineage rows + run rollup from the
-  staged files, staged to `lineage` (A1/S7/P4) ->
+  commit_run: stage `extracted` -> per-partition lineage rows + run
+  rollup from the staged files, staged to `lineage` (A1/S7/P4) ->
   docs_in read back from the staged rollup row -> publish both manifests
   (or, with nothing to do, discard both staged dirs)
+
+The stream (streaming/stream.py) commits each micro-batch with the same
+commit_run, so both leave the same lineage rows, rollup row included.
 
 Scale notes:
 - The ONLY shuffle on the extraction path is the url-hash repartition.
@@ -27,6 +30,9 @@ Scale notes:
 - Soft failures raise inside the UDF => Spark task retry
   (spark.task.maxFailures); a job that dies leaves NO manifest entry, so the
   rerun resumes exactly (snapshot-commit discipline, sources/catalog.py).
+  A run that dies between the two manifest flips has `extracted`
+  published and no lineage: its rerun rebuilds lineage from the published
+  snapshot and publishes it.
 
 CLI:
   # job.py: from pdf_document_extractor_spark.plans.run import main; main()
@@ -58,7 +64,6 @@ HEAVY_BYTES_DEFAULT = 1 << 20  # 1 MiB
 class RunResult:
     run_id: str
     docs_in: int
-    docs_done: int
     wall_s: float
     committed: bool
     snapshot_id: int
@@ -89,33 +94,34 @@ def extraction_plan(
     )
 
 
-def run_extraction_job(
-    spark: "SparkSession",
-    pages: "DataFrame",
-    warehouse: str,
-    run_id: str,
-    num_partitions: int | None = None,
-    quarantine_soft: bool = False,
-    config=None,
-) -> RunResult:
+def commit_run(extracted: "DataFrame", warehouse: str, run_id: str) -> RunResult:
+    """Commit one run's extracted rows and their lineage as one snapshot
+    pair of the warehouse's ``extracted`` and ``lineage`` tables.
+
+    Stages ``extracted`` (the only pass over ``extracted``'s plan), stages
+    ``lineage_with_rollup`` of the staged files, reads docs_in from the
+    staged rollup row, then publishes both manifests, or discards both
+    staged dirs when docs_in is 0.
+
+    A run id whose ``extracted`` snapshot is published but whose lineage
+    is not (the run died between the two manifest flips) gets its lineage
+    rebuilt from that published snapshot; ``extracted`` is not evaluated.
+    Any other already-committed run id is a no-op."""
     t0 = time.time()
+    spark = extracted.sparkSession
     extracted_tbl = SnapshotTable(warehouse, "extracted")
     lineage_tbl = SnapshotTable(warehouse, "lineage")
 
-    if run_id in extracted_tbl.committed_run_ids():
-        # rerun of an already-committed run: exactly-once visible effect
-        return RunResult(run_id, 0, 0, time.time() - t0, False,
+    def not_committed() -> RunResult:
+        return RunResult(run_id, 0, time.time() - t0, False,
                          extracted_tbl.current_snapshot_id())
 
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism * 2
-
-    extracted = extraction_plan(
-        spark, pages, extracted_tbl, num_partitions,
-        quarantine_soft=quarantine_soft, config=config,
-    )
-    staged = extracted_tbl.stage(extracted, run_id)
-    this_run = extracted_tbl.read_staged(spark, staged)
+    if run_id in lineage_tbl.committed_run_ids():
+        return not_committed()
+    snap = next((s for s in extracted_tbl.snapshots() if s.run_id == run_id), None)
+    staged = None if snap else extracted_tbl.stage(extracted, run_id)
+    this_run = (extracted_tbl.read_staged(spark, staged) if staged
+                else extracted_tbl.read_snapshot(spark, snap.snapshot_id))
     staged_lin = lineage_tbl.stage(lineage_with_rollup(this_run, run_id), run_id)
     rollup = (
         lineage_tbl.read_staged(spark, staged_lin)
@@ -125,16 +131,34 @@ def run_extraction_job(
     )
     docs_in = rollup.doc_count if rollup is not None else 0
     if docs_in == 0:
-        # nothing left to extract: publish nothing, keep no staged files
-        extracted_tbl.discard(staged)
+        # nothing to record: publish nothing, keep no staged files
         lineage_tbl.discard(staged_lin)
-        return RunResult(run_id, 0, 0, time.time() - t0, False,
-                         extracted_tbl.current_snapshot_id())
-    snap = extracted_tbl.publish(staged)
+        if staged:
+            extracted_tbl.discard(staged)
+        return not_committed()
+    snap = snap or extracted_tbl.publish(staged)
     lineage_tbl.publish(staged_lin)
-    return RunResult(
-        run_id, docs_in, docs_in, time.time() - t0, True, snap.snapshot_id
+    return RunResult(run_id, docs_in, time.time() - t0, True, snap.snapshot_id)
+
+
+def run_extraction_job(
+    spark: "SparkSession",
+    pages: "DataFrame",
+    warehouse: str,
+    run_id: str,
+    num_partitions: int | None = None,
+    quarantine_soft: bool = False,
+    config=None,
+) -> RunResult:
+    """Extract the pages no committed run holds and commit them as run_id.
+    The plan is lazy: a rerun of a committed run_id runs no extraction."""
+    if num_partitions is None:
+        num_partitions = spark.sparkContext.defaultParallelism * 2
+    extracted = extraction_plan(
+        spark, pages, SnapshotTable(warehouse, "extracted"), num_partitions,
+        quarantine_soft=quarantine_soft, config=config,
     )
+    return commit_run(extracted, warehouse, run_id)
 
 
 # Production conf for the 100 TB run (applied by main(); local tests use

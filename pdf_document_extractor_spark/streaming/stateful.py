@@ -175,7 +175,7 @@ def stream_host_stats(
     ``batch_id={n}`` partition directory, so a batch replayed after a crash
     mid-write replaces its rows instead of appending duplicates — the same
     exactly-once-visible-effect discipline as stream_extract_committed
-    (there via SnapshotTable run_id idempotency)."""
+    (there via plans.run.commit_run, a no-op for a committed run_id)."""
     from pyspark.sql import functions as F  # noqa: N812
     from pyspark.sql.streaming.state import GroupStateTimeout
 

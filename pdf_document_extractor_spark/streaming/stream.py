@@ -2,11 +2,12 @@
 (kafka_background_service.py:60-186), re-expressed as Structured Streaming.
 
 readStream(pages) -> the SAME fused mapInPandas extraction operator ->
-writeStream with checkpointing. Offset tracking + commit-after-process is
-exactly what the checkpoint/WAL gives us (the at-least-once discipline of
-the reference's manual ``kafka.commit()``; here end-to-end exactly-once for
-the file sink). ``Trigger.AvailableNow`` is the batch-parity mode used in
-tests; a production deployment points the same code at
+foreachBatch -> plans.run.commit_run, the job's own run commit, once per
+micro-batch. Offset tracking + commit-after-process is exactly what the
+checkpoint/WAL gives us (the at-least-once discipline of the reference's
+manual ``kafka.commit()``); commit_run's run_id idempotency makes the
+visible effect exactly-once. ``Trigger.AvailableNow`` is the batch-parity
+mode used in tests; a production deployment points the same code at
 ``readStream.format("iceberg")`` or ``format("kafka")``.
 """
 
@@ -15,40 +16,12 @@ from __future__ import annotations
 from typing import TYPE_CHECKING
 
 from ..operators.extract import extract_pages
+from ..plans.run import commit_run
 from ..sources.pages import PAGES_SCHEMA
 
 if TYPE_CHECKING:
     from pyspark.sql import SparkSession
     from pyspark.sql.streaming import StreamingQuery
-
-
-def stream_extract_parquet_dir(
-    spark: "SparkSession",
-    pages_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-) -> "StreamingQuery":
-    """File-source streaming over a pages parquet directory -> parquet sink.
-
-    New files dropped into ``pages_dir`` are picked up incrementally; the
-    checkpoint guarantees each input file contributes exactly once to the
-    sink (the snapshot-commit analog of the batch plan)."""
-    stream = (
-        spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(pages_dir)
-    )
-    extracted = extract_pages(stream)
-    writer = (
-        extracted.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_extract_committed(
@@ -59,42 +32,23 @@ def stream_extract_committed(
     run_prefix: str = "stream",
     available_now: bool = True,
 ) -> "StreamingQuery":
-    """Streaming with the FULL commit discipline: each micro-batch commits
-    an atomic snapshot (run_id = '{prefix}-{batch_id}') plus its lineage
-    rows via ``foreachBatch``.
+    """File-source streaming over a pages parquet directory: each
+    micro-batch is one run (run_id = '{prefix}-{batch_id}') committed by
+    ``commit_run`` to the warehouse's ``extracted`` and ``lineage`` tables,
+    so its lineage carries the same per-partition and rollup rows as a
+    batch run's.
 
     Exactly-once visible effect under restarts: Structured Streaming can
-    REPLAY a micro-batch whose foreachBatch died mid-commit, but
-    ``SnapshotTable.commit`` is idempotent per run_id, so the replayed
-    batch is a no-op — the streaming analog of the reference's
-    commit-after-process offset discipline (kafka_background_service.py:
-    130-158) and of the batch plan's resume (plans/run.py).
+    REPLAY a micro-batch whose foreachBatch died mid-commit. commit_run is
+    a no-op for a committed run_id, and a replayed batch that died between
+    the two manifest flips gets its lineage rebuilt from the published
+    snapshot — the streaming analog of the reference's commit-after-process
+    offset discipline (kafka_background_service.py:130-158) and of the
+    batch plan's resume (plans/run.py).
     """
-    from ..operators.lineage import lineage_rows
-    from ..sources.catalog import SnapshotTable
-
-    extracted_tbl = SnapshotTable(warehouse, "extracted")
-    lineage_tbl = SnapshotTable(warehouse, "lineage")
-
-    def _commit_lineage(session, run_id: str, snapshot_id: int) -> None:
-        this_run = extracted_tbl.read_snapshot(session, snapshot_id)
-        lineage_tbl.commit(lineage_rows(this_run, run_id), run_id)
 
     def commit_batch(batch_df, batch_id: int) -> None:
-        run_id = f"{run_prefix}-{batch_id}"
-        snap = extracted_tbl.commit(batch_df, run_id)
-        if snap is not None:
-            _commit_lineage(batch_df.sparkSession, run_id, snap.snapshot_id)
-            return
-        # Replayed batch: extracted already committed. If the previous
-        # attempt died BETWEEN the two commits, lineage is missing — catch
-        # it up from the committed snapshot (lineage_tbl.commit is itself
-        # idempotent per run_id, so this is safe to race).
-        if run_id not in lineage_tbl.committed_run_ids():
-            for s in extracted_tbl.snapshots():
-                if s.run_id == run_id:
-                    _commit_lineage(batch_df.sparkSession, run_id, s.snapshot_id)
-                    break
+        commit_run(batch_df, warehouse, f"{run_prefix}-{batch_id}")
 
     stream = (
         spark.readStream.schema(PAGES_SCHEMA)

@@ -30,3 +30,23 @@ def unit_corpus():
     from pdf_document_extractor_spark.fixtures.gen import gen_unit_corpus
 
     return gen_unit_corpus()
+
+
+@pytest.fixture()
+def lineage_publish_fails_once(monkeypatch):
+    """``SnapshotTable.publish`` raises once on a ``lineage`` table, so a
+    run dies between its two manifest flips. Returns the list that
+    receives the failed run id."""
+    from pdf_document_extractor_spark.sources.catalog import SnapshotTable
+
+    publish = SnapshotTable.publish
+    failed = []
+
+    def publish_failing_lineage_once(self, snap):
+        if self.root.name == "lineage" and not failed:
+            failed.append(snap.run_id)
+            raise OSError("lineage publish failed")
+        return publish(self, snap)
+
+    monkeypatch.setattr(SnapshotTable, "publish", publish_failing_lineage_once)
+    return failed

@@ -168,6 +168,30 @@ def test_all_done_rerun_publishes_nothing(spark, tmp_path, corpus_df):
         assert sorted(os.listdir(t.data_dir)) == ["snap-000001-r1"]
 
 
+def test_rerun_recovers_a_failed_lineage_publish(
+    spark, tmp_path, corpus_df, lineage_publish_fails_once
+):
+    """The job dies between the two manifest flips: `extracted` is
+    published, the lineage publish raises. The rerun of the same run id
+    rebuilds the run's lineage from the published snapshot: one rollup row,
+    per-partition rows summing to it, and no orphan staged dir."""
+    wh = str(tmp_path / "wh")
+    with pytest.raises(OSError, match="lineage publish failed"):
+        run_extraction_job(spark, corpus_df, wh, "r1", num_partitions=8)
+    lineage_tbl = SnapshotTable(wh, "lineage")
+    assert lineage_tbl.read(spark) is None
+
+    res = run_extraction_job(spark, corpus_df, wh, "r1", num_partitions=8)
+    assert res.committed and res.docs_in == 300 and res.snapshot_id == 1
+    lin = lineage_tbl.read(spark).filter("run_id = 'r1'").collect()
+    rollups = [r for r in lin if r.partition_id == -1]
+    assert len(rollups) == 1 and rollups[0].doc_count == 300
+    assert sum(r.doc_count for r in lin if r.partition_id != -1) == 300
+    assert sorted(os.listdir(lineage_tbl.data_dir)) == ["snap-000001-r1"]
+    # committed now: a third run of r1 is a no-op
+    assert not run_extraction_job(spark, corpus_df, wh, "r1", num_partitions=8).committed
+
+
 def test_heavy_docs_actually_route(spark, tmp_path):
     docs = gen_unit_corpus()
     pages = pages_df_from_fixtures(spark, docs)

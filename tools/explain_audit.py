@@ -160,6 +160,10 @@ def main() -> None:
         "every LSH branch must read the materialized per-doc state"
     )
     assert "md5(" not in lsh_plan, "verification plan re-hashes shingles"
+    # once in the Jaccard filter (pushed into the id_b join condition),
+    # once in the output's inter column: the threshold names inter once
+    n_intersect = lsh_plan.count("array_intersect(")
+    assert n_intersect == 2, f"array_intersect( {n_intersect}x, want 2"
     title = "LSH joins read one per-doc state"
     print(f"{title:45s} OK")
     SECTIONS.append(
@@ -175,6 +179,7 @@ def main() -> None:
                 "verify joins keyed on id_a / id_b",
                 "every scan is the materialized state (Scan ExistingRDD)",
                 "no md5(",
+                "array_intersect( twice: Jaccard filter + inter column",
             ],
             "minhash_lsh_pairs materializes one per-doc state (doc_id, "
             "shingle set, band keys) with an eager localCheckpoint; the "
@@ -186,7 +191,10 @@ def main() -> None:
             "df(s)^2), the quadratic cost LSH exists to avoid) nor an "
             "exploded per-pair shingle join can come back, and no md5( "
             "means the shingles are not hashed again after the state is "
-            "built. Only join, key and scan lines shown.",
+            "built. The Jaccard threshold (100+tau)*inter >= tau*(a+b) names "
+            "inter once, so the intersection appears once in the join "
+            "condition the filter is pushed into and once in the output. "
+            "Only join, key and scan lines shown.",
         )
     )
 
