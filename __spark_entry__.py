@@ -1212,85 +1212,6 @@ def q_pipeline_training_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact_dedup(kept).select("text_md5", "keeper_id", "dup_count")
 
 
-def q_events_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join (task-statement custom-operator example): every event
-    matches the most recent 'signup' event at-or-before its timestamp per
-    user — union + ordered window, ONE shuffle, vs DuckDB's native
-    ASOF JOIN as the oracle."""
-    from pdf_document_extractor_spark.operators.asof import asof_join
-
-    events = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id", "ts", "user_id", "event_type"
-    )
-    dim = events.filter(F.col("event_type") == "signup").select(
-        "user_id", "ts", F.col("event_id").alias("signup_id")
-    )
-    out = asof_join(
-        events, dim, key="user_id", ts="ts", value_col="signup_id",
-        out_col="asof_signup_id",
-    )
-    return out.select(
-        "event_id",
-        "user_id",
-        F.col("asof_signup_id").cast("long").alias("asof_signup_id"),
-    )
-
-
-def q_events_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hypertable rollup cascade (task-statement example): minute buckets
-    from raw, hour from minute, day from hour — each coarser level reads
-    60x/24x fewer rows than raw. Oracle recomputes every level directly
-    from raw, proving the cascade re-aggregation exact. Value sums stay
-    integer-exact: value is scaled to centi-units and cast long before
-    summing (float sums would drift between engines)."""
-    from pdf_document_extractor_spark.operators.asof import (
-        time_rollup_cascade,
-    )
-
-    # date_trunc follows the session TZ; the DuckDB oracle truncates naive
-    # (UTC-stored) timestamps — pin UTC so the query is host-TZ-proof even
-    # under a driver session we don't configure
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    events = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "ts", F.round(F.col("value") * 100).cast("long").alias("cents")
-    )
-    out = time_rollup_cascade(events, ts="ts", value="cents")
-    return out.select(
-        "level",
-        "bucket_ts",
-        F.col("n_events").cast("long").alias("n_events"),
-        F.col("total_value").cast("long").alias("total_cents"),
-    )
-
-
-def q_events_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Range (interval) join: every event inside [signup_ts, signup_ts+1h)
-    of the same user — bucketized equi-join + exact re-verify, vs a plain
-    SQL BETWEEN join as the oracle."""
-    from pdf_document_extractor_spark.operators.asof import range_join
-
-    events = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id", "ts", "user_id", "event_type"
-    )
-    ranges = events.filter(F.col("event_type") == "signup").select(
-        "user_id",
-        F.col("ts").alias("win_start"),
-        (F.col("ts") + F.expr("INTERVAL 1 HOUR")).alias("win_end"),
-        F.col("event_id").alias("signup_id"),
-    )
-    out = range_join(
-        events.select("event_id", "ts", "user_id"),
-        ranges,
-        key="user_id",
-        ts="ts",
-        start="win_start",
-        end="win_end",
-    )
-    return out.select(
-        "event_id", "user_id", F.col("signup_id").cast("long").alias("signup_id")
-    )
-
-
 def q_sketch_ngram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min sketch corpus bigram frequencies (the 'novel sketch'
     operator): fixed-size mergeable state instead of shuffling the gram
@@ -2473,47 +2394,6 @@ _ORACLES["pipeline_training_corpus"] = f"""
     FROM q GROUP BY md5(text)
 """
 
-_ORACLES["events_asof_join"] = """
-    WITH dim AS (
-      SELECT user_id, ts, min(event_id) AS signup_id
-      FROM events WHERE event_type = 'signup'
-      GROUP BY user_id, ts
-    )
-    SELECT e.event_id, e.user_id,
-           CAST(d.signup_id AS BIGINT) AS asof_signup_id
-    FROM events e
-    ASOF LEFT JOIN dim d
-      ON e.user_id = d.user_id AND e.ts >= d.ts
-"""
-
-_ORACLES["events_rollup_cascade"] = """
-    WITH base AS (
-      SELECT ts, CAST(round(value * 100) AS BIGINT) AS cents FROM events
-    )
-    SELECT 'minute' AS level, date_trunc('minute', ts) AS bucket_ts,
-           CAST(count(*) AS BIGINT) AS n_events,
-           CAST(sum(cents) AS BIGINT) AS total_cents
-    FROM base GROUP BY 2
-    UNION ALL
-    SELECT 'hour', date_trunc('hour', ts),
-           CAST(count(*) AS BIGINT), CAST(sum(cents) AS BIGINT)
-    FROM base GROUP BY 2
-    UNION ALL
-    SELECT 'day', date_trunc('day', ts),
-           CAST(count(*) AS BIGINT), CAST(sum(cents) AS BIGINT)
-    FROM base GROUP BY 2
-"""
-
-_ORACLES["events_range_join"] = """
-    SELECT e.event_id, e.user_id, CAST(r.event_id AS BIGINT) AS signup_id
-    FROM events e
-    JOIN events r
-      ON r.event_type = 'signup'
-     AND e.user_id = r.user_id
-     AND e.ts >= r.ts
-     AND e.ts < r.ts + INTERVAL 1 HOUR
-"""
-
 _ORACLES["sketch_ngram_counts"] = f"""
     WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
     probes AS (
@@ -2645,9 +2525,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
         "dedup_simhash": q_dedup_simhash,
         "dedup_simhash_pairs": q_dedup_simhash_pairs,
-        "events_asof_join": q_events_asof_join,
-        "events_range_join": q_events_range_join,
-        "events_rollup_cascade": q_events_rollup_cascade,
         "extract_content_fallback": q_extract_content_fallback,
         "extract_dispatch_mixed": q_extract_dispatch_mixed,
         "extract_doc_assembly": q_extract_doc_assembly,

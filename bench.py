@@ -212,10 +212,16 @@ def main() -> None:
     except ValueError:
         sf = sf_label
 
+    # the Python workers import the package too: they inherit the
+    # environment, not the driver's sys.path
+    root = os.path.dirname(os.path.abspath(__file__))
+    sys.path.insert(0, root)
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (root, os.environ.get("PYTHONPATH")) if p
+    )
     spark = build_spark(cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     import __spark_entry__ as entry
 
     # headline FIRST: the throughput job runs in a fresh session state

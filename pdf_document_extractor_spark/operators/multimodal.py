@@ -1,6 +1,6 @@
 """Multimodal column plumbing: opaque binary media + typed metadata.
 
-Images/audio/video ride as ``binary`` columns with a typed header; all
+Images/audio ride as ``binary`` columns with a typed header; all
 Spark-side plumbing (schema, Arrow batch shape, partitioning, UDF
 signatures) is real and tested, and so are the fake-container decode/probe/
 resize paths. Real JPEG/PNG codecs go through an OPTIONAL Pillow import
@@ -14,8 +14,6 @@ Fake deterministic container (so tests/oracles can verify the plumbing):
 
   FIMG1 | width:u16be | height:u16be | channels:u8 | payload bytes
   FAUD1 | sample_rate:u32be | n_samples:u32be | payload bytes
-  FVID1 | width:u16be | height:u16be | fps:u8 | n_frames:u16be
-        | n_frames x frame_bytes:u16be-length-prefixed frames
 """
 
 from __future__ import annotations
@@ -149,116 +147,6 @@ def render_figures(pages: "DataFrame") -> "DataFrame":
 
     return pages.select("url", "html").mapInPandas(
         batch_fn, schema=FIGURE_IMAGE_SCHEMA
-    )
-
-
-VID_MAGIC = b"FVID1"
-
-
-def encode_fake_video(
-    width: int, height: int, fps: int, frames: list[bytes]
-) -> bytes:
-    out = VID_MAGIC + struct.pack(">HHBH", width, height, fps, len(frames))
-    for fr in frames:
-        out += struct.pack(">H", len(fr)) + fr
-    return out
-
-
-def frame_sample(
-    df: "DataFrame", every_nth: int = 2, id_col: str = "doc_id",
-    blob_col: str = "media",
-) -> "DataFrame":
-    """Sample every Nth frame from FVID1 containers -> one row per sampled
-    frame (doc_id, frame_idx, width, height, frame binary). Non-video rows
-    are dropped. Arrow-batched; a production build swaps the container
-    parser for pyav/ffmpeg keyframe extraction with the same signature
-    (1 input row -> k output rows is the shape that matters)."""
-
-    def batch_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = []
-            for i, b in zip(
-                batch[id_col].to_numpy(), batch[blob_col].to_numpy()
-            ):
-                b = b or b""
-                if b[:5] != VID_MAGIC or len(b) < 12:
-                    continue
-                w, h, _fps, n = struct.unpack(">HHBH", b[5:12])
-                pos = 12
-                for fi in range(n):
-                    if pos + 2 > len(b):
-                        break
-                    (flen,) = struct.unpack(">H", b[pos:pos + 2])
-                    frame = b[pos + 2:pos + 2 + flen]
-                    pos += 2 + flen
-                    if fi % every_nth == 0:
-                        out.append(
-                            {
-                                "doc_id": int(i),
-                                "frame_idx": fi,
-                                "width": w,
-                                "height": h,
-                                "frame": frame,
-                            }
-                        )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "frame_idx", "width", "height", "frame"],
-            )
-
-    return df.select(id_col, blob_col).mapInPandas(
-        batch_fn,
-        schema="doc_id long, frame_idx long, width long, height long, "
-        "frame binary",
-    )
-
-
-FEATURE_DIM = 16
-
-
-def media_features(
-    df: "DataFrame", id_col: str = "doc_id", blob_col: str = "media"
-) -> "DataFrame":
-    """Deterministic feature vector per media blob: L1-normalized 16-bin
-    byte histogram of the payload — a REAL vectorized numpy kernel (not a
-    stub), standing where a CNN/CLAP embedding would go in production.
-    Output: (doc_id, features array<float>) ready for the similarity
-    operators (brute_force_topk / lsh_bucketed_topk / embedding_near_pairs).
-    Rows with empty payloads are DROPPED (undecodable media has no
-    features; emitting a zero vector would poison cosine downstream).
-    """
-    import numpy as np
-
-    def batch_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids, feats = [], []
-            for i, b in zip(
-                batch[id_col].to_numpy(), batch[blob_col].to_numpy()
-            ):
-                b = b or b""
-                if b[:5] == IMG_MAGIC:
-                    payload = b[10:]
-                elif b[:5] == AUD_MAGIC:
-                    payload = b[13:]
-                elif b[:5] == VID_MAGIC:
-                    payload = b[12:]
-                else:
-                    payload = b
-                arr = np.frombuffer(payload, dtype=np.uint8)
-                if arr.size == 0:
-                    # empty payload -> no feature row; a zero vector would
-                    # poison downstream cosine (norm 0 -> NULL/NaN scores)
-                    continue
-                hist = np.bincount(arr >> 4, minlength=FEATURE_DIM).astype(
-                    "float64"
-                )
-                hist /= hist.sum()
-                ids.append(int(i))
-                feats.append(hist.astype("float32"))
-            yield pd.DataFrame({"doc_id": ids, "features": feats})
-
-    return df.select(id_col, blob_col).mapInPandas(
-        batch_fn, schema="doc_id long, features array<float>"
     )
 
 

@@ -185,9 +185,6 @@ RECOMMENDED_CONF = {
     "spark.task.maxFailures": "4",
     # long-lived Python workers amortize import cost across batches
     "spark.python.worker.reuse": "true",
-    # date_trunc/windowing must not depend on whatever TZ the cluster
-    # hosts happen to run in (time_rollup_cascade et al.)
-    "spark.sql.session.timeZone": "UTC",
 }
 
 

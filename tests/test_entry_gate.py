@@ -55,6 +55,13 @@ def test_query_matches_oracle(spark, duck, name):
     assert value_hash(srows, sdf.columns) == value_hash(drows, list(ddf.columns))
 
 
+def test_every_oracle_has_a_query():
+    mod = _entry_module()
+    names, oracles = set(mod.queries()), set(mod.oracle_sql())
+    assert oracles <= names
+    assert names - oracles == {"sim_ann_ivf_topk", "sim_ann_lsh_topk"}
+
+
 def test_registry_is_sorted():
     names = list(_entry_module().queries())
     assert names == sorted(names)

@@ -57,56 +57,6 @@ def test_fake_container_decode_is_real_now():
     arr = decode_image_pixels(encode_fake_image(4, 4))
     assert arr.shape == (4, 4, 3)
 
-def test_frame_sample(spark):
-    from pdf_document_extractor_spark.operators.multimodal import (
-        encode_fake_video,
-        frame_sample,
-    )
-
-    frames = [bytes([i]) * (i + 1) for i in range(6)]
-    rows = [
-        (1, encode_fake_video(320, 240, 24, frames)),
-        (2, encode_fake_image(10, 10, 1)),  # not a video -> dropped
-    ]
-    df = spark.createDataFrame(rows, schema="doc_id long, media binary")
-    got = sorted(
-        (r.doc_id, r.frame_idx, bytes(r.frame))
-        for r in frame_sample(df, every_nth=2).collect()
-    )
-    assert got == [(1, 0, frames[0]), (1, 2, frames[2]), (1, 4, frames[4])]
-    w = frame_sample(df, every_nth=2).collect()[0]
-    assert (w.width, w.height) == (320, 240)
-
-
-def test_media_features_ready_for_similarity(spark):
-    from pdf_document_extractor_spark.operators.multimodal import (
-        FEATURE_DIM,
-        media_features,
-    )
-
-    rows = [
-        (1, encode_fake_image(9, 9, 1)),
-        (2, encode_fake_audio(8000, 10)),
-        (3, b"JUNKPAYLOADBYTES"),
-    ]
-    df = spark.createDataFrame(rows, schema="doc_id long, media binary")
-    got = {r.doc_id: list(r.features) for r in media_features(df).collect()}
-    assert all(len(v) == FEATURE_DIM for v in got.values())
-    assert all(abs(sum(v) - 1.0) < 1e-5 for v in got.values())
-    # deterministic: same blob -> same vector
-    again = {r.doc_id: list(r.features) for r in media_features(df).collect()}
-    assert got == again
-    # pipes into the similarity operators (array<float> embedding contract)
-    from pyspark.sql import functions as F
-    from pdf_document_extractor_spark.operators.similarity import (
-        brute_force_topk,
-    )
-    emb = media_features(df).select(
-        F.col("doc_id").alias("vec_id"), F.col("features").alias("embedding")
-    )
-    topk = brute_force_topk(emb, query_ids_below=2, k=2).collect()
-    assert len(topk) >= 1
-
 
 # --------------------------------------------------------------------------
 # M11/M12: size probe, pixel decode, bomb guard (PIL paths skip-if-no-PIL)

@@ -455,234 +455,6 @@ def test_job_threads_output_format_to_extraction(spark, tmp_path):
     )
 
 
-def test_asof_join_edges(spark):
-    """At-or-before tie, no-predecessor NULL, per-key isolation."""
-    from datetime import datetime
-
-    from pdf_document_extractor_spark.operators.asof import asof_join
-
-    t = lambda s: datetime.fromisoformat(s)  # noqa: E731
-    facts = spark.createDataFrame(
-        [
-            (1, t("2024-01-01T10:00"), 7),   # exact-ts tie with dim
-            (2, t("2024-01-01T11:00"), 7),   # between dims
-            (3, t("2024-01-01T09:00"), 7),   # before any dim -> NULL
-            (4, t("2024-01-01T12:00"), 8),   # other key, no dim -> NULL
-        ],
-        "fact_id long, ts timestamp, user_id long",
-    )
-    dim = spark.createDataFrame(
-        [
-            (100, t("2024-01-01T10:00"), 7),
-            (200, t("2024-01-01T10:30"), 7),
-        ],
-        "val long, ts timestamp, user_id long",
-    )
-    out = {
-        r.fact_id: r.asof_value
-        for r in asof_join(
-            facts, dim, key="user_id", ts="ts", value_col="val"
-        ).collect()
-    }
-    assert out == {1: 100, 2: 200, 3: None, 4: None}
-
-
-def test_range_join_bucket_width_is_placement_only(spark):
-    """Bucket width changes the candidate fan-out, never the result —
-    including ranges spanning many buckets and boundary exclusivity."""
-    from datetime import datetime
-
-    from pdf_document_extractor_spark.operators.asof import range_join
-
-    t = lambda s: datetime.fromisoformat(s)  # noqa: E731
-    facts = spark.createDataFrame(
-        [
-            (1, t("2024-01-01T10:00"), 7),
-            (2, t("2024-01-01T12:59"), 7),
-            (3, t("2024-01-01T13:00"), 7),  # end-exclusive: no match
-            (4, t("2024-01-01T10:30"), 8),  # wrong key
-        ],
-        "fact_id long, ts timestamp, user_id long",
-    )
-    ranges = spark.createDataFrame(
-        [(50, t("2024-01-01T10:00"), t("2024-01-01T13:00"), 7)],
-        "range_id long, win_start timestamp, win_end timestamp, user_id long",
-    )
-    expect = {(1, 50), (2, 50)}
-    for width in (60, 3600, 86400):
-        got = {
-            (r.fact_id, r.range_id)
-            for r in range_join(
-                facts, ranges, key="user_id", ts="ts",
-                start="win_start", end="win_end", bucket_seconds=width,
-            ).collect()
-        }
-        assert got == expect, width
-
-
-def test_asof_join_null_semantics(spark):
-    """NULL-ts dim rows never match; a NULL VALUE on the latest dim row
-    is returned as NULL, never a stale earlier value (DuckDB ASOF
-    parity)."""
-    from datetime import datetime
-
-    from pdf_document_extractor_spark.operators.asof import asof_join
-
-    t = lambda s: datetime.fromisoformat(s)  # noqa: E731
-    facts = spark.createDataFrame(
-        [(1, t("2024-01-01T10:00"), 7)],
-        "fact_id long, ts timestamp, user_id long",
-    )
-    poison = spark.createDataFrame(
-        [(999, None, 7)], "val long, ts timestamp, user_id long"
-    )
-    (row,) = asof_join(
-        facts, poison, key="user_id", ts="ts", value_col="val"
-    ).collect()
-    assert row.asof_value is None  # NULL-ts dim is not 'before everything'
-
-    stale = spark.createDataFrame(
-        [(5, t("2024-01-01T09:00"), 7), (None, t("2024-01-01T09:30"), 7)],
-        "val long, ts timestamp, user_id long",
-    )
-    (row,) = asof_join(
-        facts, stale, key="user_id", ts="ts", value_col="val"
-    ).collect()
-    assert row.asof_value is None  # latest row's NULL, not the stale 5
-
-
-def test_range_join_subsecond_boundary(spark):
-    """A fractional range end crossing a bucket boundary must still match
-    (unix-second truncation used to drop it)."""
-    from datetime import datetime
-
-    from pdf_document_extractor_spark.operators.asof import range_join
-
-    facts = spark.createDataFrame(
-        [(1, datetime.fromisoformat("2024-01-01T11:00:00.200"), 7)],
-        "fact_id long, ts timestamp, user_id long",
-    )
-    ranges = spark.createDataFrame(
-        [
-            (
-                50,
-                datetime.fromisoformat("2024-01-01T10:00:00.400"),
-                datetime.fromisoformat("2024-01-01T11:00:00.400"),
-                7,
-            )
-        ],
-        "range_id long, win_start timestamp, win_end timestamp, user_id long",
-    )
-    got = range_join(
-        facts, ranges, key="user_id", ts="ts",
-        start="win_start", end="win_end", bucket_seconds=3600,
-    ).collect()
-    assert [(r.fact_id, r.range_id) for r in got] == [(1, 50)]
-
-
-def test_rollup_rejects_misordered_levels(spark):
-    import pytest as _pytest
-
-    from pdf_document_extractor_spark.operators.asof import (
-        time_rollup_cascade,
-    )
-
-    events = spark.createDataFrame(
-        [(1,)], "x long"
-    ).selectExpr("timestamp'2024-01-01 10:30:00' as ts", "x as v")
-    with _pytest.raises(ValueError, match="finest-to-coarsest"):
-        time_rollup_cascade(events, "ts", "v", levels=("minute", "day", "hour"))
-    with _pytest.raises(ValueError, match="finest-to-coarsest"):
-        time_rollup_cascade(events, "ts", "v", levels=("minute", "fortnight"))
-
-
-def test_rollup_rejects_nonterminal_week(spark):
-    import pytest as _pytest
-
-    from pdf_document_extractor_spark.operators.asof import (
-        time_rollup_cascade,
-    )
-
-    events = spark.createDataFrame(
-        [(1,)], "x long"
-    ).selectExpr("timestamp'2024-01-01 10:30:00' as ts", "x as v")
-    # week does not nest inside month: ('day','week','month') would
-    # attribute a cross-month week's totals to the Monday's month
-    with _pytest.raises(ValueError, match="week"):
-        time_rollup_cascade(events, "ts", "v", levels=("day", "week", "month"))
-    # terminal week is fine
-    out = time_rollup_cascade(events, "ts", "v", levels=("day", "week"))
-    assert {r.level for r in out.collect()} == {"day", "week"}
-
-
-def test_asof_helper_column_collision_raises(spark):
-    import pytest as _pytest
-
-    from pdf_document_extractor_spark.operators.asof import (
-        asof_join,
-        range_join,
-    )
-
-    facts = spark.createDataFrame(
-        [(1, 1)], "fact_id long, _bucket long"
-    ).selectExpr("fact_id", "_bucket", "timestamp'2024-01-01' as ts")
-    dim = spark.createDataFrame([(1, 2)], "fact_id long, v long").selectExpr(
-        "fact_id", "v", "timestamp'2024-01-01' as ts"
-    )
-    with _pytest.raises(ValueError, match="_bucket"):
-        range_join(facts, dim.selectExpr("fact_id", "ts as s", "ts as e"),
-                   key="fact_id", ts="ts", start="s", end="e")
-    facts2 = facts.withColumnRenamed("_bucket", "_mark")
-    with _pytest.raises(ValueError, match="_mark"):
-        asof_join(facts2, dim, key="fact_id", ts="ts", value_col="v")
-
-
-def test_asof_bucketed_parity_on_skewed_key(spark):
-    """asof_join_bucketed must be output-identical to asof_join on a
-    deliberately skewed key (90% of facts on one key) across bucket
-    widths, including NULL-ts facts, NULL dim values, exact-ts ties,
-    and facts before any dim (bucket width is placement-only)."""
-    import random
-    from datetime import datetime, timedelta
-
-    from pdf_document_extractor_spark.operators.asof import (
-        asof_join,
-        asof_join_bucketed,
-    )
-
-    rng = random.Random(7)
-    base = datetime(2024, 1, 1)
-    facts_rows = []
-    for i in range(400):
-        key = "hot" if i % 10 else f"cold{i % 7}"
-        ts = None if i % 97 == 0 else base + timedelta(seconds=rng.randrange(0, 50_000))
-        facts_rows.append((i, key, ts))
-    dim_rows = []
-    for j in range(60):
-        key = "hot" if j % 3 else f"cold{j % 7}"
-        ts = base + timedelta(seconds=rng.randrange(0, 50_000))
-        val = None if j % 11 == 0 else j
-        dim_rows.append((key, ts, val))
-    # exact-tie witness: dim at exactly a fact ts
-    dim_rows.append(("hot", facts_rows[1][2], 999))
-    facts = spark.createDataFrame(facts_rows, "fact_id long, host string, ts timestamp")
-    dim = spark.createDataFrame(dim_rows, "host string, ts timestamp, v long")
-
-    want = sorted(
-        (r.fact_id, r.asof_value)
-        for r in asof_join(facts, dim, key="host", ts="ts", value_col="v").collect()
-    )
-    for width in (60, 3600, 100_000):
-        got = sorted(
-            (r.fact_id, r.asof_value)
-            for r in asof_join_bucketed(
-                facts, dim, key="host", ts="ts", value_col="v",
-                bucket_seconds=width,
-            ).collect()
-        )
-        assert got == want, f"bucket width {width} changed results"
-
-
 def test_content_fallback_chain_m14(spark):
     """M14: extracted content > provided text > metadata JSON terminal
     (reference api_extraction_processor.py:316-344 coalesce chain)."""

@@ -18,10 +18,7 @@ sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 import duckdb
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
+TABLES = ("documents", "embeddings")
 
 
 def value_hash(rows: list[tuple], cols: list[str]) -> str:
