@@ -26,14 +26,18 @@ def _doc_id(col: str = "url"):
     return F.element_at(F.split(F.col(col), "/"), -1).cast("long").alias("doc_id")
 
 
-def _extracted(spark: SparkSession, sf_dir: str, mode: str) -> DataFrame:
+def _extracted(
+    spark: SparkSession, sf_dir: str, mode: str, output_format: str = "text"
+) -> DataFrame:
     from pdf_document_extractor_spark.operators.extract import extract_pages
     from pdf_document_extractor_spark.sources.pages import (
         synthesize_pages_from_documents,
     )
 
     pages = synthesize_pages_from_documents(spark, sf_dir, mode=mode)
-    return extract_pages(pages).withColumn("doc_id", _doc_id())
+    return extract_pages(pages, output_format=output_format).withColumn(
+        "doc_id", _doc_id()
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -81,17 +85,7 @@ def q_extract_html_charset(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_extract_pdf_markdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Markdown renderer (M4): reference '# Page {n}' template selected by
     output_format (DoclingOutputFormatEnum, docling_models.py:22-28)."""
-    from pdf_document_extractor_spark.core.config import ExtractionConfig
-    from pdf_document_extractor_spark.operators.extract import extract_pages
-    from pdf_document_extractor_spark.sources.pages import (
-        synthesize_pages_from_documents,
-    )
-
-    pages = synthesize_pages_from_documents(spark, sf_dir, "pdf")
-    ext = extract_pages(
-        pages, config=ExtractionConfig(output_format="markdown")
-    )
-    return ext.withColumn("doc_id", _doc_id()).select(
+    return _extracted(spark, sf_dir, "pdf", output_format="markdown").select(
         "doc_id",
         "doc_type",
         "status",
@@ -327,15 +321,7 @@ def q_extract_pdf_htmlout(spark: SparkSession, sf_dir: str) -> DataFrame:
     docling_models.py:22-28): body line -> <p>, grid table -> one <table>
     of <tr><td> cells, '\\n'-joined. Runs the pdf_table mode so both the
     paragraph and table branches render."""
-    from pdf_document_extractor_spark.core.config import ExtractionConfig
-    from pdf_document_extractor_spark.operators.extract import extract_pages
-    from pdf_document_extractor_spark.sources.pages import (
-        synthesize_pages_from_documents,
-    )
-
-    pages = synthesize_pages_from_documents(spark, sf_dir, "pdf_table")
-    ext = extract_pages(pages, config=ExtractionConfig(output_format="html"))
-    return ext.withColumn("doc_id", _doc_id()).select(
+    return _extracted(spark, sf_dir, "pdf_table", output_format="html").select(
         "doc_id", "doc_type", "status", "content"
     )
 
@@ -345,15 +331,7 @@ def q_extract_pdf_jsonout(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical sorted-key dump of the element stream. Runs the pdf_hdr
     mode so both header and body labels (with exact bare-join spans)
     appear in the dump."""
-    from pdf_document_extractor_spark.core.config import ExtractionConfig
-    from pdf_document_extractor_spark.operators.extract import extract_pages
-    from pdf_document_extractor_spark.sources.pages import (
-        synthesize_pages_from_documents,
-    )
-
-    pages = synthesize_pages_from_documents(spark, sf_dir, "pdf_hdr")
-    ext = extract_pages(pages, config=ExtractionConfig(output_format="json"))
-    return ext.withColumn("doc_id", _doc_id()).select(
+    return _extracted(spark, sf_dir, "pdf_hdr", output_format="json").select(
         "doc_id", "doc_type", "status", "content"
     )
 
@@ -363,15 +341,7 @@ def q_extract_docx_jsonout(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference exports any converted document in the configured format):
     docx pages re-render through the shared canonical element dump
     (core/render.py)."""
-    from pdf_document_extractor_spark.core.config import ExtractionConfig
-    from pdf_document_extractor_spark.operators.extract import extract_pages
-    from pdf_document_extractor_spark.sources.pages import (
-        synthesize_pages_from_documents,
-    )
-
-    pages = synthesize_pages_from_documents(spark, sf_dir, "docx")
-    ext = extract_pages(pages, config=ExtractionConfig(output_format="json"))
-    return ext.withColumn("doc_id", _doc_id()).select(
+    return _extracted(spark, sf_dir, "docx", output_format="json").select(
         "doc_id", "doc_type", "status", "content",
         F.col("word_count").cast("long").alias("word_count"),
     )
@@ -381,15 +351,7 @@ def q_extract_html_htmlout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Generic (non-PDF) html renderer (M4 across ALL doc types): the
     html_table mode re-renders as <p> blocks + a <table> reconstructed
     from the pinned CSV export."""
-    from pdf_document_extractor_spark.core.config import ExtractionConfig
-    from pdf_document_extractor_spark.operators.extract import extract_pages
-    from pdf_document_extractor_spark.sources.pages import (
-        synthesize_pages_from_documents,
-    )
-
-    pages = synthesize_pages_from_documents(spark, sf_dir, "html_table")
-    ext = extract_pages(pages, config=ExtractionConfig(output_format="html"))
-    return ext.withColumn("doc_id", _doc_id()).select(
+    return _extracted(spark, sf_dir, "html_table", output_format="html").select(
         "doc_id", "doc_type", "status", "content"
     )
 

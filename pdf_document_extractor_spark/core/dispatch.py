@@ -29,12 +29,11 @@ from .model import (
     DOC_TYPE_PNG,
     DOC_TYPE_RTF,
     DOC_TYPE_TXT,
-    STATUS_SUCCESS,
     ExtractionResult,
-    PageResult,
 )
 from .office_extract import extract_ooxml, extract_txt
 from .pdf_extract import extract_pdf
+from .render import rerender_pages
 from .rtf_extract import RTF_MAGIC, extract_rtf
 from .taxonomy import classify_error
 
@@ -149,15 +148,16 @@ EXTRACTORS = {
 }
 
 
-def extract_document(url: str, data: bytes, config=None) -> ExtractionResult:
+def extract_document(
+    url: str, data: bytes, output_format: str = "text"
+) -> ExtractionResult:
     """Sniff + extract one document; never raises for HARD failures —
     returns a failure-taxonomy result instead (poison-pill discipline,
     reference kafka_message_handler.py:126-161). SOFT (transient) failures
     re-raise so the task layer retries (reference: raise => no Kafka commit
-    => redelivery). ``config`` may be an ExtractionConfig or a ConfigMatrix
-    (D4): it is resolved per sniffed doc_type BEFORE extraction, mirroring
-    the reference's per-MIME tuned configs
-    (processing_config_manager.py:88-237)."""
+    => redelivery). ``output_format`` selects the content renderer (M4):
+    'html' and 'json' re-render every doc type; 'text' (default),
+    'markdown' and any other value differ on PDF pages only."""
     uh = url_hash(url)
     data = data or b""
     # transparent gunzip BEFORE sniffing: the document type is the INNER
@@ -199,29 +199,15 @@ def extract_document(url: str, data: bytes, config=None) -> ExtractionResult:
                 pages=[],
             )
     doc_type = sniff_doc_type(data)
-    # ConfigMatrix keys are RESULT doc_types; the ooxml/ole2 subtype is
-    # known only after the container opens, so those two receive the
-    # UNRESOLVED config. extract_ooxml documents where to resolve it once
-    # a knob applies; extract_ole2 currently consumes no config at all
-    # (doc/xls have no extract-time knobs — structure flags are gated per
-    # result doc_type in operators/extract.py).
-    cfg = config
-    if config is not None and doc_type not in (DOC_TYPE_OOXML, DOC_TYPE_OLE2):
-        cfg = config.for_type(doc_type)
     try:
-        result = EXTRACTORS[doc_type](data, uh, config=cfg)
-        # M4 for non-PDF types: the reference exports ANY converted doc in
-        # the configured output format; PDF renders in-extractor (it
-        # interleaves tables positionally), every other type re-renders
-        # here from the element stream (core/render.py pinned semantics).
-        # Resolve per RESULT doc_type — the container subtype is only
-        # known now (e.g. ooxml -> docx/xlsx/pptx).
-        if config is not None and result.doc_type != DOC_TYPE_PDF:
-            fmt = config.for_type(result.doc_type).output_format
-            if fmt in ("html", "json"):
-                from .render import rerender_pages
-
-                rerender_pages(result, fmt)
+        # M4: the reference exports ANY converted doc in the configured
+        # output format. PDF renders in-extractor (it interleaves tables
+        # positionally); every other type re-renders here from the element
+        # stream (core/render.py pinned semantics; html/json only).
+        if doc_type == DOC_TYPE_PDF:
+            return EXTRACTORS[doc_type](data, uh, output_format)
+        result = EXTRACTORS[doc_type](data, uh)
+        rerender_pages(result, output_format)
         return result
     except BaseException as exc:  # noqa: BLE001 — taxonomy decides
         status, error_type, message = classify_error(exc)
@@ -234,7 +220,3 @@ def extract_document(url: str, data: bytes, config=None) -> ExtractionResult:
             error_message=message,
             pages=[],
         )
-
-
-def success_result(doc_type: str, pages: list[PageResult]) -> ExtractionResult:
-    return ExtractionResult(doc_type=doc_type, status=STATUS_SUCCESS, pages=pages)

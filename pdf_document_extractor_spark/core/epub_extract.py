@@ -117,7 +117,7 @@ def _spine_chapter_paths(zf: zipfile.ZipFile, names: set) -> list[str]:
 
 
 def extract_epub(
-    zf: zipfile.ZipFile, names: set, url_hash: str, config=None
+    zf: zipfile.ZipFile, names: set, url_hash: str
 ) -> ExtractionResult:
     pages: list[PageResult] = []
     fig_counter = 0

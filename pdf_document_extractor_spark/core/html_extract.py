@@ -572,10 +572,8 @@ def build_page_from_collector(
     )
 
 
-def extract_html(data: bytes, url_hash: str, config=None) -> ExtractionResult:
-    """Extract main content from HTML bytes. Raises typed hard failures.
-    ``config`` is accepted for registry uniformity; the HTML path has no
-    format knob (reference's API extraction path returns one text body)."""
+def extract_html(data: bytes, url_hash: str) -> ExtractionResult:
+    """Extract main content from HTML bytes. Raises typed hard failures."""
     text = decode_html_bytes(data)
     parser = _collect(text)
     page = build_page_from_collector(parser, 1, url_hash)

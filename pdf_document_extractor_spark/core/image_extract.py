@@ -1,9 +1,8 @@
 """Image-input extraction: PNG/JPEG header metadata, pure stdlib.
 
 The reference lists png and jpg as first-class MIME types
-(lib/models/mime_type.py:11-12) with per-image config tuning
-(src/services/processing_config_manager.py image branch) and
-dimension validation before decode (src/utils/image_validator.py:36-150).
+(lib/models/mime_type.py:11-12) and validates their dimensions before
+decode (src/utils/image_validator.py:36-150).
 Full pixel decode needs an image codec (optional-PIL paths live in
 operators/multimodal.py), but the DIMENSIONS are header fields readable
 in pure stdlib — so an image document becomes a SUCCESS row whose figure
@@ -117,7 +116,7 @@ def _validate_dims(width: int, height: int) -> None:
         )
 
 
-def extract_image(data: bytes, url_hash: str, config=None) -> ExtractionResult:
+def extract_image(data: bytes, url_hash: str) -> ExtractionResult:
     """PNG/JPEG bytes -> metadata-only success row (pinned rule 4)."""
     if data[: len(PNG_MAGIC)] == PNG_MAGIC:
         doc_type = DOC_TYPE_PNG

@@ -66,9 +66,7 @@ def _text_of(node) -> str:
     return normalize_ws("".join(node.itertext()))
 
 
-def extract_odf(
-    zf: zipfile.ZipFile, url_hash: str, config=None
-) -> ExtractionResult:
+def extract_odf(zf: zipfile.ZipFile, url_hash: str) -> ExtractionResult:
     """Route an OpenDocument container by its office:body child."""
     # shared zip-bomb guard + typed parse errors (office_extract rule:
     # a 42KB bomb declaring 4GB of content.xml costs a failure row, not

@@ -97,9 +97,8 @@ from .taxonomy import (
 MAX_PART_BYTES = 256 << 20
 
 
-def extract_txt(data: bytes, url_hash: str, config=None) -> ExtractionResult:
-    """Plain-text passthrough extraction (pinned rules 1-4). ``config`` is
-    accepted for registry uniformity (no format knob)."""
+def extract_txt(data: bytes, url_hash: str) -> ExtractionResult:
+    """Plain-text passthrough extraction (pinned rules 1-4)."""
     content = decode_html_bytes(data)
     if not content.strip():
         raise EmptyContentError("empty text document")
@@ -158,15 +157,8 @@ def _parse_part(zf: zipfile.ZipFile, name: str):
         raise CorruptedFileError(f"malformed {name}: {exc}") from exc
 
 
-def extract_ooxml(data: bytes, url_hash: str, config=None) -> ExtractionResult:
-    """PK-zip payloads: route by contained part (pinned rule 5).
-
-    Receives the UNRESOLVED config (possibly a ConfigMatrix): the subtype
-    is known only after the container opens, so matrix keys are always the
-    RESULT doc_types ('docx'/'xlsx'/'pptx'), never 'ooxml'. No office
-    extractor consumes a config knob today — when one grows a knob,
-    resolve ``config.for_type(subtype)`` at the dispatch below (structure
-    flags are already gated per result doc_type in operators/extract.py)."""
+def extract_ooxml(data: bytes, url_hash: str) -> ExtractionResult:
+    """PK-zip payloads: route by contained part (pinned rule 5)."""
     try:
         zf = zipfile.ZipFile(io.BytesIO(data))
         names = set(zf.namelist())
@@ -183,20 +175,15 @@ def extract_ooxml(data: bytes, url_hash: str, config=None) -> ExtractionResult:
         # shared HTML block-scoring core
         from .epub_extract import extract_epub
 
-        return extract_epub(zf, names, url_hash, config)
+        return extract_epub(zf, names, url_hash)
     if "content.xml" in names:
         # OpenDocument container (odt/ods — round 4)
         from .odf_extract import extract_odf
 
-        return extract_odf(zf, url_hash, config)
+        return extract_odf(zf, url_hash)
     raise UnsupportedFormatError(
         "zip container without a recognized ooxml/odf part"
     )
-
-
-def extract_docx(data: bytes, url_hash: str, config=None) -> ExtractionResult:
-    """Back-compat entry: identical to extract_ooxml (routes by part)."""
-    return extract_ooxml(data, url_hash, config)
 
 
 def _docx_from_zip(zf: zipfile.ZipFile, url_hash: str) -> ExtractionResult:

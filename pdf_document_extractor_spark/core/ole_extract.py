@@ -71,7 +71,7 @@ DOC_TYPE_XLS = "xls"
 _MAX_TEXT_CHARS = 64 << 20  # ccpText bomb guard (chars, not bytes)
 
 
-def extract_ole2(data: bytes, url_hash: str, config=None) -> ExtractionResult:
+def extract_ole2(data: bytes, url_hash: str) -> ExtractionResult:
     """Route an OLE2 container to the .doc or .xls extractor (pinned 1/5)."""
     streams = read_cfb(data)
     if "WordDocument" in streams:

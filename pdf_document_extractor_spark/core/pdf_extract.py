@@ -41,7 +41,7 @@ PINNED SEMANTICS (byte-identical invariant surface):
 4. Reading order = line order; a table row renders into content as its cells
    joined with single spaces.
 5. Page content (reference M5/M4 templates, docling_strategy_processor.py:
-   1264-1300): per ``config.output_format`` — 'text' (default, the golden
+   1264-1300): per ``output_format`` — 'text' (default, the golden
    byte-identity surface): ``"Page {n}\\n\\n"`` + ``line_text + "\\n"`` per
    line; 'markdown' (reference :1282-1286): ``"# Page {n}\\n\\n"`` + the
    same per-line template; any other format (reference fallback :1293-94):
@@ -1984,11 +1984,12 @@ def _render_json_page(page_no: int, elements) -> str:
     return elements_json(page_no, elements)
 
 
-def extract_pdf(data: bytes, url_hash: str, config=None) -> ExtractionResult:
+def extract_pdf(
+    data: bytes, url_hash: str, output_format: str = "text"
+) -> ExtractionResult:
     """Extract text/elements/tables from PDF bytes. Raises typed failures.
 
-    ``config.output_format`` selects the content renderer (pinned rule 5);
-    structure flags are applied by the caller (operators/extract.py).
+    ``output_format`` selects the content renderer (pinned rule 5).
 
     Broken cross-reference tables are ROUTINE in crawled PDFs (truncated
     tails, wrong startxref after naive concatenation, generators that lie
@@ -2007,19 +2008,19 @@ def extract_pdf(data: bytes, url_hash: str, config=None) -> ExtractionResult:
         offsets, trailer = _rebuild_xref(data)
         rebuilt = True
     try:
-        return _extract_pdf_with(data, url_hash, config, offsets, trailer)
+        return _extract_pdf_with(data, url_hash, output_format, offsets, trailer)
     except CorruptedFileError:
         if rebuilt:
             raise
         offsets, trailer = _rebuild_xref(data)
-        return _extract_pdf_with(data, url_hash, config, offsets, trailer)
+        return _extract_pdf_with(data, url_hash, output_format, offsets, trailer)
 
 
 def _extract_pdf_with(
-    data: bytes, url_hash: str, config, offsets: dict, trailer: dict
+    data: bytes, url_hash: str, output_format: str, offsets: dict,
+    trailer: dict,
 ) -> ExtractionResult:
     """One extraction attempt against a given object table."""
-    output_format = config.output_format if config is not None else "text"
     objs = _Objects(data, offsets)
     enc = trailer.get("Encrypt")
     if enc is not None:

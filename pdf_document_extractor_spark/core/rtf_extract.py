@@ -185,7 +185,7 @@ def rtf_to_text(data: bytes) -> str:
     return "".join(out)
 
 
-def extract_rtf(data: bytes, url_hash: str, config=None) -> ExtractionResult:
+def extract_rtf(data: bytes, url_hash: str) -> ExtractionResult:
     """Extract text from RTF bytes (pinned rules 1-7)."""
     if not data.startswith(RTF_MAGIC):
         raise CorruptedFileError("missing {\\rtf magic")

@@ -143,16 +143,15 @@ def extract_rows_py(
     url: str,
     payload: bytes,
     partition_id: int = -1,
-    config=None,
+    output_format: str = "text",
     quarantine_soft: bool = False,
 ) -> list[dict]:
     """Pure-Python row production for one document — ALSO the pytest oracle.
 
     Returns the exact dict rows the Spark UDF emits (minus Arrow transport).
-    ``config`` may be an ExtractionConfig or a per-type ConfigMatrix (D4);
-    structure flags gate the tables/figures arrays, ``output_format``
-    selects the content renderer for EVERY doc type (core/config.py —
-    PDF renders in-extractor, other types via core/render.py).
+    ``output_format`` selects the content renderer (core/dispatch.py:
+    PDF renders in-extractor, other types via core/render.py); tables and
+    figures are always emitted.
 
     ``quarantine_soft``: normally soft (transient) failures re-raise so the
     TASK retries (reference: raise => no Kafka commit => redelivery). A
@@ -161,13 +160,12 @@ def extract_rows_py(
     redelivery is exhausted (kafka_message_handler.py:147-161), so one
     permanently-flaky document cannot wedge the job forever.
     """
-    from ..core.config import DEFAULT_CONFIG
     from ..core.taxonomy import is_soft_failure
 
-    config = config or DEFAULT_CONFIG
     payload = payload or b""
     try:
-        result = extract_document(url, payload, config)  # soft failures re-raise
+        # soft failures re-raise
+        result = extract_document(url, payload, output_format)
     except BaseException as exc:  # noqa: BLE001 — taxonomy decided soft
         if not (quarantine_soft and is_soft_failure(exc)):
             raise
@@ -212,7 +210,6 @@ def extract_rows_py(
         )
         return rows
     page_count = result.page_count
-    cfg = config.for_type(result.doc_type)  # D4 per-type resolution
     for page in result.pages:
         rows.append(
             {
@@ -223,16 +220,8 @@ def extract_rows_py(
                 "word_count": page.word_count,
                 "page_count": page_count,
                 "elements": _element_rows(page.elements),
-                "tables": (
-                    _table_rows(page.tables)
-                    if cfg.enable_table_structure
-                    else []
-                ),
-                "figures": (
-                    _figure_rows(page.figures)
-                    if cfg.enable_figure_extraction
-                    else []
-                ),
+                "tables": _table_rows(page.tables),
+                "figures": _figure_rows(page.figures),
                 "status": STATUS_SUCCESS,
                 "error_type": None,
                 "error_message": None,
@@ -250,10 +239,9 @@ FLUSH_ROWS = 4096
 FLUSH_BYTES = 64 << 20
 
 
-def _make_extract_batches(config, quarantine_soft: bool = False):
-    """Build the mapInPandas body with the run config in its closure (the
-    reference's broadcast-config analog, D4). Lazy TaskContext import keeps
-    the core Spark-free."""
+def _make_extract_batches(output_format: str, quarantine_soft: bool = False):
+    """Build the mapInPandas body with the run's output format in its
+    closure. Lazy TaskContext import keeps the core Spark-free."""
 
     def _extract_batches(
         batches: Iterator[pd.DataFrame],
@@ -270,7 +258,7 @@ def _make_extract_batches(config, quarantine_soft: bool = False):
             for url, payload in zip(urls, payloads):
                 out.extend(
                     extract_rows_py(
-                        url, payload, pid, config, quarantine_soft
+                        url, payload, pid, output_format, quarantine_soft
                     )
                 )
                 acc_bytes += len(payload) if payload is not None else 0
@@ -284,20 +272,20 @@ def _make_extract_batches(config, quarantine_soft: bool = False):
 
 
 def extract_pages(
-    pages_df: "DataFrame", config=None, quarantine_soft: bool = False
+    pages_df: "DataFrame",
+    output_format: str = "text",
+    quarantine_soft: bool = False,
 ) -> "DataFrame":
     """pages(url, warc_ts, html, text, lang) -> extracted rows.
 
     Projects to (url, html) FIRST so column pruning reaches the scan, then
-    runs the single fused mapInPandas extraction stage. ``config``
-    (ExtractionConfig or per-type ConfigMatrix): STRUCTURE flags never
-    change content bytes, but ``output_format`` selects the content
-    renderer for every doc type (PDF in-extractor, others via
-    core/render.py) — only the default 'text' format is the golden
-    byte-identity surface (core/config.py).
+    runs the single fused mapInPandas extraction stage.
+    ``output_format`` selects the content renderer (PDF in-extractor,
+    others via core/render.py); the default 'text' is the golden
+    byte-identity surface.
     """
     return pages_df.select("url", "html").mapInPandas(
-        _make_extract_batches(config, quarantine_soft),
+        _make_extract_batches(output_format, quarantine_soft),
         schema=EXTRACTED_SCHEMA,
     )
 

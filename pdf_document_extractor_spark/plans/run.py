@@ -75,7 +75,7 @@ def extraction_plan(
     extracted_tbl: SnapshotTable,
     num_partitions: int,
     quarantine_soft: bool = False,
-    config=None,
+    output_format: str = "text",
 ) -> "DataFrame":
     """The job's lazy extraction plan: the pages no committed snapshot of
     ``extracted_tbl`` holds, placed by url hash, through the one fused
@@ -89,7 +89,7 @@ def extraction_plan(
         todo = pages.join(done, "url", "left_anti")
     return extract_pages(
         todo.repartition(num_partitions, "url"),
-        config=config,
+        output_format=output_format,
         quarantine_soft=quarantine_soft,
     )
 
@@ -148,7 +148,7 @@ def run_extraction_job(
     run_id: str,
     num_partitions: int | None = None,
     quarantine_soft: bool = False,
-    config=None,
+    output_format: str = "text",
 ) -> RunResult:
     """Extract the pages no committed run holds and commit them as run_id.
     The plan is lazy: a rerun of a committed run_id runs no extraction."""
@@ -156,7 +156,7 @@ def run_extraction_job(
         num_partitions = spark.sparkContext.defaultParallelism * 2
     extracted = extraction_plan(
         spark, pages, SnapshotTable(warehouse, "extracted"), num_partitions,
-        quarantine_soft=quarantine_soft, config=config,
+        quarantine_soft=quarantine_soft, output_format=output_format,
     )
     return commit_run(extracted, warehouse, run_id)
 
@@ -199,9 +199,11 @@ def main() -> None:
     ap.add_argument(
         "--output-format",
         default="text",
-        help="content renderer for the PDF path: text (default, the "
-        "byte-identity surface), markdown, or any other value for the "
-        "bare newline-join fallback (M4, core/config.py)",
+        help="content renderer (M4): text (default, the byte-identity "
+        "surface) for every doc type; markdown adds '# Page N' headers to "
+        "PDF pages only, other types stay text; html and json re-render "
+        "every doc type; any other value joins PDF page lines with bare "
+        "newlines, other types stay text",
     )
     ap.add_argument(
         "--quarantine-soft",
@@ -211,10 +213,6 @@ def main() -> None:
         "resume anti-join feeds it only the still-unextracted urls)",
     )
     args = ap.parse_args()
-
-    from ..core.config import ExtractionConfig
-
-    config = ExtractionConfig(output_format=args.output_format)
 
     builder = SparkSession.builder.appName(f"extract-{args.run_id}")
     for key, value in RECOMMENDED_CONF.items():
@@ -228,7 +226,7 @@ def main() -> None:
         args.run_id,
         num_partitions=args.num_partitions,
         quarantine_soft=args.quarantine_soft,
-        config=config,
+        output_format=args.output_format,
     )
     print(
         f"run_id={res.run_id} docs_in={res.docs_in} committed={res.committed} "

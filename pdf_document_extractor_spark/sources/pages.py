@@ -600,8 +600,6 @@ def synthesize_pages(docs: "DataFrame", mode: str = "mixed") -> "DataFrame":
     partitions (any at-scale table, or an explicitly repartitioned
     corpus like the bench throughput job).
     """
-    from pyspark.sql import functions as F  # noqa: N812
-
     from ..operators.skew import spread_small_input
 
     docs = spread_small_input(docs)
@@ -634,9 +632,7 @@ def synthesize_pages(docs: "DataFrame", mode: str = "mixed") -> "DataFrame":
                 }
             )
 
-    return docs.mapInPandas(build, schema=PAGES_SCHEMA).withColumn(
-        "warc_ts", F.to_utc_timestamp("warc_ts", "UTC")
-    )
+    return docs.mapInPandas(build, schema=PAGES_SCHEMA)
 
 
 def pages_df_from_fixtures(spark: "SparkSession", docs) -> "DataFrame":

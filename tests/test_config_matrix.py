@@ -1,18 +1,12 @@
-"""M4 output-format renderers + D4 per-type config matrix.
+"""M4 output-format renderers, selected by the one ``output_format`` string.
 
 Reference semantics: page-content templates per DoclingOutputFormatEnum
 (docling_strategy_processor.py:1282-1294 — '# Page {n}' for markdown,
-'Page {n}' for text, bare newline-join for anything else) and per-MIME
-tuned configs (processing_config_manager.py:88-237, matrix test shape at
-tests/services/test_processing_config_manager.py:48-233).
+'Page {n}' for text, bare newline-join for anything else).
 """
 
 from __future__ import annotations
 
-from pdf_document_extractor_spark.core.config import (
-    ConfigMatrix,
-    ExtractionConfig,
-)
 from pdf_document_extractor_spark.core.docx_write import write_docx
 from pdf_document_extractor_spark.core.pdf_extract import extract_pdf
 from pdf_document_extractor_spark.core.pdf_write import (
@@ -21,10 +15,7 @@ from pdf_document_extractor_spark.core.pdf_write import (
     write_pdf,
 )
 from pdf_document_extractor_spark.operators.extract import extract_rows_py
-from pdf_document_extractor_spark.sources.pages import (
-    synth_html_table_payload,
-    synth_pdf_table_payload,
-)
+from pdf_document_extractor_spark.sources.pages import synth_pdf_table_payload
 
 PDF = write_pdf(
     [
@@ -40,7 +31,7 @@ PDF = write_pdf(
 
 
 def test_markdown_format_renders_reference_template():
-    r = extract_pdf(PDF, "h", ExtractionConfig(output_format="markdown"))
+    r = extract_pdf(PDF, "h", "markdown")
     assert r.pages[0].content == "# Page 1\n\nTitle Here\nbody words\n"
     assert r.pages[1].content == "# Page 2\n\npage two body\n"
     # spans index into the RENDERED content
@@ -52,7 +43,7 @@ def test_markdown_format_renders_reference_template():
 def test_text_format_is_default_and_unchanged():
     assert (
         extract_pdf(PDF, "h").pages[0].content
-        == extract_pdf(PDF, "h", ExtractionConfig()).pages[0].content
+        == extract_pdf(PDF, "h", "text").pages[0].content
         == "Page 1\n\nTitle Here\nbody words\n"
     )
 
@@ -61,80 +52,23 @@ def test_unknown_formats_fall_through_to_bare_join():
     # html/json render since round 4; anything OUTSIDE the reference enum
     # still takes the reference's bare "\n"-join branch
     for fmt in ("doctags", "yaml"):
-        r = extract_pdf(PDF, "h", ExtractionConfig(output_format=fmt))
+        r = extract_pdf(PDF, "h", fmt)
         assert r.pages[0].content == "Title Here\nbody words", fmt
         el = r.pages[0].elements[-1]
         assert r.pages[0].content[el.char_start : el.char_end] == el.text
 
 
-def test_config_matrix_gates_structure_per_type():
-    """pdf tables on / html tables off / docx figures+tables off — each
-    doc_type resolves its own flags (reference per-MIME matrix)."""
-    matrix = ConfigMatrix(
-        default=ExtractionConfig(),
-        per_type={
-            "html": ExtractionConfig(enable_table_structure=False),
-            "docx": ExtractionConfig(
-                enable_table_structure=False,
-                enable_figure_extraction=False,
-            ),
-        },
-    )
-    table = [["k", "v"], ["lang", "en"], ["source", "s"]]
-
-    pdf_rows = extract_rows_py(
-        "u1", synth_pdf_table_payload("body text here", "en", "s"),
-        config=matrix,
-    )
-    assert pdf_rows[0]["tables"]  # default config: tables on
-
-    html_rows = extract_rows_py(
-        "u2", synth_html_table_payload(0, "body text here", "en", "s"),
-        config=matrix,
-    )
-    assert html_rows[0]["status"] == "success"
-    assert html_rows[0]["tables"] == []  # html override: tables off
-
-    docx_rows = extract_rows_py(
-        "u3", write_docx(["body text"], tables=[table]), config=matrix
-    )
-    assert docx_rows[0]["status"] == "success"
-    assert docx_rows[0]["tables"] == []
-
-
-def test_config_matrix_output_format_per_type():
-    """The renderer knob also rides the matrix: markdown for pdf only."""
-    matrix = ConfigMatrix(
-        per_type={"pdf": ExtractionConfig(output_format="markdown")}
-    )
-    rows = extract_rows_py("u", PDF, config=matrix)
-    assert rows[0]["content"].startswith("# Page 1\n\n")
-
-
-def test_content_invariance_under_structure_flags():
-    """Structure flags must never change content bytes (golden guard)."""
-    on = extract_rows_py("u", PDF, config=ExtractionConfig())
-    off = extract_rows_py(
-        "u",
-        PDF,
-        config=ExtractionConfig(
-            enable_table_structure=False, enable_figure_extraction=False
-        ),
-    )
-    assert [r["content"] for r in on] == [r["content"] for r in off]
-
-
 def test_html_format_renders_minimal_markup():
     """M4 'html' (reference DoclingOutputFormatEnum.HTML): h1 for header
     lines, p for body, one <table> per detected grid, escaped text."""
-    r = extract_pdf(PDF, "h", ExtractionConfig(output_format="html"))
+    r = extract_pdf(PDF, "h", "html")
     assert r.pages[0].content == "<h1>Title Here</h1>\n<p>body words</p>"
     assert r.pages[1].content == "<p>page two body</p>"
     # a grid table renders as tr/td cells
     tbl = extract_pdf(
         synth_pdf_table_payload("body line", "en", "src1"),
         "h",
-        ExtractionConfig(output_format="html"),
+        "html",
     )
     assert tbl.pages[0].content == (
         "<p>body line</p>\n"
@@ -146,7 +80,7 @@ def test_html_format_renders_minimal_markup():
     esc = extract_pdf(
         write_pdf([PdfPageSpec(shows=[TextShow(72.0, 720.0, 10.0, "a <b> & c")])]),
         "h",
-        ExtractionConfig(output_format="html"),
+        "html",
     )
     assert esc.pages[0].content == "<p>a &lt;b&gt; &amp; c</p>"
 
@@ -156,7 +90,7 @@ def test_json_format_is_canonical_sorted_dump():
     compact dump of the element stream; spans index the bare-join layer."""
     import json
 
-    r = extract_pdf(PDF, "h", ExtractionConfig(output_format="json"))
+    r = extract_pdf(PDF, "h", "json")
     obj = json.loads(r.pages[0].content)
     assert obj["page_number"] == 1
     assert [e["label"] for e in obj["elements"]] == ["header", "body"]
@@ -172,15 +106,6 @@ def test_json_format_is_canonical_sorted_dump():
     )
 
 
-def test_matrix_selects_html_json_per_type():
-    cfg = ConfigMatrix(
-        default=ExtractionConfig(),
-        per_type={"pdf": ExtractionConfig(output_format="json")},
-    )
-    rows = extract_rows_py("u9", PDF, config=cfg)
-    assert rows[0]["content"].startswith('{"elements":')
-
-
 def test_generic_renderers_apply_to_all_doc_types():
     """M4 completion: html/json formats render for EVERY doc type via the
     shared element-stream renderer (PDF keeps its positional in-extractor
@@ -190,9 +115,7 @@ def test_generic_renderers_apply_to_all_doc_types():
     from pdf_document_extractor_spark.core.docx_write import write_pptx
 
     docx = write_docx(["first para", "second para"])
-    rows = extract_rows_py(
-        "u1", docx, config=ExtractionConfig(output_format="json")
-    )
+    rows = extract_rows_py("u1", docx, output_format="json")
     obj = _json.loads(rows[0]["content"])
     assert [e["text"] for e in obj["elements"]] == [
         "first para", "second para",
@@ -202,9 +125,7 @@ def test_generic_renderers_apply_to_all_doc_types():
         assert bare[e["char_start"] : e["char_end"]] == e["text"]
     assert rows[0]["word_count"] == len(rows[0]["content"].split())
 
-    rows = extract_rows_py(
-        "u2", docx, config=ExtractionConfig(output_format="html")
-    )
+    rows = extract_rows_py("u2", docx, output_format="html")
     assert rows[0]["content"] == "<p>first para</p>\n<p>second para</p>"
 
     # html input with a table: table reconstructed from the pinned CSV
@@ -213,9 +134,7 @@ def test_generic_renderers_apply_to_all_doc_types():
         b"<table><tr><th>h</th></tr><tr><td>x</td></tr></table>"
         b"</body></html>"
     )
-    rows = extract_rows_py(
-        "u3", html, config=ExtractionConfig(output_format="html")
-    )
+    rows = extract_rows_py("u3", html, output_format="html")
     assert rows[0]["content"] == (
         "<p>a &amp; b</p>\n<table><tr><td>h</td></tr><tr><td>x</td></tr>"
         "</table>"
@@ -223,9 +142,7 @@ def test_generic_renderers_apply_to_all_doc_types():
 
     # pptx: per-page dump keeps page_no per slide
     pptx = write_pptx([["slide one"], ["slide two"]])
-    rows = extract_rows_py(
-        "u4", pptx, config=ExtractionConfig(output_format="json")
-    )
+    rows = extract_rows_py("u4", pptx, output_format="json")
     pages = [_json.loads(r["content"]) for r in rows]
     assert [p["page_number"] for p in pages] == [1, 2]
     assert pages[1]["elements"][0]["page_no"] == 2
@@ -241,8 +158,6 @@ def test_html_render_survives_giant_table_cell():
         + big
         + "</td></tr></table></body></html>"
     ).encode()
-    rows = extract_rows_py(
-        "u", html, config=ExtractionConfig(output_format="html")
-    )
+    rows = extract_rows_py("u", html, output_format="html")
     assert rows[0]["status"] == "success"
     assert f"<td>{big}</td>" in rows[0]["content"]

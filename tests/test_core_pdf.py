@@ -138,29 +138,6 @@ def test_determinism_same_bytes_same_output():
     assert a == b
 
 
-def test_config_flags_gate_structure_only():
-    """D4 parity: enable_table_structure / enable_figure_extraction gate
-    the structure arrays; content bytes are config-invariant."""
-    from pdf_document_extractor_spark.core.config import ExtractionConfig
-    from pdf_document_extractor_spark.operators.extract import extract_rows_py
-    from pdf_document_extractor_spark.sources.pages import (
-        synth_html_table_payload,
-    )
-
-    payload = synth_html_table_payload(3, "hello body text", "en", "src1")
-    full = extract_rows_py("u", payload)
-    off = extract_rows_py(
-        "u",
-        payload,
-        config=ExtractionConfig(
-            enable_table_structure=False, enable_figure_extraction=False
-        ),
-    )
-    assert full[0]["tables"] and not off[0]["tables"]
-    assert full[0]["content"] == off[0]["content"]
-    assert full[0]["word_count"] == off[0]["word_count"]
-
-
 # ---------------------------------------------------------------------------
 # Text-encoding fidelity (round 3): hex strings, /Encoding, ToUnicode, CID
 # ---------------------------------------------------------------------------

@@ -10,7 +10,7 @@ from pdf_document_extractor_spark.core.dispatch import (
 )
 from pdf_document_extractor_spark.core.docx_write import write_docx
 from pdf_document_extractor_spark.core.office_extract import (
-    extract_docx,
+    extract_ooxml,
     extract_txt,
 )
 from pdf_document_extractor_spark.core.taxonomy import (
@@ -69,7 +69,7 @@ def test_txt_through_dispatch():
 
 def test_docx_paragraphs_and_spans():
     data = write_docx(["first paragraph", "second  one", ""])
-    r = extract_docx(data, "h")
+    r = extract_ooxml(data, "h")
     assert r.doc_type == "docx"
     # empty paragraph dropped; per-paragraph normalize_ws applied
     assert r.pages[0].content == "first paragraph\nsecond one"
@@ -80,7 +80,7 @@ def test_docx_paragraphs_and_spans():
 def test_docx_tables_excluded_from_content():
     rows = [["k", "v"], ["lang", "en"], ["source", "src1"]]
     data = write_docx(["body text"], tables=[rows])
-    r = extract_docx(data, "h")
+    r = extract_ooxml(data, "h")
     page = r.pages[0]
     assert page.content == "body text"
     (t,) = page.tables
@@ -93,14 +93,14 @@ def test_docx_tables_excluded_from_content():
 def test_docx_through_dispatch_matches_direct():
     data = write_docx(["alpha bravo", "charlie"])
     via_dispatch = extract_document("u", data)
-    direct = extract_docx(data, "ignored")
+    direct = extract_ooxml(data, "ignored")
     assert via_dispatch.status == "success"
     assert via_dispatch.pages[0].content == direct.pages[0].content
 
 
 def test_docx_empty_content():
     with pytest.raises(EmptyContentError):
-        extract_docx(write_docx([""]), "h")
+        extract_ooxml(write_docx([""]), "h")
 
 
 def test_docx_malformed_xml_is_corrupt():
@@ -111,7 +111,7 @@ def test_docx_malformed_xml_is_corrupt():
     with zipfile.ZipFile(buf, "w") as zf:
         zf.writestr("word/document.xml", "<w:document><unclosed")
     with pytest.raises(CorruptedFileError):
-        extract_docx(buf.getvalue(), "h")
+        extract_ooxml(buf.getvalue(), "h")
 
 
 def test_docx_determinism():
@@ -169,7 +169,6 @@ def test_odf_extraction_and_taxonomy():
         write_ods,
         write_odt,
     )
-    from pdf_document_extractor_spark.core.office_extract import extract_ooxml
     from pdf_document_extractor_spark.core.taxonomy import (
         CorruptedFileError,
         EmptyContentError,
@@ -233,7 +232,6 @@ def test_epub_extraction_and_taxonomy():
 
     from pdf_document_extractor_spark.core.dispatch import extract_document
     from pdf_document_extractor_spark.core.epub_extract import write_epub
-    from pdf_document_extractor_spark.core.office_extract import extract_ooxml
     from pdf_document_extractor_spark.core.taxonomy import (
         CorruptedFileError,
     )
@@ -307,7 +305,6 @@ def test_fourth_review_fixes_round4():
 
     from pdf_document_extractor_spark.core.dispatch import extract_document
     from pdf_document_extractor_spark.core.odf_extract import _ODF_NS
-    from pdf_document_extractor_spark.core.office_extract import extract_ooxml
 
     # RFC 1952 concatenated members all decompress
     two = gzip.compress(b"<html><body><p>part one ") + gzip.compress(

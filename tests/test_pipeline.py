@@ -429,30 +429,47 @@ def test_stratified_sample_rates_are_independent(spark):
     assert src1_a <= src1_b and len(src1_b) > len(src1_a)
 
 
-def test_job_threads_output_format_to_extraction(spark, tmp_path):
-    """The D4/M4 knob rides the job config end-to-end: a markdown run
-    commits '# Page' content for PDFs while html content is untouched."""
-    from pdf_document_extractor_spark.core.config import ExtractionConfig
+@pytest.mark.parametrize("output_format", ["markdown", "html"])
+def test_job_threads_output_format_to_extraction(
+    spark, tmp_path, output_format
+):
+    """The M4 output format rides the job end-to-end. A markdown run
+    commits '# Page' content for PDFs and leaves html content untouched;
+    an html run commits, for every html doc, the content the pure-Python
+    path renders for that url."""
+    from pdf_document_extractor_spark.operators.extract import extract_rows_py
 
-    pages = pages_df_from_fixtures(spark, gen_scale_corpus(30))
+    docs = gen_scale_corpus(30)
+    pages = pages_df_from_fixtures(spark, docs)
     res = run_extraction_job(
         spark,
         pages,
         str(tmp_path / "wh"),
-        "md-run",
-        config=ExtractionConfig(output_format="markdown"),
+        "fmt-run",
+        output_format=output_format,
     )
     assert res.committed
     rows = SnapshotTable(str(tmp_path / "wh"), "extracted").read(spark)
     pdf_rows = rows.filter("doc_type = 'pdf' AND status = 'success'")
-    assert pdf_rows.count() > 0
-    assert all(
-        r.content.startswith("# Page ") for r in pdf_rows.collect()
-    )
     html_rows = rows.filter("doc_type = 'html' AND status = 'success'")
-    assert not any(
-        r.content.startswith("# Page") for r in html_rows.collect()
-    )
+    assert pdf_rows.count() > 0
+    if output_format == "markdown":
+        assert all(
+            r.content.startswith("# Page ") for r in pdf_rows.collect()
+        )
+        assert not any(
+            r.content.startswith("# Page") for r in html_rows.collect()
+        )
+        return
+    payloads = {d.url: d.html for d in docs}
+    committed = html_rows.select("url", "content").collect()
+    assert committed
+    for r in committed:
+        (want,) = extract_rows_py(
+            r.url, payloads[r.url], output_format="html"
+        )
+        assert r.content == want["content"]
+        assert r.content.startswith("<")
 
 
 def test_content_fallback_chain_m14(spark):

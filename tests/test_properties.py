@@ -186,11 +186,7 @@ def test_renderers_total_on_arbitrary_bytes(data, fmt):
     """The html/json render path must be as total as the default path —
     a renderer crash on a weird-but-extractable document would be a new
     escape hatch from the taxonomy."""
-    from pdf_document_extractor_spark.core.config import ExtractionConfig
-
-    res = extract_document(
-        "https://h.example/x", data, ExtractionConfig(output_format=fmt)
-    )
+    res = extract_document("https://h.example/x", data, output_format=fmt)
     assert res.status in ALLOWED
     if res.status == STATUS_HARD_FAILURE:
         assert res.error_type
