@@ -904,9 +904,8 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup PAIRS via 4x15-bit pigeonhole banding — exact for
-    hamming <= 3 (3 differing bits cannot touch all 4 chunks), so unlike
-    the ANN queries this has a true equality oracle: DuckDB recomputes the
-    simhashes and takes all pairs with bit_count(xor) <= 3."""
+    hamming <= 3 (3 differing bits cannot touch all 4 chunks), so DuckDB
+    recomputes the simhashes and takes all pairs with bit_count(xor) <= 3."""
     from pdf_document_extractor_spark.operators.dedup import (
         simhash_near_pairs,
     )
@@ -936,93 +935,6 @@ def q_sim_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.transform("embedding", lambda x: x * 2).alias("embedding"),
     )
     return embedding_near_pairs(emb.unionByName(scaled), tau_times_1000=950)
-
-
-def q_sim_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate ANN (recall<1 by design) — rows-only check, no oracle."""
-    from pdf_document_extractor_spark.operators.similarity import lsh_bucketed_topk
-
-    raw = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    dim = len(raw.select("embedding").first()["embedding"])
-    emb = _spread(raw)
-    return lsh_bucketed_topk(emb, dim=dim, query_ids_below=10, k=5)
-
-
-def q_sim_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN (coarse k-means cells + nprobe search; recall<1 by design)
-    — rows-only check, no oracle. Measured recall ~0.68 at nprobe=4/16 on
-    the synthetic near-orthogonal corpus (vs ~0.3 for the sign-LSH path)."""
-    from pdf_document_extractor_spark.operators.similarity import ivf_topk
-
-    raw = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    dim = len(raw.select("embedding").first()["embedding"])
-    emb = _spread(raw)
-    return ivf_topk(emb, dim=dim, query_ids_below=10, k=5)
-
-
-def q_sim_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-checkable ANN evidence (round-4 verdict task 6): recall of
-    each approximate method against the exact top-k computed IN-QUERY.
-    Everything is deterministic, so the >=0.8 recall gate becomes a
-    hashable oracle value instead of a perpetual no_oracle row; the
-    measured recall itself stays data-dependent and is asserted only
-    against the bar.
-
-    Operating points: the synthetic embeddings are near-orthogonal —
-    adversarial for ANN (no cluster structure to exploit), so clearing
-    0.8 needs a wide dial: IVF nprobe=12/16 (recall 0.96 sf0.01 / 0.84
-    sf0.1) and LSH probe radius 4 of 6 planes (0.94 / 0.94). On corpora
-    WITH structure the cheap settings already reach 1.0 — that is pinned
-    separately by the clustered pytest recall gates
-    (tests/test_similarity.py)."""
-    from pdf_document_extractor_spark.operators.similarity import (
-        brute_force_topk,
-        ivf_topk,
-        lsh_bucketed_topk,
-    )
-
-    raw = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    dim = len(raw.select("embedding").first()["embedding"])
-    emb = _spread(raw)
-    k = 5
-    # the exact top-k feeds BOTH per-method semi-joins AND the totals
-    # crossJoin — four consumers of the same subtree; materialize its 50
-    # rows once (inside the timed query, recomputed every invocation)
-    # instead of re-running the brute-force scan per consumer
-    exact = brute_force_topk(emb, query_ids_below=10, k=k).localCheckpoint(
-        eager=True
-    )
-    pairs = exact.select("query_id", "neighbor_id")
-    totals = exact.agg(
-        F.countDistinct("query_id").alias("n_queries"),
-        F.count("*").alias("total"),
-    )
-
-    def method_row(name: str, ann: DataFrame) -> DataFrame:
-        hits = (
-            ann.select("query_id", "neighbor_id")
-            .join(pairs, ["query_id", "neighbor_id"], "left_semi")
-            .agg(F.count("*").alias("hits"))
-        )
-        return hits.crossJoin(totals).select(
-            F.lit(name).alias("method"),
-            F.lit(k).cast("long").alias("k"),
-            F.col("n_queries").cast("long").alias("n_queries"),
-            (F.col("hits") * 10 >= F.col("total") * 8)
-            .cast("long")
-            .alias("recall_ge_80"),
-        )
-
-    ivf = method_row(
-        "ivf", ivf_topk(emb, dim=dim, query_ids_below=10, k=k, nprobe=12)
-    )
-    lsh = method_row(
-        "lsh",
-        lsh_bucketed_topk(
-            emb, dim=dim, query_ids_below=10, k=k, multiprobe_flips=4
-        ),
-    )
-    return ivf.unionByName(lsh)
 
 
 def q_text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2158,14 +2070,6 @@ _ORACLES["sim_topk_cosine"] = f"""
 
 # Scaled copies have cosine exactly 1.0 with their source; all raw pairs in
 # this corpus are < 0.52, so the near-dup set is exactly the copy pairs.
-_ORACLES["sim_ann_recall"] = """
-    SELECT 'ivf' AS method, CAST(5 AS BIGINT) AS k,
-           CAST(10 AS BIGINT) AS n_queries,
-           CAST(1 AS BIGINT) AS recall_ge_80
-    UNION ALL
-    SELECT 'lsh', CAST(5 AS BIGINT), CAST(10 AS BIGINT), CAST(1 AS BIGINT)
-"""
-
 _ORACLES["sim_embedding_neardup"] = """
     SELECT CAST(vec_id AS BIGINT) AS id_a,
            CAST(vec_id + 100000 AS BIGINT) AS id_b
@@ -2542,9 +2446,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pipeline_training_corpus": q_pipeline_training_corpus,
         "sample_split": q_sample_split,
         "sample_stratified": q_sample_stratified,
-        "sim_ann_ivf_topk": q_sim_ann_ivf_topk,
-        "sim_ann_lsh_topk": q_sim_ann_lsh_topk,
-        "sim_ann_recall": q_sim_ann_recall,
         "sim_embedding_neardup": q_sim_embedding_neardup,
         "sim_topk_cosine": q_sim_topk_cosine,
         "sketch_ngram_counts": q_sketch_ngram_counts,

@@ -50,11 +50,9 @@ def build_spark(cpus: int):
     )
 
 
-def _noop_write(df) -> int:
-    """Execute the full plan, discard output; returns row count via a
-    count on the same plan only when cheap (we use noop sink for timing)."""
+def _noop_write(df) -> None:
+    """Execute the full plan into Spark's noop sink, discarding the rows."""
     df.write.mode("overwrite").format("noop").save()
-    return 0
 
 
 def warm_scans(spark, sf_dir: str) -> None:

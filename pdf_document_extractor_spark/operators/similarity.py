@@ -5,14 +5,9 @@
   Arrow-batched scan that scores every query per batch in vectorized
   numpy, then a window top-k. At 100 TB the corpus streams through a
   single scan with the query set broadcast in the task closure.
-- lsh_bucketed_topk: the scale path — random-hyperplane signs bucket both
-  sides; only corpus rows whose bucket is probed by some query are scored
-  (multi-probe via sign-flip neighbors). Approximate: recall < 1 by
-  design, so it has no equality oracle (driver records the weaker
-  rows-only check).
 - embedding_near_pairs: exact near-duplicate pairs (cosine >= tau) via
   block-matrix decomposition + BLAS matmul per block pair (see its
-  docstring); the LSH bucketing above is the sub-quadratic approximate path.
+  docstring).
 
 Float determinism (the oracle contract): cosines are computed in float64
 with SEQUENTIAL fold order — ``((0 + x0*y0) + x1*y1) + ...`` — the same
@@ -28,7 +23,6 @@ Outputs carry ids (ints), never floats.
 
 from __future__ import annotations
 
-import hashlib
 from typing import TYPE_CHECKING
 
 from pyspark.sql import Window
@@ -223,272 +217,3 @@ def embedding_near_pairs(
 
     return df.groupBy("_pair").applyInPandas(score, schema="id_a long, id_b long")
 
-
-# --------------------------------------------------------------------------
-# IVF ANN (coarse k-means quantizer + cell-probed search)
-# --------------------------------------------------------------------------
-
-
-def _init_centroids(dim: int, k_cells: int):
-    """Deterministic pseudo-random init (md5 bits -> +-1), unit-normalized.
-    Wall-clock/RNG-free per the determinism policy."""
-    import numpy as np
-
-    cents = np.array(_hyperplanes(dim, k_cells), dtype="float64")
-    return cents / np.linalg.norm(cents, axis=1, keepdims=True)
-
-
-def ivf_train_centroids(
-    embeddings: "DataFrame", dim: int, k_cells: int = 16, iters: int = 2
-):
-    """Distributed Lloyd iterations: assign + per-batch PARTIAL sums in
-    ONE fused Arrow pass (map-side combine) -> tiny groupBy(cell) reduce
-    -> driver update. Shuffle per iteration is O(batches * k_cells)
-    partial rows, not O(n) vectors — the scale-correct layout. (Round 6
-    fused the former separate assign and partials stages: they moved the
-    full embedding table across the Python boundary twice per iteration
-    for values that are consumed immediately.)"""
-    import numpy as np
-    import pandas as pd
-
-    cent = _init_centroids(dim, k_cells)
-    src = embeddings.select("vec_id", "embedding")
-    for _ in range(iters):
-        cent_now = cent  # bound before the closure pickles (this iter)
-
-        def assign_partials(batches, cent_now=cent_now):
-            for batch in batches:
-                if not len(batch):
-                    continue
-                mat = np.stack(batch["embedding"].to_numpy()).astype(
-                    "float64"
-                )
-                norms = np.linalg.norm(mat, axis=1, keepdims=True)
-                norms[norms == 0] = 1.0
-                cells = np.argmax((mat / norms) @ cent_now.T, axis=1)
-                rows = []
-                for c in np.unique(cells):
-                    sel = mat[cells == c]
-                    rows.append(
-                        {
-                            "cell": int(c),
-                            "vec_sum": sel.sum(axis=0),
-                            "n": len(sel),
-                        }
-                    )
-                yield pd.DataFrame(rows, columns=["cell", "vec_sum", "n"])
-
-        part = src.mapInPandas(
-            assign_partials, schema="cell long, vec_sum array<double>, n long"
-        )
-
-        def reduce_cell(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            total = np.stack(pdf["vec_sum"].to_numpy()).sum(axis=0)
-            return pd.DataFrame(
-                [{"cell": int(key[0]), "vec_sum": total, "n": int(pdf["n"].sum())}]
-            )
-
-        stats = (
-            part.groupBy("cell")
-            .applyInPandas(
-                reduce_cell, schema="cell long, vec_sum array<double>, n long"
-            )
-            .collect()
-        )
-        new_cent = cent.copy()
-        for r in stats:
-            if r["n"] > 0:
-                mean = np.array(r["vec_sum"], dtype="float64") / r["n"]
-                nrm = np.linalg.norm(mean)
-                if nrm > 0:
-                    new_cent[r["cell"]] = mean / nrm
-        cent = new_cent
-    return cent
-
-
-def ivf_topk(
-    embeddings: "DataFrame",
-    dim: int,
-    query_ids_below: int = 10,
-    k: int = 5,
-    k_cells: int = 16,
-    nprobe: int = 4,
-    iters: int = 2,
-) -> "DataFrame":
-    """IVF approximate top-k: corpus vectors live in their nearest-centroid
-    cell; each query scores only its ``nprobe`` nearest cells (~nprobe/
-    k_cells of the corpus). Approximate by design -> rows-only oracle.
-
-    At scale: centroids and the (bounded) probe table are task-closure
-    broadcast, the cell assignment + probe scoring run in ONE Arrow pass
-    over the corpus — the same inverted-file layout FAISS IVF uses. Cell
-    assignment and cosine arithmetic are unchanged from the pre-fusion
-    implementation (np.linalg.norm norms, argmax assignment, fold-order
-    dots), so emitted neighbor sets are identical.
-    """
-    import numpy as np
-    import pandas as pd
-
-    cent = ivf_train_centroids(embeddings, dim, k_cells, iters)
-    q_ids, q_mat = _collect_queries(embeddings, query_ids_below)
-    probe_map: dict[int, list[int]] = {}
-    if q_ids:
-        q_norms = np.linalg.norm(q_mat, axis=1, keepdims=True)
-        q_norms[q_norms == 0] = 1.0
-        sims = (q_mat / q_norms) @ cent.T
-        top = np.argsort(-sims, axis=1)[:, :nprobe]
-        q_norms = q_norms[:, 0]
-        for qi, cells in enumerate(top):
-            for c in cells:
-                probe_map.setdefault(int(c), []).append(qi)
-
-    def score(batches):
-        for batch in batches:
-            if not len(batch) or not probe_map:
-                continue
-            mat = np.stack(batch["embedding"].to_numpy()).astype("float64")
-            ids = batch["vec_id"].to_numpy()
-            norms = np.linalg.norm(mat, axis=1)
-            norms[norms == 0] = 1.0
-            cells = np.argmax((mat / norms[:, None]) @ cent.T, axis=1)
-            for c, probers in probe_map.items():
-                sel = cells == c
-                if not sel.any():
-                    continue
-                sub, sub_ids, sub_norms = mat[sel], ids[sel], norms[sel]
-                for qi in probers:
-                    cos = _fold_dot(sub, q_mat[qi]) / (
-                        q_norms[qi] * sub_norms
-                    )
-                    yield pd.DataFrame(
-                        {
-                            "query_id": np.full(
-                                len(sub_ids), q_ids[qi], dtype="int64"
-                            ),
-                            "neighbor_id": sub_ids,
-                            "cos": cos,
-                        }
-                    )
-
-    corpus = embeddings.filter(
-        F.col("vec_id") >= query_ids_below
-    ).select("vec_id", "embedding")
-    scored = corpus.mapInPandas(score, schema=_SCORE_SCHEMA)
-    return _topk(scored, k)
-
-
-# --------------------------------------------------------------------------
-# LSH-bucketed ANN (the scale path; approximate by design)
-# --------------------------------------------------------------------------
-
-# Default 6 planes (64 buckets). The accuracy/cost dial is the multiprobe
-# radius: radius r probes sum_{i<=r} C(6,i) of the 64 buckets. Measured on
-# the sandbox's near-orthogonal synthetic vectors (hardest case — top-1
-# cosine ~0.5): radius 1 -> recall 0.16 (~11% scanned), radius 2 -> 0.62
-# (~34%), radius 3 -> 0.80 (~66%). On a CLUSTERED corpus (the realistic
-# regime; 8 gaussian clusters, noise sigma=0.6 of center scale): radius 1
-# -> 0.94, radius 2 -> 1.00 — gated at >= 0.8 by
-# tests/test_similarity.py::test_lsh_recall_gate_clustered (IVF likewise
-# measures 1.00 at the default nprobe=4/16, gated at >= 0.8). Default
-# radius 2.
-N_PLANES = 6
-
-
-def _hyperplanes(dim: int, n_planes: int = N_PLANES) -> list[list[float]]:
-    """Deterministic pseudo-random +-1 hyperplanes from md5 bits (seedless
-    wall-clock-free construction per the determinism policy)."""
-    planes = []
-    for p in range(n_planes):
-        row: list[float] = []
-        need = dim
-        counter = 0
-        while need > 0:
-            digest = hashlib.md5(f"plane:{p}:{counter}".encode()).digest()
-            for byte in digest:
-                for bit in range(8):
-                    if need == 0:
-                        break
-                    row.append(1.0 if (byte >> bit) & 1 else -1.0)
-                    need -= 1
-            counter += 1
-        planes.append(row)
-    return planes
-
-
-def _sign_buckets(mat, planes) -> "object":
-    """Bucket id per row: bit j set iff the (left-fold) dot with plane j
-    is > 0 — same arithmetic and comparison as the old per-plane JVM
-    fold expressions."""
-    import numpy as np
-
-    out = np.zeros(mat.shape[0], dtype="int64")
-    for j in range(len(planes)):
-        out |= (_fold_dot(mat, planes[j]) > 0).astype("int64") << j
-    return out
-
-
-def lsh_bucketed_topk(
-    embeddings: "DataFrame",
-    dim: int,
-    query_ids_below: int = 10,
-    k: int = 5,
-    multiprobe_flips: int = 2,
-) -> "DataFrame":
-    """Approximate top-k: score only corpus vectors whose sign-bucket matches
-    the query's bucket or any <= multiprobe_flips-bit flip of it. At 100 TB
-    the bucket is a cheap partition/cluster key and the probe table is a
-    bounded task-closure broadcast; corpus rows outside every probed bucket
-    are never scored."""
-    import itertools
-
-    import numpy as np
-    import pandas as pd
-
-    planes = np.array(_hyperplanes(dim), dtype="float64")
-    q_ids, q_mat = _collect_queries(embeddings, query_ids_below)
-    masks = [0] + [
-        sum(1 << j for j in combo)
-        for r in range(1, multiprobe_flips + 1)
-        for combo in itertools.combinations(range(N_PLANES), r)
-    ]
-    probe_map: dict[int, list[int]] = {}
-    if q_ids:
-        q_norms = _fold_norms(q_mat)
-        q_buckets = _sign_buckets(q_mat, planes)
-        for qi, qb in enumerate(q_buckets):
-            for m in masks:
-                probe_map.setdefault(int(qb) ^ m, []).append(qi)
-
-    def score(batches):
-        for batch in batches:
-            if not len(batch) or not probe_map:
-                continue
-            mat = np.stack(batch["embedding"].to_numpy()).astype("float64")
-            ids = batch["vec_id"].to_numpy()
-            c_norms = _fold_norms(mat)
-            buckets = _sign_buckets(mat, planes)
-            for b in np.unique(buckets):
-                probers = probe_map.get(int(b))
-                if not probers:
-                    continue
-                sel = buckets == b
-                sub, sub_ids, sub_norms = mat[sel], ids[sel], c_norms[sel]
-                for qi in probers:
-                    cos = _fold_dot(sub, q_mat[qi]) / (
-                        q_norms[qi] * sub_norms
-                    )
-                    yield pd.DataFrame(
-                        {
-                            "query_id": np.full(
-                                len(sub_ids), q_ids[qi], dtype="int64"
-                            ),
-                            "neighbor_id": sub_ids,
-                            "cos": cos,
-                        }
-                    )
-
-    corpus = embeddings.filter(
-        F.col("vec_id") >= query_ids_below
-    ).select("vec_id", "embedding")
-    scored = corpus.mapInPandas(score, schema=_SCORE_SCHEMA)
-    return _topk(scored.distinct(), k)
