@@ -1232,11 +1232,11 @@ def q_pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_mm_figure_render(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M11 figure image RENDER (round 5 — was PIL-gated 'partial'):
-    scanned PDFs' image XObjects re-encoded as real PNGs via the
-    pure-stdlib codec (core/png_codec.py); byte-exactness witnessed
-    through md5 + length against the pinned 8x8 DeviceGray/Flate
-    writer constants (reference asset_storage_service.py:643-658)."""
+    """M11 figure image RENDER: scanned PDFs' image XObjects re-encoded
+    as real PNGs via the pure-stdlib codec (core/png_codec.py);
+    byte-exactness witnessed through md5 + length against the pinned
+    8x8 DeviceGray/Flate writer constants (reference
+    asset_storage_service.py:643-658)."""
     from pdf_document_extractor_spark.operators.multimodal import (
         render_figures,
     )
@@ -1255,52 +1255,6 @@ def q_mm_figure_render(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("height").cast("long").alias("height"),
         F.length("image").cast("long").alias("png_len"),
         F.md5("image").alias("png_md5"),
-    )
-
-
-def q_mm_media_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing: typed metadata decode of binary media columns.
-
-    Media synthesized deterministically from doc_id (fake containers,
-    operators/multimodal.py) -> metadata is exact doc_id arithmetic."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from pdf_document_extractor_spark.operators.multimodal import (
-        encode_fake_audio,
-        encode_fake_image,
-        media_metadata,
-    )
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for i in batch["doc_id"].to_numpy():
-                i = int(i)
-                if i % 3 == 0:
-                    blob = encode_fake_image(100 + i % 64, 50 + i % 32,
-                                             1 + i % 3)
-                elif i % 3 == 1:
-                    blob = encode_fake_audio(8000 + i, 1000 + i)
-                else:
-                    blob = b"JUNK" + bytes([i % 251])
-                rows.append({"doc_id": i, "media": blob})
-            yield pd.DataFrame(rows)
-
-    # project to doc_id BEFORE the Python stage: synth reads only ids, and
-    # mapInPandas otherwise ships every input column to the worker
-    docs = _docs(spark, sf_dir, spread=False).select("doc_id")
-    media = docs.mapInPandas(synth, schema="doc_id long, media binary")
-    meta = media_metadata(media)
-    return meta.select(
-        "doc_id",
-        "kind",
-        F.col("width").cast("long").alias("width"),
-        F.col("height").cast("long").alias("height"),
-        F.col("channels").cast("long").alias("channels"),
-        F.col("payload_bytes").cast("long").alias("payload_bytes"),
-        F.col("valid").cast("long").alias("valid"),
     )
 
 
@@ -2357,22 +2311,6 @@ _ORACLES["pipeline_clean_corpus"] = """
     FROM ranked WHERE rn = 1
 """
 
-_ORACLES["mm_media_metadata"] = """
-    SELECT doc_id,
-           CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
-                ELSE 'unknown' END AS kind,
-           CAST(CASE doc_id % 3 WHEN 0 THEN 100 + doc_id % 64
-                WHEN 1 THEN 8000 + doc_id ELSE 0 END AS BIGINT) AS width,
-           CAST(CASE doc_id % 3 WHEN 0 THEN 50 + doc_id % 32
-                WHEN 1 THEN 1000 + doc_id ELSE 0 END AS BIGINT) AS height,
-           CAST(CASE doc_id % 3 WHEN 0 THEN 1 + doc_id % 3
-                WHEN 1 THEN 1 ELSE 0 END AS BIGINT) AS channels,
-           CAST(CASE doc_id % 3 WHEN 0 THEN 16 WHEN 1 THEN 8
-                ELSE 5 END AS BIGINT) AS payload_bytes,
-           CAST(CASE WHEN doc_id % 3 = 2 THEN 0 ELSE 1 END AS BIGINT) AS valid
-    FROM documents
-"""
-
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: the composed training-data pipeline on sf0.001
@@ -2441,7 +2379,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "extract_xlsx_cells": q_extract_xlsx_cells,
         "filter_blocklist": q_filter_blocklist,
         "mm_figure_render": q_mm_figure_render,
-        "mm_media_metadata": q_mm_media_metadata,
         "pipeline_clean_corpus": q_pipeline_clean_corpus,
         "pipeline_training_corpus": q_pipeline_training_corpus,
         "sample_split": q_sample_split,

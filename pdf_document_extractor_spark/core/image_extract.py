@@ -3,9 +3,8 @@
 The reference lists png and jpg as first-class MIME types
 (lib/models/mime_type.py:11-12) and validates their dimensions before
 decode (src/utils/image_validator.py:36-150).
-Full pixel decode needs an image codec (optional-PIL paths live in
-operators/multimodal.py), but the DIMENSIONS are header fields readable
-in pure stdlib — so an image document becomes a SUCCESS row whose figure
+No pixels are decoded: the DIMENSIONS are header fields readable in
+pure stdlib, so an image document becomes a SUCCESS row whose figure
 struct carries (format, width, height, payload_bytes) and whose content
 stays empty, instead of a hard failure.
 
@@ -19,7 +18,9 @@ PINNED SEMANTICS:
    Hitting SOS/EOI/EOF without a SOFn -> CorruptedFileError.
 3. Dimension bomb guard BEFORE emitting the row (reference
    image_validator.py:36-150): >8192 px a side or >100 MP raises
-   OversizeDocumentError (a 40-byte file can claim 2^31 px).
+   OversizeDocumentError (a 40-byte file can claim 2^31 px); a zero
+   side raises CorruptedFileError. ``validate_image_dims`` is the one
+   guard: core/png_codec.png_decode applies it before inflating.
 4. Output: one page, page_number=1, content "" (word_count 0), one
    figure ``{url_hash}_figure_0`` labeled 'image' with the metadata
    fields filled; caption None.
@@ -43,7 +44,7 @@ PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
 JPEG_MAGIC = b"\xff\xd8\xff"
 GIF_MAGICS = (b"GIF87a", b"GIF89a")
 
-# Pixel-dimension bomb caps (shared with operators/multimodal.py).
+# Pixel-dimension bomb caps, enforced only by validate_image_dims.
 MAX_IMAGE_PIXELS = 100_000_000
 MAX_IMAGE_DIMENSION = 8192
 
@@ -101,7 +102,7 @@ def gif_dimensions(data: bytes) -> tuple[int, int]:
     return w, h
 
 
-def _validate_dims(width: int, height: int) -> None:
+def validate_image_dims(width: int, height: int) -> None:
     """Pinned rule 3 (reference image_validator.py:36-150)."""
     if width <= 0 or height <= 0:
         raise CorruptedFileError(f"non-positive image dimension {width}x{height}")
@@ -129,7 +130,7 @@ def extract_image(data: bytes, url_hash: str) -> ExtractionResult:
         width, height = gif_dimensions(data)
     else:
         raise CorruptedFileError("not a png/jpeg/gif payload")
-    _validate_dims(width, height)
+    validate_image_dims(width, height)
     figure = FigureRef(
         figure_id=f"{url_hash}_figure_0",
         page_number=1,

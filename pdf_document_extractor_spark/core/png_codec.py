@@ -1,19 +1,20 @@
 """Pure-stdlib PNG codec (round 5 — closes the M11 gap without Pillow).
 
 The reference renders figure images through PIL
-(asset_storage_service.py:643-658); this container ships no imaging
-libraries, so M11 was PIL-gated. PNG, however, needs only zlib: encode
+(asset_storage_service.py:643-658); this package depends on no
+imaging library. PNG, however, needs only zlib: encode
 is filter-0 rows + one deflate stream; decode reuses the SAME per-row
 unfilter the PDF layer already implements for /Predictor streams
 (pdf_extract._unpredict, PNG filters 0-4 per the row byte). This module
 makes the PNG leg of M11 real — 8-bit, non-interlaced, gray / gray+A /
-RGB / RGBA — leaving only JPEG pixel decode behind the optional PIL
-gate.
+RGB / RGBA. JPEG payloads are never decoded: figure render passes them
+through byte-identical.
 
-Bomb discipline matches the rest of the repo: dimensions validated
-BEFORE inflating pixel data, and the deflate stream is inflated with an
-explicit output cap (a 40-byte zip-bombed IDAT must cost a typed
-failure, not an executor OOM).
+Bomb discipline matches the rest of the repo: dimensions validated by
+the one guard (image_extract.validate_image_dims) BEFORE inflating
+pixel data, and the deflate stream is inflated with an explicit output
+cap (a 40-byte zip-bombed IDAT must cost a typed failure, not an
+executor OOM).
 """
 
 from __future__ import annotations
@@ -21,6 +22,7 @@ from __future__ import annotations
 import struct
 import zlib
 
+from .image_extract import validate_image_dims
 from .taxonomy import CorruptedFileError, UnsupportedFormatError
 
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
@@ -71,7 +73,6 @@ def png_decode(blob: bytes) -> tuple[bytes, int, int, int]:
     """PNG bytes -> (raw 8-bit interleaved pixels, width, height,
     channels). Typed degrades: palette/16-bit/interlaced PNGs raise
     UnsupportedFormatError, structural damage CorruptedFileError."""
-    from ..operators.multimodal import validate_image_dims
     from .pdf_extract import _unpredict
 
     if blob[:8] != PNG_SIG:

@@ -182,7 +182,9 @@ def embedding_near_pairs(
         .withColumn("_pair", F.explode(pair_keys))
     )
 
-    def score(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
+    # no type hints: partial ones make applyInPandas warn on every call
+    # that it cannot infer the eval type (grouped map is the default)
+    def score(key, pdf):
         pair = int(key[0])
         blk_i, blk_j = pair // num_blocks, pair % num_blocks
         left = pdf[pdf["_blk"] == blk_i]

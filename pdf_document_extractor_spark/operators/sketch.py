@@ -91,7 +91,9 @@ def cms_ngram_sketch(
         partials, schema="row int, cells array<long>, counts array<long>"
     )
 
-    def merge_row(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    # no type hints: partial ones make applyInPandas warn on every call
+    # that it cannot infer the eval type (grouped map is the default)
+    def merge_row(key, pdf):
         dense = np.zeros(width, dtype=np.int64)
         for cells, counts in zip(pdf["cells"], pdf["counts"]):
             np.add.at(

@@ -1,173 +1,60 @@
-"""Multimodal plumbing tests: fake-container metadata decode, binary
-round-trip through Arrow, stub gating."""
+"""Image path tests: PNG/JPEG/GIF header probes and the one pixel-
+dimension bomb guard (core/image_extract.py), the stdlib PNG codec, the
+figure render (core/pdf_extract + operators/multimodal.render_figures),
+and the core layering rule."""
 
 from __future__ import annotations
 
+import ast
+import pathlib
+
 import pytest
-
-from pdf_document_extractor_spark.operators.multimodal import (
-    decode_image_pixels,
-    decode_media_meta,
-    encode_fake_audio,
-    encode_fake_image,
-    media_metadata,
-    resize_images,
-)
-
-
-def test_decode_meta_roundtrip():
-    img = encode_fake_image(640, 480, 3)
-    meta = decode_media_meta(7, img)
-    assert (meta["kind"], meta["width"], meta["height"], meta["channels"]) == (
-        "image", 640, 480, 3,
-    )
-    aud = encode_fake_audio(16000, 44100)
-    meta = decode_media_meta(8, aud)
-    assert (meta["kind"], meta["width"], meta["height"]) == ("audio", 16000, 44100)
-    assert decode_media_meta(9, b"garbage")["valid"] is False
-    assert decode_media_meta(10, b"")["valid"] is False
-
-
-def test_media_metadata_spark(spark):
-    rows = [
-        (1, encode_fake_image(100, 50, 1)),
-        (2, encode_fake_audio(8000, 1000)),
-        (3, b"JUNKxx"),
-        (4, None),
-    ]
-    df = spark.createDataFrame(rows, schema="doc_id long, media binary")
-    got = {r.doc_id: r for r in media_metadata(df).collect()}
-    assert got[1].kind == "image" and got[1].width == 100
-    assert got[2].kind == "audio" and got[2].height == 1000
-    assert got[3].valid is False and got[4].valid is False
-
-
-def test_resize_binary_roundtrip(spark):
-    rows = [(1, encode_fake_image(640, 480, 3)), (2, b"JUNK")]
-    df = spark.createDataFrame(rows, schema="doc_id long, media binary")
-    out = {r.doc_id: r.resized for r in resize_images(df, (32, 32)).collect()}
-    meta = decode_media_meta(1, bytes(out[1]))
-    assert (meta["width"], meta["height"], meta["channels"]) == (32, 32, 3)
-    assert out[2] is None
-
-
-def test_fake_container_decode_is_real_now():
-    # round-2 change: fake containers decode to pixels without any codec;
-    # NotImplementedError is reserved for real codecs without Pillow
-    arr = decode_image_pixels(encode_fake_image(4, 4))
-    assert arr.shape == (4, 4, 3)
-
-
-# --------------------------------------------------------------------------
-# M11/M12: size probe, pixel decode, bomb guard (PIL paths skip-if-no-PIL)
-# --------------------------------------------------------------------------
-
-
-def test_probe_image_size_fake_container():
-    from pdf_document_extractor_spark.operators.multimodal import (
-        encode_fake_image,
-        probe_image_size,
-    )
-
-    assert probe_image_size(encode_fake_image(120, 80, 3)) == (120, 80)
-
-
-def test_decode_image_pixels_fake_container_shape():
-    from pdf_document_extractor_spark.operators.multimodal import (
-        decode_image_pixels,
-        encode_fake_image,
-    )
-
-    arr = decode_image_pixels(encode_fake_image(12, 8, 3))
-    assert arr.shape == (8, 12, 3)
-    assert arr.dtype.name == "uint8"
-    # deterministic
-    assert (arr == decode_image_pixels(encode_fake_image(12, 8, 3))).all()
 
 
 def test_pixel_bomb_guard():
-    import pytest
-
-    from pdf_document_extractor_spark.core.taxonomy import (
-        OversizeDocumentError,
-    )
-    from pdf_document_extractor_spark.operators.multimodal import (
-        decode_image_pixels,
-        encode_fake_image,
+    from pdf_document_extractor_spark.core.image_extract import (
         validate_image_dims,
+    )
+    from pdf_document_extractor_spark.core.taxonomy import (
+        CorruptedFileError,
+        OversizeDocumentError,
     )
 
     with pytest.raises(OversizeDocumentError):
         validate_image_dims(9000, 10)  # per-side cap (8192)
-    validate_image_dims(8192, 8192)  # 67 MP, both caps satisfied
     with pytest.raises(OversizeDocumentError):
-        decode_image_pixels(encode_fake_image(9000, 10, 1))
+        validate_image_dims(8192, 8192 + 1)
+    validate_image_dims(8192, 8192)  # 67 MP, both caps satisfied
+    with pytest.raises(CorruptedFileError):
+        validate_image_dims(0, 5)  # zero side is corrupt, not a bomb
 
 
-def test_real_codec_gate_narrowed_to_jpeg_pixels():
-    """Since round 5 real PNGs probe AND pixel-decode stdlib-only
-    (core/png_codec.py); the optional-PIL NotImplementedError gate
-    remains only for JPEG PIXEL decode (probes are stdlib for the whole
-    raster trio)."""
-    import pytest
-
-    from pdf_document_extractor_spark.operators.multimodal import (
-        _pil,
-        decode_image_pixels,
-        probe_image_size,
-    )
-
-    import struct
-    import zlib
-
-    def chunk(ctype: bytes, payload: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(payload)) + ctype + payload
-            + struct.pack(">I", zlib.crc32(ctype + payload) & 0xFFFFFFFF)
-        )
-
-    # foreign-assembled RGBA 1x1 (zlib level 9, two IDAT chunks — a
-    # shape our own encoder never writes)
-    idat = zlib.compress(b"\x00\x10\x20\x30\x40", 9)
-    png_1x1 = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", 1, 1, 8, 6, 0, 0, 0))
-        + chunk(b"IDAT", idat[:4])
-        + chunk(b"IDAT", idat[4:])
-        + chunk(b"IEND", b"")
-    )
-    assert probe_image_size(png_1x1) == (1, 1)
-    arr = decode_image_pixels(png_1x1)
-    assert arr.shape == (1, 1, 4)
-    assert arr.tobytes() == b"\x10\x20\x30\x40"
-    # the round-3 hex fixture used here previously turned out to be a
-    # MALFORMED png (IDAT declares 13 bytes, carries 16): the codec must
-    # reject it typed, not decode garbage
-    import pytest as _pytest
-
-    from pdf_document_extractor_spark.core.taxonomy import (
-        CorruptedFileError,
-    )
-
-    bad = bytes.fromhex(
-        "89504e470d0a1a0a0000000d49484452000000010000000108060000001f15c489"
-        "0000000d49444154789c626001000000ffff03000006000557bfabd40000000049"
-        "454e44ae426082"
-    )
-    with _pytest.raises(CorruptedFileError):
-        decode_image_pixels(bad)
-    # minimal JPEG with SOF0 13x7: header probe works without PIL...
-    jpeg = (
-        b"\xff\xd8"
-        + b"\xff\xc0" + b"\x00\x11" + b"\x08" + (7).to_bytes(2, "big")
-        + (13).to_bytes(2, "big") + b"\x03" + b"\x01\x11\x00" * 3
-        + b"\xff\xd9"
-    )
-    assert probe_image_size(jpeg) == (13, 7)
-    # ...pixel decode is the one remaining PIL-gated path
-    if _pil() is None:
-        with pytest.raises(NotImplementedError):
-            decode_image_pixels(jpeg)
+def test_core_imports_no_upper_layer():
+    """core/ is the bottom layer: no module in it may import from
+    operators, plans, streaming or sources (function-level imports
+    included)."""
+    pkg = ["pdf_document_extractor_spark", "core"]
+    upper = {"operators", "plans", "streaming", "sources"}
+    core = pathlib.Path(__file__).resolve().parents[1].joinpath(*pkg)
+    bad = []
+    for path in sorted(core.glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Import):
+                targets = [alias.name for alias in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                # resolve relative imports against pdf_document_extractor_spark.core
+                base = pkg[: len(pkg) + 1 - node.level] if node.level else []
+                if node.module:
+                    targets = [".".join(base + [node.module])]
+                else:
+                    targets = [".".join(base + [a.name]) for a in node.names]
+            else:
+                continue
+            for target in targets:
+                head = target.split(".")[:2]
+                if head[0] == pkg[0] and head[1:] and head[1] in upper:
+                    bad.append(f"{path.name}:{node.lineno} {target}")
+    assert bad == []
 
 
 # ---------------------------------------------------------------------------
@@ -269,13 +156,12 @@ def test_gif_extracts_metadata_since_round4():
 
 def test_png_codec_roundtrip_and_typed_degrades():
     """Pure-stdlib PNG codec (round-5 M11 closure): encode->decode is
-    byte-identity for 8-bit gray/gray+A/RGB/RGBA; palette, 16-bit and
-    interlaced files degrade TYPED; bombs are capped before inflate."""
+    byte-identity for 8-bit gray/gray+A/RGB/RGBA; foreign chunk layouts
+    decode; palette, 16-bit and interlaced files degrade TYPED; bombs
+    and zero dimensions fail before inflate."""
     import random
     import struct
     import zlib
-
-    import pytest
 
     from pdf_document_extractor_spark.core.png_codec import (
         png_decode,
@@ -287,10 +173,52 @@ def test_png_codec_roundtrip_and_typed_degrades():
         UnsupportedFormatError,
     )
 
+    def chunk(ctype, payload):
+        return (
+            struct.pack(">I", len(payload)) + ctype + payload
+            + struct.pack(">I", zlib.crc32(ctype + payload) & 0xFFFFFFFF)
+        )
+
+    def gray_png(width, height, idat):
+        return (
+            b"\x89PNG\r\n\x1a\n"
+            + chunk(b"IHDR", struct.pack(">IIBBBBB", width, height, 8, 0,
+                                         0, 0, 0))
+            + chunk(b"IDAT", idat)
+            + chunk(b"IEND", b"")
+        )
+
     rng = random.Random(11)
     for w, h, c in [(1, 1, 1), (13, 5, 3), (31, 7, 4), (2, 3, 2)]:
         raw = bytes(rng.randrange(256) for _ in range(w * h * c))
         assert png_decode(png_encode(raw, w, h, c)) == (raw, w, h, c)
+    # foreign-assembled RGBA 1x1 (zlib level 9, two IDAT chunks — a
+    # shape our own encoder never writes)
+    idat = zlib.compress(b"\x00\x10\x20\x30\x40", 9)
+    png_1x1 = (
+        b"\x89PNG\r\n\x1a\n"
+        + chunk(b"IHDR", struct.pack(">IIBBBBB", 1, 1, 8, 6, 0, 0, 0))
+        + chunk(b"IDAT", idat[:4])
+        + chunk(b"IDAT", idat[4:])
+        + chunk(b"IEND", b"")
+    )
+    assert png_decode(png_1x1) == (b"\x10\x20\x30\x40", 1, 1, 4)
+    # the round-3 hex fixture is a MALFORMED png (IDAT declares 13
+    # bytes, carries 16): the codec must reject it typed, not decode
+    # garbage
+    bad = bytes.fromhex(
+        "89504e470d0a1a0a0000000d49484452000000010000000108060000001f15c489"
+        "0000000d49444154789c626001000000ffff03000006000557bfabd40000000049"
+        "454e44ae426082"
+    )
+    with pytest.raises(CorruptedFileError):
+        png_decode(bad)
+    # zero dimensions are corrupt (the same guard as image documents),
+    # even when the IDAT holds exactly the filter bytes they imply
+    with pytest.raises(CorruptedFileError, match="non-positive"):
+        png_decode(gray_png(0, 5, zlib.compress(b"\x00" * 5)))
+    with pytest.raises(CorruptedFileError, match="non-positive"):
+        png_decode(gray_png(5, 0, zlib.compress(b"")))
     base = png_encode(b"\x00" * 64, 8, 8, 1)
     # palette color type -> typed unsupported
     pal = bytearray(base)
@@ -311,18 +239,7 @@ def test_png_codec_roundtrip_and_typed_degrades():
     # OVERSIZED IDAT (more rows than IHDR declares) -> typed corrupt,
     # not a silent truncation (found in round-5 self-review: the first
     # implementation never fed unconsumed_tail back to the inflater)
-    def chunk(ctype, payload):
-        return (
-            struct.pack(">I", len(payload)) + ctype + payload
-            + struct.pack(">I", zlib.crc32(ctype + payload) & 0xFFFFFFFF)
-        )
-
-    over = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", 1, 1, 8, 0, 0, 0, 0))
-        + chunk(b"IDAT", zlib.compress((b"\x00" + b"\x07") * 3, 6))
-        + chunk(b"IEND", b"")
-    )
+    over = gray_png(1, 1, zlib.compress((b"\x00" + b"\x07") * 3, 6))
     with pytest.raises(CorruptedFileError, match="larger than declared"):
         png_decode(over)
 
@@ -385,27 +302,6 @@ def test_render_figures_operator(spark):
     assert [r["page_number"] for r in out] == [1, 2]
     raw, w, h, c = png_decode(bytes(out[0]["image"]))
     assert (w, h, c) == (8, 8, 1) and raw == b"\x00" * 64
-
-
-def test_probe_and_decode_handle_real_png_without_pil():
-    """probe_image_size routes PNG/JPEG/GIF through the repo's stdlib
-    header probes; decode_image_pixels decodes real PNG pixels — no
-    NotImplementedError for the raster trio probes (round-5)."""
-    import struct
-
-    from pdf_document_extractor_spark.core.png_codec import png_encode
-    from pdf_document_extractor_spark.operators.multimodal import (
-        decode_image_pixels,
-        probe_image_size,
-    )
-
-    png = png_encode(bytes(range(12)) * 2, 4, 2, 3)
-    assert probe_image_size(png) == (4, 2)
-    arr = decode_image_pixels(png)
-    assert arr.shape == (2, 4, 3)
-    assert bytes(arr.tobytes()) == bytes(range(12)) * 2
-    gif = b"GIF89a" + struct.pack("<HH", 5, 9) + b"\x00\x00\x00\x3b"
-    assert probe_image_size(gif) == (5, 9)
 
 
 def test_figure_render_jpeg_passthrough_and_exotic_metadata_only():
