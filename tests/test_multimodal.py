@@ -154,6 +154,40 @@ def test_gif_extracts_metadata_since_round4():
     assert res.error_type == "OversizeDocumentError"
 
 
+def test_real_codec_gate_narrowed_to_jpeg_pixels():
+    """Real PNGs probe AND pixel-decode stdlib-only (core/png_codec.py),
+    and the probe and the decode agree on the size. JPEG is header-probed
+    only: no JPEG pixel decoder exists, and the one pixel decoder rejects
+    JPEG bytes typed."""
+    from pdf_document_extractor_spark.core.image_extract import (
+        jpeg_dimensions,
+        png_dimensions,
+    )
+    from pdf_document_extractor_spark.core.png_codec import (
+        png_decode,
+        png_encode,
+    )
+    from pdf_document_extractor_spark.core.taxonomy import (
+        CorruptedFileError,
+    )
+
+    raw = bytes(i % 256 for i in range(13 * 7 * 3))
+    png = png_encode(raw, 13, 7, 3)
+    assert png_dimensions(png) == (13, 7)
+    assert png_decode(png) == (raw, 13, 7, 3)
+    # minimal JPEG with SOF0 13x7: the header probe is stdlib...
+    jpeg = (
+        b"\xff\xd8"
+        + b"\xff\xc0" + b"\x00\x11" + b"\x08" + (7).to_bytes(2, "big")
+        + (13).to_bytes(2, "big") + b"\x03" + b"\x01\x11\x00" * 3
+        + b"\xff\xd9"
+    )
+    assert jpeg_dimensions(jpeg) == (13, 7)
+    # ...and its pixels are never decoded
+    with pytest.raises(CorruptedFileError, match="not a png signature"):
+        png_decode(jpeg)
+
+
 def test_png_codec_roundtrip_and_typed_degrades():
     """Pure-stdlib PNG codec (round-5 M11 closure): encode->decode is
     byte-identity for 8-bit gray/gray+A/RGB/RGBA; foreign chunk layouts
