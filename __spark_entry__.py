@@ -824,11 +824,11 @@ def _docs(
     return _spread(df) if spread else df
 
 
-def _docs_with_exact_copies(
-    spark: SparkSession, sf_dir: str, spread: bool = True
-) -> DataFrame:
-    """documents + exact copies (doc_id%4==0 -> id+100000) — dedup corpus."""
-    docs = _docs(spark, sf_dir, spread=spread)
+def _docs_with_exact_copies(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """documents + exact copies (doc_id%4==0 -> id+100000) — dedup corpus.
+    Read unspread: the map side is one codegen md5 per row and the groupBy
+    shuffle already distributes (spread measured 0.77s vs 0.18s raw)."""
+    docs = _docs(spark, sf_dir, spread=False)
     copies = docs.filter(F.col("doc_id") % 4 == 0).select(
         (F.col("doc_id") + 100000).alias("doc_id"), "text"
     )
@@ -849,9 +849,7 @@ def _docs_with_near_copies(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdf_document_extractor_spark.operators.dedup import exact_dedup
 
-    # spread=False: the map side is one codegen md5 per row; the groupBy
-    # shuffle already distributes (spread measured 0.77s vs 0.18s raw)
-    return exact_dedup(_docs_with_exact_copies(spark, sf_dir, spread=False))
+    return exact_dedup(_docs_with_exact_copies(spark, sf_dir))
 
 
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -894,23 +892,6 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = _docs_with_copy_chain(spark, sf_dir)
     edges = ngram_jaccard_pairs(corpus, tau_pct=80).select("id_a", "id_b")
     return dedup_clusters(edges)
-
-
-def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pdf_document_extractor_spark.operators.dedup import simhash64
-
-    return simhash64(_docs(spark, sf_dir))
-
-
-def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup PAIRS via 4x15-bit pigeonhole banding — exact for
-    hamming <= 3 (3 differing bits cannot touch all 4 chunks), so DuckDB
-    recomputes the simhashes and takes all pairs with bit_count(xor) <= 3."""
-    from pdf_document_extractor_spark.operators.dedup import (
-        simhash_near_pairs,
-    )
-
-    return simhash_near_pairs(_docs_with_exact_copies(spark, sf_dir))
 
 
 def q_sim_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1959,46 +1940,6 @@ _ORACLES["dedup_exact"] = """
     FROM base GROUP BY md5(text)
 """
 
-_SIMHASH_TERMS = " + ".join(
-    f"(CASE WHEN sum(((hv >> {j}) & 1) * 2 - 1) > 0 "
-    f"THEN (CAST(1 AS BIGINT) << {j}) ELSE 0 END)"
-    for j in range(60)
-)
-_ORACLES["dedup_simhash"] = f"""
-    WITH tok AS (
-      SELECT doc_id, unnest({_TOKS}) AS w FROM documents
-    ),
-    h AS (
-      SELECT doc_id, ('0x' || substr(md5(w), 1, 15))::BIGINT AS hv FROM tok
-    )
-    SELECT doc_id, CAST({_SIMHASH_TERMS} AS BIGINT) AS simhash
-    FROM h GROUP BY doc_id
-"""
-
-_ORACLES["dedup_simhash_pairs"] = f"""
-    WITH base AS (
-      SELECT doc_id, text FROM documents
-      UNION ALL
-      SELECT doc_id + 100000, text FROM documents WHERE doc_id % 4 = 0
-    ),
-    tok AS (
-      SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\\s+')) AS w
-      FROM base
-    ),
-    h AS (
-      SELECT doc_id, ('0x' || substr(md5(w), 1, 15))::BIGINT AS hv FROM tok
-    ),
-    sims AS (
-      SELECT doc_id, CAST({_SIMHASH_TERMS} AS BIGINT) AS simhash
-      FROM h GROUP BY doc_id
-    )
-    SELECT CAST(a.doc_id AS BIGINT) AS id_a,
-           CAST(b.doc_id AS BIGINT) AS id_b,
-           CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-    FROM sims a JOIN sims b ON a.doc_id < b.doc_id
-    WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-"""
-
 _DOT = (
     "list_sum(list_transform(range(1, len({a}.embedding) + 1), "
     "i -> CAST({a}.embedding[i] AS DOUBLE) * CAST({b}.embedding[i] AS DOUBLE)))"
@@ -2327,8 +2268,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_lines": q_dedup_lines,
         "dedup_minhash_lsh": q_dedup_minhash_lsh,
         "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-        "dedup_simhash": q_dedup_simhash,
-        "dedup_simhash_pairs": q_dedup_simhash_pairs,
         "extract_content_fallback": q_extract_content_fallback,
         "extract_dispatch_mixed": q_extract_dispatch_mixed,
         "extract_doc_assembly": q_extract_doc_assembly,

@@ -1,7 +1,7 @@
 """spark-webtext-extract: a PySpark-native main-content extraction engine.
 
 A brand-new engine (NOT a port) with the per-document extraction semantics of
-MarkEnverus/pdf-document-extractor (see /root/reference), re-expressed
+MarkEnverus/pdf-document-extractor, re-expressed
 Spark-first:
 
 - ``core``      pure-Python extraction core (zero Spark imports) — the same
@@ -10,8 +10,9 @@ Spark-first:
                 by construction.
 - ``fixtures``  deterministic seeded corpus generator (synthetic PDFs/HTML).
 - ``operators`` Spark DataFrame operators: mapInPandas extraction, dedup
-                family (exact / minhash-LSH / simhash / ngram-jaccard /
-                embedding), similarity search, text analysis, skew salting.
+                family (exact / ngram-jaccard with its minhash-LSH scale
+                path / connected-component clusters), embedding similarity
+                search, text analysis, skew salting.
 - ``sources``   pages-table readers/synthesis + snapshot-commit catalog
                 (Iceberg when available, atomic parquet snapshots otherwise).
 - ``plans``     the end-to-end job: resume anti-join -> url-hash

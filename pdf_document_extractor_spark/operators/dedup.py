@@ -1,4 +1,4 @@
-"""Deduplication operators: exact, n-gram Jaccard, MinHash+LSH, SimHash.
+"""Deduplication operators: exact copies and n-gram Jaccard near-copies.
 
 Scale design (the whole point of each variant):
 
@@ -14,8 +14,11 @@ Scale design (the whole point of each variant):
   arrays. Output = verified pairs, so results equal the brute-force oracle
   while touching ~O(n) + collisions instead of O(n^2) (miss probability at
   s>=0.8 is (1-s^2)^16 <= 8.3e-8).
-- simhash64: 60-bit sign-sum fingerprint; near-dup candidates = small
-  Hamming distance (bucketable by 4x15-bit chunks at scale).
+- dedup_clusters: near-dup pairs -> connected components, one keeper
+  (min doc_id) per component.
+
+n-gram Jaccard is the one near-duplicate definition; every operator here
+runs in Catalyst, with no Python worker stage.
 
 All Jaccard thresholds compare with integer arithmetic: 100*inter >=
 tau*union, with union = a+b-inter, written (100+tau)*inter >= tau*(a+b) so
@@ -26,10 +29,7 @@ DuckDB oracles.
 from __future__ import annotations
 
 import random
-from collections.abc import Iterator
 from typing import TYPE_CHECKING
-
-import pandas as pd
 
 from pyspark.sql import functions as F  # noqa: N812
 
@@ -154,8 +154,8 @@ def _pair_jaccard(sh: "DataFrame") -> "DataFrame":
     # hash build avoids two full sorts of the shingle stream (measured
     # ~1.5x on the sf0.1 corpus). This exact all-pairs path is the
     # documented VERIFIER, not the 100-TB scale path (minhash_lsh_pairs
-    # is); a skewed-hot-shingle build partition would need the max_df
-    # guard long before it OOMs a hash table.
+    # is): a hot shingle shared by many docs grows its build partition
+    # quadratically in pairs, which the LSH path never materializes.
     inter = (
         a.join(b.hint("shuffle_hash"), "shingle")
         .filter(F.col("id_a") < F.col("id_b"))
@@ -182,37 +182,12 @@ def _jaccard_at_least(tau_pct: int):
 
 
 def ngram_jaccard_pairs(
-    docs: "DataFrame", tau_pct: int = 80, n: int = 3,
-    max_df: int | None = None,
+    docs: "DataFrame", tau_pct: int = 80, n: int = 3
 ) -> "DataFrame":
     """Exact n-gram Jaccard near-dup pairs: jaccard >= tau_pct/100, compared
-    in integers (:func:`_jaccard_at_least`).
-
-    ``max_df``: the inverted-index self-join is O(sum_s df(s)^2) — one
-    boilerplate shingle shared by 10^6 docs explodes it at 100 TB. Setting
-    max_df drops shingles with document frequency > max_df from the JOIN
-    side only (a standard near-dup mitigation: ubiquitous shingles carry
-    no pair signal, they only connect everything to everything). Sizes and
-    intersections then both count the surviving shingles, so the estimate
-    stays internally consistent. Default None = exact (the oracle path)."""
-    sh = shingle_structs(docs, n)
-    if max_df is not None:
-        hot = (
-            sh.groupBy("shingle")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") > max_df)
-            .select("shingle")
-        )
-        kept = sh.join(F.broadcast(hot), "shingle", "left_anti")
-        # recount sizes so they cover SURVIVING shingles only (the
-        # carried sh_size includes dropped hot shingles)
-        sizes = kept.groupBy("doc_id").agg(
-            F.count("*").alias("_kept_size")
-        )
-        sh = kept.drop("sh_size").join(sizes, "doc_id").withColumnRenamed(
-            "_kept_size", "sh_size"
-        )
-    pairs = _pair_jaccard(sh)
+    in integers (:func:`_jaccard_at_least`). The verifier that
+    :func:`minhash_lsh_pairs` must equal."""
+    pairs = _pair_jaccard(shingle_structs(docs, n))
     return pairs.filter(_jaccard_at_least(tau_pct))
 
 
@@ -422,106 +397,4 @@ def dedup_clusters(pairs: "DataFrame", max_iter: int = 20) -> "DataFrame":
         )
     return labels.select(
         F.col("id").alias("doc_id"), F.col("label").alias("cluster_id")
-    )
-
-
-# --------------------------------------------------------------------------
-# SimHash
-# --------------------------------------------------------------------------
-
-SIMHASH_BITS = 60  # h64 is a 60-bit hash (15 hex chars)
-
-
-def simhash64(docs: "DataFrame") -> "DataFrame":
-    """(doc_id, simhash): bit j set iff sum over tokens of (2*bit_j(h)-1) > 0.
-
-    Token hashing uses the cross-engine md5-prefix h64, computed in an
-    Arrow-batched mapInPandas (the 60-way bit unpack is cheaper in numpy
-    than as 60 Catalyst aggregates; still no per-row Python UDFs).
-    """
-    import hashlib
-
-    import numpy as np
-
-    def batch_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        shifts = np.arange(SIMHASH_BITS, dtype=np.uint64)
-        # token -> 60-bit hash memo, task-lifetime: corpus vocabulary
-        # repeats heavily across documents, so each distinct token is
-        # md5-hashed once per task instead of once per occurrence
-        # (guide §4.5 heavyweight-state amortization; values unchanged)
-        memo: dict[str, int] = {}
-
-        def h(t: str) -> int:
-            v = memo.get(t)
-            if v is None:
-                v = int(hashlib.md5(t.encode("utf-8")).hexdigest()[:15], 16)
-                memo[t] = v
-            return v
-
-        for batch in batches:
-            out_ids = []
-            out_hashes = []
-            for doc_id, text in zip(
-                batch["doc_id"].to_numpy(), batch["text"].to_numpy()
-            ):
-                toks = str(text).split()
-                if not toks:
-                    out_ids.append(doc_id)
-                    out_hashes.append(0)
-                    continue
-                hs = np.fromiter(
-                    (h(t) for t in toks), dtype=np.uint64, count=len(toks)
-                )
-                bits = (hs[:, None] >> shifts[None, :]) & np.uint64(1)
-                votes = (bits.astype(np.int64) * 2 - 1).sum(axis=0)
-                sim = int(((votes > 0).astype(np.uint64) << shifts).sum())
-                out_ids.append(doc_id)
-                out_hashes.append(sim)
-            yield pd.DataFrame({"doc_id": out_ids, "simhash": out_hashes})
-
-    return docs.select("doc_id", "text").mapInPandas(
-        batch_fn, schema="doc_id long, simhash long"
-    )
-
-
-def simhash_near_pairs(docs: "DataFrame", max_hamming: int = 3) -> "DataFrame":
-    """Near-dup pairs by simhash Hamming distance. Scale path: band the 60
-    bits into 4 x 15-bit chunks (pigeonhole: distance<=3 pairs share at
-    least one exact chunk), join per chunk, verify distance."""
-    sim = simhash64(docs)
-    chunks = []
-    for c in range(4):
-        chunks.append(
-            F.struct(
-                F.lit(c).alias("chunk"),
-                (
-                    F.shiftright(F.col("simhash"), c * 15) % F.lit(1 << 15)
-                ).alias("key"),
-            )
-        )
-    banded = sim.select(
-        "doc_id", "simhash", F.explode(F.array(*chunks)).alias("ck")
-    ).select(
-        "doc_id", "simhash",
-        F.col("ck.chunk").alias("chunk"), F.col("ck.key").alias("key"),
-    )
-    a = banded.select(
-        F.col("doc_id").alias("id_a"), F.col("simhash").alias("sim_a"),
-        "chunk", "key",
-    )
-    b = banded.select(
-        F.col("doc_id").alias("id_b"), F.col("simhash").alias("sim_b"),
-        "chunk", "key",
-    )
-    cand = (
-        a.join(b, ["chunk", "key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "sim_a", "sim_b")
-        .distinct()
-    )
-    ham = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
-    return cand.filter(ham <= max_hamming).select(
-        F.col("id_a").cast("long"),
-        F.col("id_b").cast("long"),
-        ham.cast("long").alias("hamming"),
     )

@@ -39,32 +39,3 @@ def test_nonconvergence_raises(spark):
     edges = [(i, i + 1) for i in range(64)]  # diameter 64 > 2^2ish rounds
     with pytest.raises(RuntimeError, match="did not converge"):
         dedup_clusters(_pairs(spark, edges), max_iter=2)
-
-
-def test_ngram_max_df_drops_only_hot_shingles(spark):
-    """max_df guard: identical docs still pair (their rare shingles agree);
-    a shingle shared by every doc stops connecting unrelated docs."""
-    from pdf_document_extractor_spark.operators.dedup import (
-        ngram_jaccard_pairs,
-    )
-
-    # every doc shares the 'common filler words' shingle; docs 1/2 are
-    # identical, the rest unrelated
-    rows = [
-        (1, "common filler words alpha bravo charlie delta"),
-        (2, "common filler words alpha bravo charlie delta"),
-        (3, "common filler words echo foxtrot golf hotel"),
-        (4, "common filler words india juliet kilo lima"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    exact = {(r.id_a, r.id_b) for r in
-             ngram_jaccard_pairs(docs, tau_pct=80).collect()}
-    capped = {(r.id_a, r.id_b) for r in
-              ngram_jaccard_pairs(docs, tau_pct=80, max_df=3).collect()}
-    assert exact == {(1, 2)}
-    assert capped == {(1, 2)}  # guard drops the ubiquitous shingle only
-    # and the pair survives even at max_df=1 (all its distinctive
-    # shingles have df == 2 <= ... pick max_df=2)
-    capped2 = {(r.id_a, r.id_b) for r in
-               ngram_jaccard_pairs(docs, tau_pct=80, max_df=2).collect()}
-    assert capped2 == {(1, 2)}

@@ -4,12 +4,15 @@ The entry gate checks ``dedup_minhash_lsh`` against the DuckDB oracle on
 one corpus. These tests pin the pieces under it: the band keys against a
 pure-Python reference of the MinHash formula (whitespace and short-doc
 edge cases the corpus lacks), LSH output against the exact all-pairs
-path, and that the shingle sets are built once per call.
+path, that the shingle sets are built once per call, and that the dedup
+family runs without a Python worker stage.
 """
 
 from __future__ import annotations
 
+import ast
 import hashlib
+import pathlib
 import random
 import re
 
@@ -20,6 +23,8 @@ from pdf_document_extractor_spark.operators.dedup import (
     MH_B,
     MINHASH_K,
     _minhash_state,
+    dedup_clusters,
+    exact_dedup,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
 )
@@ -94,14 +99,35 @@ def _near_copy_corpus(seed: int = 11) -> list[str]:
     return texts + EDGE_TEXTS
 
 
+# every doc shares the 'common filler words' shingle; docs 1 and 2 are
+# identical, the rest unrelated
+FILLER_ROWS = [
+    (1, "common filler words alpha bravo charlie delta"),
+    (2, "common filler words alpha bravo charlie delta"),
+    (3, "common filler words echo foxtrot golf hotel"),
+    (4, "common filler words india juliet kilo lima"),
+]
+
+
+def _lsh_and_exact(docs, tau: int):
+    return [
+        sorted(tuple(r) for r in pairs(docs, tau_pct=tau).collect())
+        for pairs in (minhash_lsh_pairs, ngram_jaccard_pairs)
+    ]
+
+
 def test_lsh_equals_exact_jaccard_on_near_copies(spark):
     docs = _docs(spark, _near_copy_corpus())
     for tau in (80, 90):
-        lsh = sorted(tuple(r) for r in minhash_lsh_pairs(docs, tau_pct=tau).collect())
-        exact = sorted(tuple(r) for r in ngram_jaccard_pairs(docs, tau_pct=tau).collect())
+        lsh, exact = _lsh_and_exact(docs, tau)
         assert lsh == exact
         # near copies, not only identical ones
         assert any(i < sa + sb - i for _, _, i, sa, sb in lsh), lsh
+    # a shingle shared by every doc does not pair unrelated docs
+    filler = spark.createDataFrame(FILLER_ROWS, "doc_id long, text string")
+    lsh, exact = _lsh_and_exact(filler, 80)
+    assert [(a, b) for a, b, *_ in exact] == [(1, 2)]
+    assert lsh == exact
 
 
 def _executions(spark) -> list[int]:
@@ -133,3 +159,36 @@ def test_lsh_builds_shingle_sets_once(spark):
     # the later executions read the materialized state: no re-hashing
     hashing = {i for i, desc in nodes if "md5(" in desc}
     assert hashing == set(building)
+
+
+PYTHON_NODES = (
+    "MapInPandas", "ArrowEvalPython", "BatchEvalPython", "FlatMapGroupsInPandas",
+)
+
+
+def test_dedup_family_starts_no_python_worker(spark):
+    """A Python stage in dedup costs peak RSS (one was measured at +11-18%
+    on the dedup_near benchmark): every dedup operator stays in Catalyst,
+    and dedup.py imports no pandas/numpy that would invite one back."""
+    docs = _docs(spark, _near_copy_corpus())
+    before = set(_executions(spark))
+    assert exact_dedup(docs).count() > 0
+    assert ngram_jaccard_pairs(docs).count() > 0
+    pairs = minhash_lsh_pairs(docs)
+    assert pairs.count() > 0
+    assert dedup_clusters(pairs).count() > 0
+    nodes = _plan_nodes(spark, sorted(set(_executions(spark)) - before))
+    assert nodes
+    python = [d for _, d in nodes if d.startswith(PYTHON_NODES)]
+    assert python == []
+
+    path = pathlib.Path(__file__).resolve().parents[1].joinpath(
+        "pdf_document_extractor_spark", "operators", "dedup.py"
+    )
+    imported = set()
+    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        if isinstance(node, ast.Import):
+            imported |= {alias.name.split(".")[0] for alias in node.names}
+        elif isinstance(node, ast.ImportFrom) and not node.level:
+            imported.add(node.module.split(".")[0])
+    assert imported & {"pandas", "numpy"} == set()

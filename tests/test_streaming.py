@@ -4,7 +4,6 @@ kafka_background_service.py:130-158)."""
 
 from __future__ import annotations
 
-import pandas as pd
 import pytest
 
 from pdf_document_extractor_spark.fixtures.gen import gen_scale_corpus
@@ -183,152 +182,3 @@ def test_stream_batch_dying_between_flips_recovers_on_restart(
     assert sum(r.doc_count for r in rollups) == 40
     urls = [r.url for r in extracted_tbl.read(spark).filter("page_number <= 1").collect()]
     assert len(urls) == len(set(urls)) == 40
-
-def test_stateful_host_stats_accumulate_across_restarts(spark, tmp_path):
-    """applyInPandasWithState: per-host totals persist in the state store
-    and keep accumulating when the stream restarts on new files."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from pdf_document_extractor_spark.streaming.stateful import (
-        stream_host_stats,
-    )
-
-    docs = gen_scale_corpus(40)
-    pages_dir = str(tmp_path / "pages")
-    out_dir = str(tmp_path / "stats")
-    ckpt = str(tmp_path / "ckpt")
-    _write_pages(spark, docs, pages_dir, n_files=2)
-
-    q1 = stream_host_stats(spark, pages_dir, out_dir, ckpt)
-    q1.awaitTermination(300)
-    first = {
-        r.host: r.docs_total
-        for r in spark.read.parquet(out_dir)
-        .groupBy("host")
-        .agg({"docs_total": "max"})
-        .withColumnRenamed("max(docs_total)", "docs_total")
-        .collect()
-    }
-    assert sum(first.values()) == 40
-
-    # drop more pages for the SAME hosts; totals must accumulate on top of
-    # checkpointed state, not restart from zero
-    more = gen_scale_corpus(25, seed=5)
-    for d in more:
-        d.url = d.url + "?v=2"  # same hosts, new urls
-    extra = pages_df_from_fixtures(spark, more).toPandas()
-    pq.write_table(pa.Table.from_pandas(extra), f"{pages_dir}/extra-0.parquet")
-
-    q2 = stream_host_stats(spark, pages_dir, out_dir, ckpt)
-    q2.awaitTermination(300)
-    final = {
-        r.host: r.docs_total
-        for r in spark.read.parquet(out_dir)
-        .groupBy("host")
-        .agg({"docs_total": "max"})
-        .withColumnRenamed("max(docs_total)", "docs_total")
-        .collect()
-    }
-    assert sum(final.values()) == 65
-    assert all(final[h] >= first[h] for h in first)
-
-def test_windowed_host_counts_with_watermark(spark, tmp_path):
-    """Event-time windows + watermark: closed windows emit once; events
-    later than the watermark horizon are dropped."""
-    import datetime as dt
-
-    from pdf_document_extractor_spark.sources.pages import PAGES_SCHEMA
-    from pdf_document_extractor_spark.streaming.stateful import (
-        stream_windowed_host_counts,
-    )
-
-    pages_dir = tmp_path / "pages"
-    pages_dir.mkdir()
-    out_dir = str(tmp_path / "win")
-    ckpt = str(tmp_path / "ckpt")
-
-    def rows_to_file(rows, name):
-        spark.createDataFrame(rows, schema=PAGES_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(pages_dir))
-
-    def page(host, minute, hour=10, day=1):
-        ts = dt.datetime(2025, 1, day, hour, minute)
-        return (f"https://{host}/d{hour}{minute}", ts, b"<p>x</p>", "", "en")
-
-    # batch 1: 3 docs in window 10:00-10:10 + 1 doc at 12:00 that drags the
-    # watermark to 11:30, closing the 10:00 window
-    rows_to_file(
-        [page("a.com", 1), page("a.com", 5), page("b.com", 9),
-         page("a.com", 0, hour=12)],
-        "f1.parquet",
-    )
-    q = stream_windowed_host_counts(spark, str(pages_dir), out_dir, ckpt)
-    q.awaitTermination(300)
-    got = {
-        (r.win_start.hour, r.win_start.minute, r.host): r.doc_count
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    assert got == {(10, 0, "a.com"): 2, (10, 0, "b.com"): 1}
-
-    # batch 2: a LATE event for the closed 10:00 window (dropped) + one at
-    # 14:00 that closes the 12:00 window
-    rows_to_file(
-        [page("a.com", 3), page("c.com", 0, hour=14)], "f2.parquet"
-    )
-    q2 = stream_windowed_host_counts(spark, str(pages_dir), out_dir, ckpt)
-    q2.awaitTermination(300)
-    got2 = {
-        (r.win_start.hour, r.win_start.minute, r.host): r.doc_count
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    assert got2[(10, 0, "a.com")] == 2  # late event dropped, no re-emit
-    assert got2[(12, 0, "a.com")] == 1  # 12:00 window closed by 14:00 event
-    assert (14, 0, "c.com") not in got2  # still open
-
-def test_stream_dedup_recrawls(spark, tmp_path):
-    """dropDuplicatesWithinWatermark keeps one copy per url across
-    micro-batches (bounded keyed state)."""
-    import datetime as dt
-
-    from pdf_document_extractor_spark.sources.pages import PAGES_SCHEMA
-    from pdf_document_extractor_spark.streaming.stateful import (
-        stream_dedup_recrawls,
-    )
-
-    pages_dir = tmp_path / "pages"
-    pages_dir.mkdir()
-    out_dir = str(tmp_path / "dedup")
-    ckpt = str(tmp_path / "ckpt")
-
-    def write(rows):
-        spark.createDataFrame(rows, schema=PAGES_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(pages_dir))
-
-    t0 = dt.datetime(2025, 1, 1, 10, 0)
-
-    def page(url, minutes):
-        return (
-            url,
-            t0 + dt.timedelta(minutes=minutes),
-            b"<p>x</p>",
-            "",
-            "en",
-        )
-
-    # url A crawled 3x within the hour, B once
-    write([page("https://h/a", 0), page("https://h/a", 5),
-           page("https://h/b", 6), page("https://h/a", 20)])
-    q = stream_dedup_recrawls(spark, str(pages_dir), out_dir, ckpt)
-    q.awaitTermination(300)
-    urls = [r.url for r in spark.read.parquet(out_dir).select("url").collect()]
-    assert sorted(urls) == ["https://h/a", "https://h/b"]
-
-    # second drop: another re-crawl of A within horizon -> still suppressed
-    write([page("https://h/a", 30), page("https://h/c", 31)])
-    q2 = stream_dedup_recrawls(spark, str(pages_dir), out_dir, ckpt)
-    q2.awaitTermination(300)
-    urls = [r.url for r in spark.read.parquet(out_dir).select("url").collect()]
-    assert sorted(urls) == ["https://h/a", "https://h/b", "https://h/c"]
