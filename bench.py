@@ -155,7 +155,8 @@ def warm_python_workers(spark, cpus: int) -> None:
 
 def throughput_job(spark, sf_dir: str, cpus: int, replicas: int) -> dict:
     """The job's own extraction plan (plans.run.extraction_plan) over an
-    empty warehouse: url-hash repartition -> fused extract, noop sink."""
+    empty warehouse, at the job's default placement: url-hash repartition
+    -> fused extract, noop sink."""
     import tempfile
 
     from pdf_document_extractor_spark.plans.run import extraction_plan
@@ -186,7 +187,7 @@ def throughput_job(spark, sf_dir: str, cpus: int, replicas: int) -> dict:
         empty = SnapshotTable(wh, "extracted")
         for _ in range(3):
             t0 = time.perf_counter()
-            _noop_write(extraction_plan(spark, pages, empty, cpus * 2))
+            _noop_write(extraction_plan(spark, pages, empty))
             walls.append(time.perf_counter() - t0)
     wall = min(walls)
     pages.unpersist()

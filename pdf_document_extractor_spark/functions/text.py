@@ -5,6 +5,7 @@ JVM-side — the fast path per the 100 TB mandate) with an EXACT DuckDB SQL
 twin, so the driver's oracle can replay it:
 
   h64(s)      Spark: conv(substring(md5(s),1,15),16,10)::long
+              (h64_sql: the same as SQL text)
               Duck : ('0x' || substr(md5(s),1,15))::bigint
   tokens(s)   Spark: split(trim(s),'\\s+')   Duck: regexp_split_to_array
   integer division everywhere a ratio is emitted (float-free outputs, so
@@ -24,6 +25,11 @@ FP_MOD = 1_000_000_007
 
 def h64(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+
+
+def h64_sql(expr: str) -> str:
+    """h64 as Spark SQL text, for expressions parsed once with F.expr."""
+    return f"CAST(conv(substring(md5({expr}), 1, 15), 16, 10) AS BIGINT)"
 
 
 def h64_duck(expr: str) -> str:

@@ -33,7 +33,7 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import functions as F  # noqa: N812
 
-from ..functions.text import h64, tokens
+from ..functions.text import h64_sql, tokens
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame
@@ -197,35 +197,29 @@ def _minhash_state(docs: "DataFrame", n: int = 3) -> "DataFrame":
     "m0,m1", the mins over the set of (a*h+b) mod P for its LSH_ROWS hash
     functions. h64 is reduced mod P first so a*h stays < 2^62 (ANSI-safe),
     and the hash array is bound once via lambda binding so the md5 work is
-    not re-evaluated per hash function.
+    not re-evaluated per hash function. The keys are one SQL expression,
+    parsed once in the JVM: built from Column objects, its 32 lambdas
+    cost several hundred py4j calls.
 
     The checkpoint is eager, so one job builds the state before any
     branch of the pair plan reads it."""
     base, sh = _shingle_base(docs, n)
-    prime = F.lit(_MH_PRIME)
 
-    def _mh_min(hs, j: int):
-        aj, bj = F.lit(MH_A[j]), F.lit(MH_B[j])
-        return F.array_min(
-            F.transform(hs, lambda h: (aj * h + bj) % prime)
-        ).cast("string")
-
-    def _keys(hs):
-        return F.array(
-            *[
-                F.concat_ws(
-                    ",",
-                    *[_mh_min(hs, band * LSH_ROWS + r) for r in range(LSH_ROWS)],
-                )
-                for band in range(LSH_BANDS)
-            ]
+    def mh_min(j: int) -> str:
+        return (
+            f"CAST(array_min(transform(hs, h -> "
+            f"({MH_A[j]} * h + {MH_B[j]}) % {_MH_PRIME})) AS STRING)"
         )
 
-    keys = F.element_at(
-        F.transform(
-            F.array(F.transform(F.col("sh"), lambda s: h64(s) % prime)), _keys
-        ),
-        1,
+    bands = ", ".join(
+        "concat_ws(',', "
+        + ", ".join(mh_min(band * LSH_ROWS + r) for r in range(LSH_ROWS))
+        + ")"
+        for band in range(LSH_BANDS)
+    )
+    keys = F.expr(
+        f"element_at(transform(array(transform(sh, s -> "
+        f"{h64_sql('s')} % {_MH_PRIME})), hs -> array({bands})), 1)"
     )
     return (
         base.select("doc_id", sh.alias("sh"))
@@ -375,11 +369,14 @@ def dedup_clusters(pairs: "DataFrame", max_iter: int = 20) -> "DataFrame":
                 ).alias("_changed"),
             )
         )
-        # LAZY checkpoint + count: the convergence count IS the action
-        # that materializes (and lineage-truncates) this round's labels,
-        # so each round runs ONE job instead of an eager-checkpoint job
-        # followed by a count job. prop must stay cached until the count
-        # has executed the self-join through it.
+        # LAZY checkpoint + count: the convergence count is the action
+        # that materializes (and lineage-truncates) this round's labels.
+        # Under AQE it runs as two SQL executions: the checkpoint runs
+        # the round's shuffle stages as its own execution (8-10 jobs),
+        # then the count of `_changed` rows is a second, short one (2
+        # jobs) over the checkpointed partitions, with no second
+        # derivation. prop must stay cached until the count has executed
+        # the self-join through it.
         new_labels = jumped.localCheckpoint(eager=False)
         changed = new_labels.filter(F.col("_changed")).count()
         prop.unpersist()

@@ -4,7 +4,9 @@ Pipeline (SURVEY.md §3.1's Spark translation, north rule wiring):
 
   read pages ->
   RESUME anti-join against committed extracted urls (P1/A5) ->
-  url-hash repartition into P partitions (P3) ->
+  url-hash repartition into P partitions, by default one per core slot
+  (spark.sparkContext.defaultParallelism), so the extraction runs in one
+  wave of tasks (P3) ->
   ONE fused mapInPandas extraction (M1-M13, D1-D3, P2) ->
   commit_run: stage `extracted` -> per-partition lineage rows + run
   rollup from the staged files, staged to `lineage` (A1/S7/P4) ->
@@ -20,6 +22,11 @@ Scale notes:
   partition without a host pre-pass; the salt in operators/skew.py is for
   placement keys coarser than the url. Every shuffle partition gets work
   at any P well below the url count.
+- P defaults to one task per core slot: every Python task pays a fixed
+  worker set-up (PySpark's per-task setup_spark_files re-reads the
+  worker's zip imports, ~80 ms on a 4-vCPU host) before its UDF body
+  runs, so a second wave of tasks pays it twice on the critical path.
+  Inputs too large for one wave set num_partitions explicitly.
 - Heavy payloads are bounded by the Arrow batch byte cap in
   RECOMMENDED_CONF (spark.sql.execution.arrow.maxBytesPerBatch): a batch
   closes at the row that reaches the cap, so a task holds at most the cap
@@ -73,13 +80,16 @@ def extraction_plan(
     spark: "SparkSession",
     pages: "DataFrame",
     extracted_tbl: SnapshotTable,
-    num_partitions: int,
+    num_partitions: int | None = None,
     quarantine_soft: bool = False,
     output_format: str = "text",
 ) -> "DataFrame":
     """The job's lazy extraction plan: the pages no committed snapshot of
-    ``extracted_tbl`` holds, placed by url hash, through the one fused
-    extraction stage."""
+    ``extracted_tbl`` holds, placed by url hash into ``num_partitions``
+    partitions (None: one per core slot, ``defaultParallelism``), through
+    the one fused extraction stage."""
+    if num_partitions is None:
+        num_partitions = spark.sparkContext.defaultParallelism
     todo = pages
     prior = extracted_tbl.read(spark)
     if prior is not None:
@@ -152,8 +162,6 @@ def run_extraction_job(
 ) -> RunResult:
     """Extract the pages no committed run holds and commit them as run_id.
     The plan is lazy: a rerun of a committed run_id runs no extraction."""
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism * 2
     extracted = extraction_plan(
         spark, pages, SnapshotTable(warehouse, "extracted"), num_partitions,
         quarantine_soft=quarantine_soft, output_format=output_format,
@@ -195,7 +203,14 @@ def main() -> None:
     ap.add_argument("--pages", required=True, help="pages parquet path")
     ap.add_argument("--warehouse", required=True)
     ap.add_argument("--run-id", required=True)
-    ap.add_argument("--num-partitions", type=int, default=None)
+    ap.add_argument(
+        "--num-partitions",
+        type=int,
+        default=None,
+        help="extraction tasks (url-hash partitions); default one per core "
+        "slot, so the extraction runs in one wave. Set it explicitly for "
+        "inputs too large for one wave",
+    )
     ap.add_argument(
         "--output-format",
         default="text",

@@ -12,6 +12,7 @@ from pdf_document_extractor_spark.functions.text import (
     TOKENS_DUCK,
     h64,
     h64_duck,
+    h64_sql,
     marker_score,
     marker_score_duck,
     stopword_count,
@@ -46,6 +47,8 @@ def test_h64_parity(spark):
         .orderBy("i").collect()
     ]
     assert got == _duck_vals(h64_duck("s"))
+    as_sql = df.selectExpr(f"{h64_sql('s')} AS h").orderBy("i").collect()
+    assert [r.h for r in as_sql] == got
 
 
 def test_marker_and_stopword_parity(spark):

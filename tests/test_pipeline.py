@@ -95,8 +95,9 @@ def test_partial_run_resumes_exactly(spark, tmp_path, corpus_df):
 
 
 def test_placement_is_output_invariant(spark, tmp_path):
-    """The job at 16 partitions and at 2 commits byte-identical extracted
-    content: url-hash placement never changes output."""
+    """The job at 16 partitions, at 2 and at its default commits
+    byte-identical extracted content: url-hash placement never changes
+    output. The default places one task per core slot, each with work."""
     docs = gen_unit_corpus()
     pages = pages_df_from_fixtures(spark, docs)
 
@@ -104,9 +105,16 @@ def test_placement_is_output_invariant(spark, tmp_path):
     run_extraction_job(spark, pages, wh_a, "r1", num_partitions=16)
     wh_b = str(tmp_path / "b")
     run_extraction_job(spark, pages, wh_b, "r1", num_partitions=2)
+    wh_c = str(tmp_path / "c")
+    run_extraction_job(spark, pages, wh_c, "r1")
     a = _contents(SnapshotTable(wh_a, "extracted").read(spark))
     b = _contents(SnapshotTable(wh_b, "extracted").read(spark))
-    assert a == b
+    c = _contents(SnapshotTable(wh_c, "extracted").read(spark))
+    assert a == b == c
+    tasks = SnapshotTable(wh_c, "lineage").read(spark).filter("partition_id >= 0")
+    counts = [r.doc_count for r in tasks.collect()]
+    assert len(counts) == spark.sparkContext.defaultParallelism
+    assert all(n > 0 for n in counts)
 
 
 def _spark_work(spark, fn):
