@@ -372,11 +372,11 @@ def dedup_clusters(pairs: "DataFrame", max_iter: int = 20) -> "DataFrame":
         # LAZY checkpoint + count: the convergence count is the action
         # that materializes (and lineage-truncates) this round's labels.
         # Under AQE it runs as two SQL executions: the checkpoint runs
-        # the round's shuffle stages as its own execution (8-10 jobs),
-        # then the count of `_changed` rows is a second, short one (2
-        # jobs) over the checkpointed partitions, with no second
-        # derivation. prop must stay cached until the count has executed
-        # the self-join through it.
+        # the round's shuffle stages as its own execution, then the
+        # count of `_changed` rows is a second, short one over the
+        # checkpointed partitions, with no second derivation. prop must
+        # stay cached until the count has executed the self-join through
+        # it.
         new_labels = jumped.localCheckpoint(eager=False)
         changed = new_labels.filter(F.col("_changed")).count()
         prop.unpersist()

@@ -5,8 +5,7 @@ Pipeline (SURVEY.md §3.1's Spark translation, north rule wiring):
   read pages ->
   RESUME anti-join against committed extracted urls (P1/A5) ->
   url-hash repartition into P partitions, by default one per core slot
-  (spark.sparkContext.defaultParallelism), so the extraction runs in one
-  wave of tasks (P3) ->
+  per wave, as few waves as keep a task within one scan split (P3) ->
   ONE fused mapInPandas extraction (M1-M13, D1-D3, P2) ->
   commit_run: stage `extracted` -> per-partition lineage rows + run
   rollup from the staged files, staged to `lineage` (A1/S7/P4) ->
@@ -22,11 +21,14 @@ Scale notes:
   partition without a host pre-pass; the salt in operators/skew.py is for
   placement keys coarser than the url. Every shuffle partition gets work
   at any P well below the url count.
-- P defaults to one task per core slot: every Python task pays a fixed
-  worker set-up (PySpark's per-task setup_spark_files re-reads the
-  worker's zip imports, ~80 ms on a 4-vCPU host) before its UDF body
-  runs, so a second wave of tasks pays it twice on the critical path.
-  Inputs too large for one wave set num_partitions explicitly.
+- P defaults to one task per core slot, so an input of up to one scan
+  split (spark.sql.files.maxPartitionBytes) per slot is extracted in one
+  wave: every Python task pays a fixed worker set-up (PySpark's per-task
+  setup_spark_files re-reads the worker's zip imports, ~80 ms on a 4-vCPU
+  host) before its UDF body runs, so a second wave of small tasks pays it
+  twice on the critical path. A larger input gets as many full waves as
+  keep each task within one split, so a task's share (and a retried
+  task's lost work) stays bounded as inputs grow. See default_partitions.
 - Heavy payloads are bounded by the Arrow batch byte cap in
   RECOMMENDED_CONF (spark.sql.execution.arrow.maxBytesPerBatch): a batch
   closes at the row that reaches the cap, so a task holds at most the cap
@@ -76,6 +78,29 @@ class RunResult:
     snapshot_id: int
 
 
+def default_partitions(spark: "SparkSession", pages: "DataFrame") -> int:
+    """The url-hash partition count when the caller sets none: the fewest
+    whole waves of core slots (``defaultParallelism``) whose tasks each
+    hold at most one scan split of ``pages``
+    (``spark.sql.files.maxPartitionBytes``). An input of up to one split
+    per slot is one wave; a larger one gets as many full waves as its
+    splits need, never a part-filled last wave.
+
+    The input size is the optimizer's estimate for the plan's leaves: the
+    files of a parquet scan, the bytes of a cached relation. It is read at
+    planning time, with no Spark action. A leaf Spark cannot size (an
+    RDD-backed DataFrame reports ``spark.sql.defaultSizeInBytes``) counts
+    as empty."""
+    conf = spark._jsparkSession.sessionState().conf()
+    leaves = pages._jdf.queryExecution().optimizedPlan().collectLeaves()
+    unknown = conf.defaultSizeInBytes()
+    sizes = (int(leaves.apply(i).stats().sizeInBytes()) for i in range(leaves.size()))
+    size = sum(s for s in sizes if s < unknown)
+    splits = -(-size // conf.filesMaxPartitionBytes())
+    slots = spark.sparkContext.defaultParallelism
+    return slots * max(1, -(-splits // slots))
+
+
 def extraction_plan(
     spark: "SparkSession",
     pages: "DataFrame",
@@ -86,10 +111,10 @@ def extraction_plan(
 ) -> "DataFrame":
     """The job's lazy extraction plan: the pages no committed snapshot of
     ``extracted_tbl`` holds, placed by url hash into ``num_partitions``
-    partitions (None: one per core slot, ``defaultParallelism``), through
-    the one fused extraction stage."""
+    partitions (None: :func:`default_partitions`), through the one fused
+    extraction stage."""
     if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism
+        num_partitions = default_partitions(spark, pages)
     todo = pages
     prior = extracted_tbl.read(spark)
     if prior is not None:
@@ -208,8 +233,8 @@ def main() -> None:
         type=int,
         default=None,
         help="extraction tasks (url-hash partitions); default one per core "
-        "slot, so the extraction runs in one wave. Set it explicitly for "
-        "inputs too large for one wave",
+        "slot, in as few waves as keep each task within "
+        "spark.sql.files.maxPartitionBytes of input",
     )
     ap.add_argument(
         "--output-format",

@@ -161,6 +161,38 @@ def test_job_runs_no_action_before_the_extraction_write(spark, tmp_path, corpus_
     assert not outside
 
 
+def test_default_placement_follows_scan_splits(spark, tmp_path):
+    """With no partition count the job places one task per core slot
+    until the input spans more scan splits (maxPartitionBytes) than
+    that, then the fewest whole waves of slots that keep a task within
+    one split. The count is read from the plan, with no Spark work; an
+    input Spark cannot size gets one wave."""
+    from pdf_document_extractor_spark.plans.run import default_partitions
+
+    slots = spark.sparkContext.defaultParallelism
+    pages = pages_df_from_fixtures(spark, gen_unit_corpus())
+    assert default_partitions(spark, pages) == slots
+    pages.write.parquet(str(tmp_path / "pages"))
+    size = sum(f.stat().st_size for f in (tmp_path / "pages").glob("*.parquet"))
+    scan = spark.read.parquet(str(tmp_path / "pages"))
+    assert default_partitions(spark, scan) == slots
+
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    # a split count between two whole waves: the last wave is filled up
+    split = size // (2 * slots + 1)
+    spark.conf.set(key, str(split))
+    try:
+        n, plans, outside = _spark_work(
+            spark, lambda: default_partitions(spark, scan)
+        )
+    finally:
+        spark.conf.set(key, old)
+    splits = -(-size // split)
+    assert splits % slots and n == slots * -(-splits // slots) > splits
+    assert not plans and not outside
+
+
 def test_all_done_rerun_publishes_nothing(spark, tmp_path, corpus_df):
     """A new run_id over fully extracted input leaves both manifests
     byte-unchanged and no staged snapshot dir behind."""
