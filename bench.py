@@ -35,16 +35,18 @@ REPLICAS = int(os.environ.get("BENCH_REPLICAS", "20"))
 
 
 def build_spark(cpus: int):
+    """The job's own RECOMMENDED_CONF, then the bench's local settings."""
     from pyspark.sql import SparkSession
 
+    from pdf_document_extractor_spark.plans.run import RECOMMENDED_CONF
+
+    builder = SparkSession.builder.master(f"local[{cpus}]").appName("bench")
+    for key, value in RECOMMENDED_CONF.items():
+        builder = builder.config(key, value)
     return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("bench")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
+        builder.config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "16g")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.sql.session.timeZone", "UTC")
         .getOrCreate()
     )

@@ -19,6 +19,8 @@ Spark-first:
                 repartition -> extract -> staged commit of the extracted
                 rows and their lineage.
 - ``streaming`` Structured Streaming variant of the extraction pass.
+- ``worker``    Python-worker set-up every UDF body of the package runs
+                first (skips re-reading unchanged zip imports per task).
 """
 
 __version__ = "0.1.0"

@@ -32,6 +32,7 @@ import pandas as pd
 
 from ..core.dispatch import extract_document
 from ..core.model import STATUS_SUCCESS
+from ..worker import guard_zip_imports
 
 if TYPE_CHECKING:  # Spark imported lazily so the core stays Spark-free
     from pyspark.sql import DataFrame
@@ -248,6 +249,7 @@ def _make_extract_batches(output_format: str, quarantine_soft: bool = False):
     ) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
 
+        guard_zip_imports()
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else -1
         out: list[dict] = []

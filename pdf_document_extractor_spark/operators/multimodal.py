@@ -15,6 +15,8 @@ from typing import TYPE_CHECKING
 
 import pandas as pd
 
+from ..worker import guard_zip_imports
+
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame
 
@@ -42,6 +44,7 @@ def render_figures(pages: "DataFrame") -> "DataFrame":
     from ..core.taxonomy import ExtractionError
 
     def batch_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        guard_zip_imports()
         for batch in batches:
             rows = []
             for url, blob in zip(

@@ -28,6 +28,8 @@ from typing import TYPE_CHECKING
 from pyspark.sql import Window
 from pyspark.sql import functions as F  # noqa: N812
 
+from ..worker import guard_zip_imports
+
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame
 
@@ -120,6 +122,7 @@ def brute_force_topk(
     q_norms = _fold_norms(q_mat) if q_ids else None
 
     def score(batches):
+        guard_zip_imports()
         for batch in batches:
             if not len(batch) or not q_ids:
                 continue
@@ -185,6 +188,7 @@ def embedding_near_pairs(
     # no type hints: partial ones make applyInPandas warn on every call
     # that it cannot infer the eval type (grouped map is the default)
     def score(key, pdf):
+        guard_zip_imports()
         pair = int(key[0])
         blk_i, blk_j = pair // num_blocks, pair % num_blocks
         left = pdf[pdf["_blk"] == blk_i]

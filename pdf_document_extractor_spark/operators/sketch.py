@@ -30,6 +30,8 @@ from typing import TYPE_CHECKING
 import numpy as np
 import pandas as pd
 
+from ..worker import guard_zip_imports
+
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame, SparkSession
 
@@ -58,6 +60,7 @@ def cms_ngram_sketch(
     ``docs.text`` (duplicates count). Returns the merged numpy array."""
 
     def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        guard_zip_imports()
         # fold the WHOLE partition into one Counter first: grams repeat
         # heavily across documents, and hashing once per distinct gram
         # per partition beats once per distinct gram per document by the
@@ -94,6 +97,7 @@ def cms_ngram_sketch(
     # no type hints: partial ones make applyInPandas warn on every call
     # that it cannot infer the eval type (grouped map is the default)
     def merge_row(key, pdf):
+        guard_zip_imports()
         dense = np.zeros(width, dtype=np.int64)
         for cells, counts in zip(pdf["cells"], pdf["counts"]):
             np.add.at(

@@ -23,10 +23,14 @@ Scale notes:
   at any P well below the url count.
 - P defaults to one task per core slot, so an input of up to one scan
   split (spark.sql.files.maxPartitionBytes) per slot is extracted in one
-  wave: every Python task pays a fixed worker set-up (PySpark's per-task
-  setup_spark_files re-reads the worker's zip imports, ~80 ms on a 4-vCPU
-  host) before its UDF body runs, so a second wave of small tasks pays it
-  twice on the critical path. A larger input gets as many full waves as
+  wave: every Python task pays a fixed cost before its UDF body runs,
+  ~50 ms of scheduling and worker round trip on a 4-vCPU host (the
+  marginal wall of a trivial task on local[1]), so a second wave of small
+  tasks pays it twice on the critical path. The per-task re-read of the
+  worker's zip imports (PySpark's setup_spark_files, ~75 ms) is skipped
+  for unchanged archives once a package UDF body has run in the worker
+  (worker.guard_zip_imports: ~0.05 ms), but a fresh worker's first task
+  still pays it once. A larger input gets as many full waves as
   keep each task within one split, so a task's share (and a retried
   task's lost work) stays bounded as inputs grow. See default_partitions.
 - Heavy payloads are bounded by the Arrow batch byte cap in

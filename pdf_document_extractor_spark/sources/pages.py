@@ -33,6 +33,7 @@ from ..core.pdf_write import (
     write_pdf,
     write_pdf_15,
 )
+from ..worker import guard_zip_imports
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame, SparkSession
@@ -605,6 +606,7 @@ def synthesize_pages(docs: "DataFrame", mode: str = "mixed") -> "DataFrame":
     docs = spread_small_input(docs)
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        guard_zip_imports()
         for batch in batches:
             ids = batch["doc_id"].to_numpy()
             texts = batch["text"].to_numpy()
