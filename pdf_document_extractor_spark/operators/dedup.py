@@ -273,125 +273,95 @@ def dedup_clusters(pairs: "DataFrame", max_iter: int = 20) -> "DataFrame":
 
     Pair output alone under-deduplicates: A~B and B~C must collapse to ONE
     keeper even when A~C missed the threshold. Min-label propagation with
-    POINTER JUMPING: each round every node takes the min label over
-    (itself, its neighbors), then label <- label(label) — the path-halving
-    step that makes rounds O(log diameter) instead of O(diameter). Every
-    round moves only (long, long) rows — no text.
+    POINTER JUMPING: labels start at min(id, min neighbor id); each round
+    every node takes the min label over (itself, its neighbors), then
+    label <- label(label) — the path-halving step that makes rounds
+    O(log diameter) instead of O(diameter). Every round moves only
+    (long, long) rows — no text.
 
-    Cost discipline (the 100-TB shape AND the bench win):
-    - ``sym`` is localCheckpoint'ed ONCE: without it, every action of every
-      round replays the upstream edge plan (for near-dup input that is the
-      whole shingle inverted-index join — the single biggest cost of the
-      old loop).
-    - one action per round: the changed-count rides the checkpointed frame
-      as a flag column, so convergence detection is a count over already-
-      materialized partitions, not a second derivation.
+    Stop rule: after each round, count the edges whose two ends carry
+    different labels, and stop at 0. Labels only fall and each is the id
+    of a node in the same component, so once every edge agrees each
+    component has one label, and that label is its min id. The rule sees
+    convergence in the round that reaches it. Labels that are not final
+    after ``max_iter`` rounds raise.
+
+    Cost discipline (at near-dup sizes the fixed cost of each Spark
+    execution, not the data, is the time):
+    - ``sym`` is built straight from ``pairs`` in one eager
+      localCheckpoint: both orientations of each pair plus a self-loop
+      per end, then distinct. The upstream pair plan (for near-dup input,
+      the whole candidate join) runs once, and every round re-joins
+      materialized rows.
+    - the self-loops make "min over (itself, its neighbors)" one join and
+      one groupBy over ``sym``, with no join back to the old labels; the
+      initial labels are that same groupBy over ``sym`` alone and run
+      inside round 1's execution.
+    - each round is two executions: its eager checkpoint and the edge
+      count. A call whose labels are final after r rounds runs 1 + 2r
+      executions (beyond any of the pair plan's own) before the caller
+      reads the result.
     """
-    edges = pairs.select(
-        F.col("id_a").cast("long"), F.col("id_b").cast("long")
-    )
-    # Materialize the (possibly very expensive) upstream edge plan ONCE,
-    # then symmetrize from the checkpointed rows: a union of the edge
-    # plan with its own swap executes that plan twice (for near-dup
-    # input that is the whole shingle inverted-index join — measured 2x
-    # the edge-derivation wall before this split).
-    half = edges.localCheckpoint(eager=True)
+    a, b = F.col("id_a").cast("long"), F.col("id_b").cast("long")
     sym = (
-        half.unionByName(
-            half.select(
-                F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b")
-            )
+        pairs.select(
+            F.explode(
+                F.array(
+                    F.struct(a.alias("id_a"), b.alias("id_b")),
+                    F.struct(b.alias("id_a"), a.alias("id_b")),
+                    F.struct(a.alias("id_a"), a.alias("id_b")),
+                    F.struct(b.alias("id_a"), b.alias("id_b")),
+                )
+            ).alias("e")
         )
+        .select("e.id_a", "e.id_b")
         .distinct()
         .localCheckpoint(eager=True)  # edges are re-joined every round
     )
-    # Label init fused with the FIRST neighbor-min propagation: the
-    # groupBy(id_a) subsumes the old distinct() (same single exchange)
-    # and seeds label = min(id, min neighbor id), which is exactly what
-    # round 1's propagate half would compute from identity labels — one
-    # full loop round saved for free.
-    labels = (
-        sym.groupBy("id_a")
-        .agg(F.min("id_b").alias("_nb"))
-        .select(
-            F.col("id_a").alias("id"),
-            F.least(F.col("id_a"), F.col("_nb")).alias("label"),
-        )
-        .localCheckpoint(eager=True)
+    labels = sym.groupBy(F.col("id_a").alias("id")).agg(
+        F.min("id_b").alias("label")
     )
-    converged = False
     for _ in range(max_iter):
-        neighbor_min = (
-            sym.join(labels, sym["id_b"] == labels["id"])
-            .groupBy("id_a")
-            .agg(F.min("label").alias("neighbor_label"))
-        )
         prop = (
-            labels.join(
-                neighbor_min, labels["id"] == neighbor_min["id_a"], "left"
-            )
-            .select(
-                labels["id"],
-                F.least(
-                    labels["label"],
-                    F.coalesce("neighbor_label", labels["label"]),
-                ).alias("label"),
-                labels["label"].alias("_old"),
-            )
-            # both sides of the pointer-jump self-join below reference this
-            # plan: without a cache the propagation shuffle runs TWICE per
-            # round (persist is lazy — still one action per round)
-            .persist()
+            sym.join(labels, sym["id_b"] == labels["id"])
+            .groupBy(F.col("id_a").alias("id"))
+            .agg(F.min("label").alias("label"))
         )
         # pointer jump: label <- min(label, label's current label). Labels
         # are node ids, so every label has a row; left join for safety.
-        jumped = (
-            prop.alias("a")
-            .join(
-                prop.select(
-                    F.col("id").alias("_jid"), F.col("label").alias("_jlabel")
-                ).alias("b"),
-                F.col("a.label") == F.col("b._jid"),
-                "left",
-            )
+        jump = prop.select(
+            F.col("id").alias("_jid"), F.col("label").alias("_jlabel")
+        )
+        labels = (
+            prop.join(jump, prop["label"] == jump["_jid"], "left")
             .select(
-                F.col("a.id").alias("id"),
+                prop["id"],
                 F.least(
-                    F.col("a.label"),
-                    F.coalesce(F.col("b._jlabel"), F.col("a.label")),
+                    prop["label"], F.coalesce("_jlabel", prop["label"])
                 ).alias("label"),
-                (
-                    F.least(
-                        F.col("a.label"),
-                        F.coalesce(F.col("b._jlabel"), F.col("a.label")),
-                    )
-                    != F.col("a._old")
-                ).alias("_changed"),
             )
+            .localCheckpoint(eager=True)
         )
-        # LAZY checkpoint + count: the convergence count is the action
-        # that materializes (and lineage-truncates) this round's labels.
-        # Under AQE it runs as two SQL executions: the checkpoint runs
-        # the round's shuffle stages as its own execution, then the
-        # count of `_changed` rows is a second, short one over the
-        # checkpointed partitions, with no second derivation. prop must
-        # stay cached until the count has executed the self-join through
-        # it.
-        new_labels = jumped.localCheckpoint(eager=False)
-        changed = new_labels.filter(F.col("_changed")).count()
-        prop.unpersist()
-        labels = new_labels.drop("_changed")
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        # silently returning partial labels would under-deduplicate with
-        # no signal; a >max_iter-diameter component is a data smell the
-        # caller must see (raise max_iter, or pre-split giant components)
-        raise RuntimeError(
-            f"dedup_clusters did not converge in {max_iter} rounds — a "
-            f"component has diameter > {max_iter}"
-        )
-    return labels.select(
-        F.col("id").alias("doc_id"), F.col("label").alias("cluster_id")
+        if _split_edges(sym, labels) == 0:
+            return labels.select(
+                F.col("id").alias("doc_id"), F.col("label").alias("cluster_id")
+            )
+    # silently returning partial labels would under-deduplicate with no
+    # signal; the caller must see it (raise max_iter, or pre-split giant
+    # components)
+    raise RuntimeError(
+        f"dedup_clusters did not converge in {max_iter} rounds: labels "
+        f"were not final after round {max_iter}"
+    )
+
+
+def _split_edges(sym: "DataFrame", labels: "DataFrame") -> int:
+    """Edges of ``sym`` whose two ends carry different labels."""
+    la = labels.select(F.col("id").alias("id_a"), F.col("label").alias("_la"))
+    lb = labels.select(F.col("id").alias("id_b"), F.col("label").alias("_lb"))
+    return (
+        sym.join(la, "id_a")
+        .join(lb, "id_b")
+        .filter(F.col("_la") != F.col("_lb"))
+        .count()
     )
