@@ -1067,31 +1067,6 @@ def q_pipeline_training_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact_dedup(kept).select("text_md5", "keeper_id", "dup_count")
 
 
-def q_sketch_ngram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-min sketch corpus bigram frequencies (the 'novel sketch'
-    operator): fixed-size mergeable state instead of shuffling the gram
-    stream. Probes = the first bigram of each doc with doc_id < 10; at
-    the gate width the sketch is collision-free, so estimates EQUAL true
-    counts and the DuckDB oracle checks them exactly."""
-    from pdf_document_extractor_spark.operators.sketch import (
-        cms_estimates_df,
-        cms_ngram_sketch,
-    )
-
-    docs = _docs(spark, sf_dir)
-    toks = F.split(F.trim("text"), r"\s+")
-    probes = [
-        r["probe"]
-        for r in docs.filter(
-            (F.col("doc_id") < 10) & F.col("text").isNotNull()
-        )
-        .select(F.array_join(F.slice(toks, 1, 2), " ").alias("probe"))
-        .collect()
-    ]
-    sketch = cms_ngram_sketch(docs, n=2)
-    return cms_estimates_df(spark, sketch, probes)
-
-
 def q_dedup_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4-style global exact-line dedup (Raffel et al. 2020 §2.2): corpus
     of two-line docs + copies sharing line 2 — the copy keeps only its
@@ -2155,23 +2130,6 @@ _ORACLES["pipeline_training_corpus"] = f"""
     FROM q GROUP BY md5(text)
 """
 
-_ORACLES["sketch_ngram_counts"] = f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-    probes AS (
-      SELECT DISTINCT array_to_string(toks[1:2], ' ') AS term
-      FROM t WHERE doc_id < 10
-    ),
-    grams AS (
-      SELECT unnest(list_transform(range(1, len(toks)),
-             i -> toks[i] || ' ' || toks[i+1])) AS term
-      FROM t WHERE len(toks) >= 2
-    )
-    SELECT p.term AS term,
-           CAST(count(g.term) AS BIGINT) AS est_count
-    FROM probes p LEFT JOIN grams g ON g.term = p.term
-    GROUP BY p.term
-"""
-
 _ORACLES["dedup_lines"] = f"""
     WITH two AS (
       SELECT doc_id,
@@ -2324,7 +2282,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sample_stratified": q_sample_stratified,
         "sim_embedding_neardup": q_sim_embedding_neardup,
         "sim_topk_cosine": q_sim_topk_cosine,
-        "sketch_ngram_counts": q_sketch_ngram_counts,
         "text_chunking": q_text_chunking,
         "text_fingerprint": q_text_fingerprint,
         "text_language_id": q_text_language_id,

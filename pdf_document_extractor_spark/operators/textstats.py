@@ -22,6 +22,7 @@ from ..functions.text import (
     LANG_MARKERS,
     h64,
     marker_score,
+    stopword_count,
     tokens,
 )
 
@@ -73,13 +74,14 @@ def quality_scores(docs: "DataFrame") -> "DataFrame":
     mean_word_len_millis = (1000*chars) div words;
     stopword_ratio_millis = (1000*stopword_tokens) div words;
     is_quality = plausible-document heuristic over those signals."""
-    df = docs.select(
+    df = docs.withColumn("_toks", tokens(F.col("text"))).select(
         "doc_id",
-        F.size(tokens(F.col("text"))).cast("long").alias("word_count"),
+        F.size("_toks").cast("long").alias("word_count"),
         F.length(F.replace(F.col("text"), F.lit(" "), F.lit("")))
         .cast("long")
         .alias("char_count"),
-        stopword_count_expr().alias("stop_count"),
+        # long, so that stop_count * 1000 cannot overflow int
+        stopword_count("_toks").cast("long").alias("stop_count"),
     )
     return df.select(
         "doc_id",
@@ -94,16 +96,6 @@ def quality_scores(docs: "DataFrame") -> "DataFrame":
         )
         .cast("long")
         .alias("is_quality"),
-    )
-
-
-def stopword_count_expr():
-    from ..functions.text import _array_lit, EN_STOPWORDS
-
-    stops = _array_lit(EN_STOPWORDS)
-    return F.expr(
-        f"cast(size(filter(split(trim(text), '\\\\s+'), "
-        f"t -> array_contains({stops}, t))) as long)"
     )
 
 

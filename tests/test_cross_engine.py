@@ -1,7 +1,11 @@
 """Cross-engine primitive parity: the functions/text.py Spark expressions
-and their DuckDB twins must agree value-for-value — these primitives are
-what every oracle in __spark_entry__.py is built from, so a drift here
-would silently skew every gate query."""
+that the text operators are built from (h64, tokens, marker_score,
+stopword_count) must agree value-for-value with their DuckDB twins.
+
+The twins are written independently of the oracles in
+__spark_entry__.py, which carry their own SQL text. So this pins the
+product's expressions on edge inputs the gate corpora may lack (empty
+text, tabs, padding), without tying any oracle to the code it checks."""
 
 from __future__ import annotations
 

@@ -5,7 +5,7 @@ one corpus. These tests pin the pieces under it: the band keys against a
 pure-Python reference of the MinHash formula (whitespace and short-doc
 edge cases the corpus lacks), LSH output against the exact all-pairs
 path, that the shingle sets are built once per call, and that the dedup
-family runs without a Python worker stage.
+family and the text family run without a Python worker stage.
 """
 
 from __future__ import annotations
@@ -181,9 +181,14 @@ def test_dedup_family_starts_no_python_worker(spark):
     assert nodes
     python = [d for _, d in nodes if d.startswith(PYTHON_NODES)]
     assert python == []
+    assert _top_level_imports("dedup") & {"pandas", "numpy"} == set()
 
+
+def _top_level_imports(operator_module: str) -> set[str]:
+    """Top-level package names an ``operators/`` module imports
+    absolutely (relative imports of the package itself excluded)."""
     path = pathlib.Path(__file__).resolve().parents[1].joinpath(
-        "pdf_document_extractor_spark", "operators", "dedup.py"
+        "pdf_document_extractor_spark", "operators", f"{operator_module}.py"
     )
     imported = set()
     for node in ast.walk(ast.parse(path.read_text(), str(path))):
@@ -191,4 +196,59 @@ def test_dedup_family_starts_no_python_worker(spark):
             imported |= {alias.name.split(".")[0] for alias in node.names}
         elif isinstance(node, ast.ImportFrom) and not node.level:
             imported.add(node.module.split(".")[0])
-    assert imported & {"pandas", "numpy"} == set()
+    return imported
+
+
+def test_text_family_starts_no_python_worker(spark):
+    """The text operators (stats, sampling, chunking, cleaning) are all
+    Catalyst: collecting every output column runs no Python plan node,
+    and none of their modules imports pandas/numpy."""
+    from pdf_document_extractor_spark.operators.chunking import chunk_documents
+    from pdf_document_extractor_spark.operators.cleaning import (
+        blocklist_filter,
+        line_dedup_c4,
+        redact_pii,
+    )
+    from pdf_document_extractor_spark.operators.sampling import (
+        contamination_flags,
+        sample_hash,
+        stratified_sample,
+        train_val_split,
+    )
+    from pdf_document_extractor_spark.operators.textstats import (
+        fingerprints,
+        language_id,
+        quality_scores,
+        repetition_scores,
+        token_stats,
+    )
+
+    texts = _near_copy_corpus() + ["mail a@b.io from 10.0.0.1\nthe line"]
+    docs = spark.createDataFrame(
+        [(i, t, f"https://www.h{i % 4}.example/{i}", f"s{i % 2}")
+         for i, t in enumerate(texts)],
+        "doc_id long, text string, url string, source string",
+    )
+    hosts = spark.createDataFrame([("h1.example",)], "host string")
+    words = spark.createDataFrame([("w7",)], "word string")
+    outputs = [
+        op(docs)
+        for op in (token_stats, language_id, quality_scores,
+                   repetition_scores, fingerprints, chunk_documents,
+                   line_dedup_c4, redact_pii)
+    ] + [
+        train_val_split(docs, "doc_id"),
+        sample_hash(docs, "doc_id", 50),
+        stratified_sample(docs, "doc_id", "source", {"s0": 50, "s1": 100}),
+        contamination_flags(docs, docs.filter("doc_id < 3").select("text")),
+        blocklist_filter(docs, hosts, words),
+    ]
+    before = set(_executions(spark))
+    for out in outputs:
+        assert out.collect()
+    nodes = _plan_nodes(spark, sorted(set(_executions(spark)) - before))
+    assert nodes
+    python = [d for _, d in nodes if d.startswith(PYTHON_NODES)]
+    assert python == []
+    for module in ("textstats", "sampling", "chunking", "cleaning"):
+        assert _top_level_imports(module) & {"pandas", "numpy"} == set(), module
