@@ -793,35 +793,27 @@ def q_extract_html_figures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Training-data pipeline queries (dedup / similarity / text analysis)
+# Training-data pipeline queries (dedup / text analysis)
 # ---------------------------------------------------------------------------
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Input-skew guard for the single-file driver tables (guide §2.5):
-    spreads a one-partition scan across cores so tokenize/shingle/Arrow
-    map stages parallelize; no-op on any input that already has enough
-    partitions (every at-scale table)."""
-    from pdf_document_extractor_spark.operators.skew import (
-        spread_small_input,
-    )
-
-    return spread_small_input(df)
 
 
 def _docs(
     spark: SparkSession, sf_dir: str, spread: bool = True
 ) -> DataFrame:
     """documents reader. ``spread`` (default) parallelizes the one-file
-    scan for consumers with heavy map-side work (Python stages, shingle
-    construction, hash streams); pass False for trivial-map consumers —
-    measured on sf0.1, the probe + extra exchange costs such queries
-    0.2–0.6 s for no distribution benefit (their first shuffle or narrow
-    codegen pipeline already does the work cheaply)."""
+    scan for consumers with heavy map-side work (shingle construction,
+    hash streams); pass False for trivial-map consumers — measured on
+    sf0.1, the probe + extra exchange costs such queries 0.2–0.6 s for no
+    distribution benefit (their first shuffle or narrow codegen pipeline
+    already does the work cheaply)."""
+    from pdf_document_extractor_spark.operators.skew import (
+        spread_small_input,
+    )
+
     df = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
     )
-    return _spread(df) if spread else df
+    return spread_small_input(df) if spread else df
 
 
 def _docs_with_exact_copies(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -892,30 +884,6 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = _docs_with_copy_chain(spark, sf_dir)
     edges = ngram_jaccard_pairs(corpus, tau_pct=80).select("id_a", "id_b")
     return dedup_clusters(edges)
-
-
-def q_sim_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pdf_document_extractor_spark.operators.similarity import brute_force_topk
-
-    emb = _spread(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
-    return brute_force_topk(emb, query_ids_below=10, k=5)
-
-
-def q_sim_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pdf_document_extractor_spark.operators.similarity import (
-        embedding_near_pairs,
-    )
-
-    emb = _spread(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-            "vec_id", "embedding"
-        )
-    )
-    scaled = emb.filter(F.col("vec_id") % 10 == 0).select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.transform("embedding", lambda x: x * 2).alias("embedding"),
-    )
-    return embedding_near_pairs(emb.unionByName(scaled), tau_times_1000=950)
 
 
 def q_text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1215,7 +1183,7 @@ def q_mm_figure_render(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Oracle SQL (DuckDB; views pre-registered: documents, embeddings, ...)
+# Oracle SQL (DuckDB; the one pre-registered view is documents)
 # ---------------------------------------------------------------------------
 
 _WORDS = "CAST(length(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT)"
@@ -1915,37 +1883,6 @@ _ORACLES["dedup_exact"] = """
     FROM base GROUP BY md5(text)
 """
 
-_DOT = (
-    "list_sum(list_transform(range(1, len({a}.embedding) + 1), "
-    "i -> CAST({a}.embedding[i] AS DOUBLE) * CAST({b}.embedding[i] AS DOUBLE)))"
-)
-_ORACLES["sim_topk_cosine"] = f"""
-    WITH nq AS (
-      SELECT vec_id, embedding,
-             sqrt({_DOT.format(a='embeddings', b='embeddings')}) AS nrm
-      FROM embeddings
-    ),
-    scored AS (
-      SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             {_DOT.format(a='q', b='c')} / (q.nrm * c.nrm) AS cos
-      FROM nq q JOIN nq c ON q.vec_id < 10 AND c.vec_id >= 10
-    )
-    SELECT CAST(query_id AS BIGINT) AS query_id,
-           CAST(row_number() OVER (PARTITION BY query_id
-                ORDER BY cos DESC, neighbor_id ASC) AS BIGINT) AS rank,
-           CAST(neighbor_id AS BIGINT) AS neighbor_id
-    FROM scored
-    QUALIFY rank <= 5
-"""
-
-# Scaled copies have cosine exactly 1.0 with their source; all raw pairs in
-# this corpus are < 0.52, so the near-dup set is exactly the copy pairs.
-_ORACLES["sim_embedding_neardup"] = """
-    SELECT CAST(vec_id AS BIGINT) AS id_a,
-           CAST(vec_id + 100000 AS BIGINT) AS id_b
-    FROM embeddings WHERE vec_id % 10 = 0
-"""
-
 _ORACLES["text_token_stats"] = f"""
     SELECT doc_id,
            CAST(len({_TOKS}) AS BIGINT) AS ws_tokens,
@@ -2280,8 +2217,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pipeline_training_corpus": q_pipeline_training_corpus,
         "sample_split": q_sample_split,
         "sample_stratified": q_sample_stratified,
-        "sim_embedding_neardup": q_sim_embedding_neardup,
-        "sim_topk_cosine": q_sim_topk_cosine,
         "text_chunking": q_text_chunking,
         "text_fingerprint": q_text_fingerprint,
         "text_language_id": q_text_language_id,

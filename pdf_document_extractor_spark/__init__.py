@@ -11,8 +11,8 @@ Spark-first:
 - ``fixtures``  deterministic seeded corpus generator (synthetic PDFs/HTML).
 - ``operators`` Spark DataFrame operators: mapInPandas extraction, dedup
                 family (exact / ngram-jaccard with its minhash-LSH scale
-                path / connected-component clusters), embedding similarity
-                search, text analysis, skew salting.
+                path / connected-component clusters), text analysis, skew
+                salting.
 - ``sources``   pages-table readers/synthesis + snapshot-commit catalog
                 (Iceberg when available, atomic parquet snapshots otherwise).
 - ``plans``     the end-to-end job: resume anti-join -> url-hash

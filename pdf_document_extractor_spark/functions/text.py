@@ -1,8 +1,8 @@
 """Cross-engine deterministic text primitives.
 
 Everything here is a pure Catalyst expression (whole-stage codegen,
-JVM-side — the fast path per the 100 TB mandate) with an EXACT DuckDB SQL
-twin, so the driver's oracle can replay it:
+JVM-side — the fast path per the 100 TB mandate) that DuckDB SQL computes
+exactly, so the driver's oracle can replay it:
 
   h64(s)      Spark: conv(substring(md5(s),1,15),16,10)::long
               (h64_sql: the same as SQL text)
@@ -10,6 +10,9 @@ twin, so the driver's oracle can replay it:
   tokens(s)   Spark: split(trim(s),'\\s+')   Duck: regexp_split_to_array
   integer division everywhere a ratio is emitted (float-free outputs, so
   value hashes can never drift on formatting/precision).
+
+The DuckDB twins live in tests/test_cross_engine.py, which pins each
+expression against its twin.
 """
 
 from __future__ import annotations
@@ -32,15 +35,9 @@ def h64_sql(expr: str) -> str:
     return f"CAST(conv(substring(md5({expr}), 1, 15), 16, 10) AS BIGINT)"
 
 
-def h64_duck(expr: str) -> str:
-    return f"(('0x' || substr(md5({expr}), 1, 15))::BIGINT)"
-
-
 def tokens(col: Column) -> Column:
     return F.split(F.trim(col), r"\s+")
 
-
-TOKENS_DUCK = "regexp_split_to_array(trim({expr}), '\\s+')"
 
 # BPE-ish token pattern: letter runs, digit runs, single punctuation.
 BPE_PATTERN = r"[a-z]+|[0-9]+|[^a-z0-9\s]"
@@ -68,11 +65,6 @@ def _array_lit(words: list[str]) -> str:
     return f"array({inner})"
 
 
-def _list_lit_duck(words: list[str]) -> str:
-    inner = ", ".join("'" + w.replace("'", "''") + "'" for w in words)
-    return f"[{inner}]"
-
-
 def marker_score(tokens_col: str, lang: str) -> Column:
     """Count of distinct token matches against the language's marker set
     (Spark: array_intersect on distinct tokens — codegen'd)."""
@@ -82,18 +74,8 @@ def marker_score(tokens_col: str, lang: str) -> Column:
     )
 
 
-def marker_score_duck(tokens_expr: str, lang: str) -> str:
-    markers = _list_lit_duck(LANG_MARKERS[lang])
-    return f"len(list_intersect(list_distinct({tokens_expr}), {markers}))"
-
-
 def stopword_count(tokens_col: str) -> Column:
     stops = _array_lit(EN_STOPWORDS)
     return F.expr(
         f"size(filter({tokens_col}, t -> array_contains({stops}, t)))"
     )
-
-
-def stopword_count_duck(tokens_expr: str) -> str:
-    stops = _list_lit_duck(EN_STOPWORDS)
-    return f"len(list_filter({tokens_expr}, t -> list_contains({stops}, t)))"

@@ -2,7 +2,7 @@
 that the text operators are built from (h64, tokens, marker_score,
 stopword_count) must agree value-for-value with their DuckDB twins.
 
-The twins are written independently of the oracles in
+The twins, defined below, are written independently of the oracles in
 __spark_entry__.py, which carry their own SQL text. So this pins the
 product's expressions on edge inputs the gate corpora may lack (empty
 text, tabs, padding), without tying any oracle to the code it checks."""
@@ -13,16 +13,37 @@ import duckdb
 from pyspark.sql import functions as F  # noqa: N812
 
 from pdf_document_extractor_spark.functions.text import (
-    TOKENS_DUCK,
+    EN_STOPWORDS,
+    LANG_MARKERS,
     h64,
-    h64_duck,
     h64_sql,
     marker_score,
-    marker_score_duck,
     stopword_count,
-    stopword_count_duck,
     tokens,
 )
+
+
+def h64_duck(expr: str) -> str:
+    return f"(('0x' || substr(md5({expr}), 1, 15))::BIGINT)"
+
+
+TOKENS_DUCK = "regexp_split_to_array(trim({expr}), '\\s+')"
+
+
+def _list_lit_duck(words: list[str]) -> str:
+    inner = ", ".join("'" + w.replace("'", "''") + "'" for w in words)
+    return f"[{inner}]"
+
+
+def marker_score_duck(tokens_expr: str, lang: str) -> str:
+    markers = _list_lit_duck(LANG_MARKERS[lang])
+    return f"len(list_intersect(list_distinct({tokens_expr}), {markers}))"
+
+
+def stopword_count_duck(tokens_expr: str) -> str:
+    stops = _list_lit_duck(EN_STOPWORDS)
+    return f"len(list_filter({tokens_expr}, t -> list_contains({stops}, t)))"
+
 
 SAMPLES = [
     "the quick brown fox",

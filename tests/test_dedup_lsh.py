@@ -168,8 +168,7 @@ PYTHON_NODES = (
 
 def test_dedup_family_starts_no_python_worker(spark):
     """A Python stage in dedup costs peak RSS (one was measured at +11-18%
-    on the dedup_near benchmark): every dedup operator stays in Catalyst,
-    and dedup.py imports no pandas/numpy that would invite one back."""
+    on the dedup_near benchmark): every dedup operator stays in Catalyst."""
     docs = _docs(spark, _near_copy_corpus())
     before = set(_executions(spark))
     assert exact_dedup(docs).count() > 0
@@ -181,15 +180,21 @@ def test_dedup_family_starts_no_python_worker(spark):
     assert nodes
     python = [d for _, d in nodes if d.startswith(PYTHON_NODES)]
     assert python == []
-    assert _top_level_imports("dedup") & {"pandas", "numpy"} == set()
 
 
-def _top_level_imports(operator_module: str) -> set[str]:
-    """Top-level package names an ``operators/`` module imports
-    absolutely (relative imports of the package itself excluded)."""
-    path = pathlib.Path(__file__).resolve().parents[1].joinpath(
-        "pdf_document_extractor_spark", "operators", f"{operator_module}.py"
-    )
+OPERATORS_DIR = pathlib.Path(__file__).resolve().parents[1].joinpath(
+    "pdf_document_extractor_spark", "operators"
+)
+
+# The operator modules whose Arrow stages run Python on purpose: the
+# extraction stage and the figure render. Every other operator family is
+# Catalyst-only.
+PANDAS_OPERATORS = {"extract.py", "multimodal.py"}
+
+
+def _top_level_imports(path: pathlib.Path) -> set[str]:
+    """Top-level package names a module imports absolutely (relative
+    imports of the package itself excluded)."""
     imported = set()
     for node in ast.walk(ast.parse(path.read_text(), str(path))):
         if isinstance(node, ast.Import):
@@ -201,8 +206,7 @@ def _top_level_imports(operator_module: str) -> set[str]:
 
 def test_text_family_starts_no_python_worker(spark):
     """The text operators (stats, sampling, chunking, cleaning) are all
-    Catalyst: collecting every output column runs no Python plan node,
-    and none of their modules imports pandas/numpy."""
+    Catalyst: collecting every output column runs no Python plan node."""
     from pdf_document_extractor_spark.operators.chunking import chunk_documents
     from pdf_document_extractor_spark.operators.cleaning import (
         blocklist_filter,
@@ -250,5 +254,15 @@ def test_text_family_starts_no_python_worker(spark):
     assert nodes
     python = [d for _, d in nodes if d.startswith(PYTHON_NODES)]
     assert python == []
-    for module in ("textstats", "sampling", "chunking", "cleaning"):
-        assert _top_level_imports(module) & {"pandas", "numpy"} == set(), module
+
+
+def test_only_extraction_operators_import_pandas_or_numpy():
+    """A pandas/numpy import invites a Python stage back into a Catalyst
+    family, so every operator module outside PANDAS_OPERATORS must import
+    neither — including a module added later."""
+    modules = list(OPERATORS_DIR.glob("*.py"))
+    assert {m.name for m in modules} >= PANDAS_OPERATORS
+    importing = {
+        m.name for m in modules if _top_level_imports(m) & {"pandas", "numpy"}
+    }
+    assert importing <= PANDAS_OPERATORS

@@ -17,7 +17,7 @@ sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 import duckdb
 
-TABLES = ("documents", "embeddings")
+TABLES = ("documents",)
 
 
 def value_hash(rows: list[tuple], cols: list[str]) -> str:

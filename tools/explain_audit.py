@@ -56,9 +56,6 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     from pdf_document_extractor_spark.operators.extract import extract_pages
-    from pdf_document_extractor_spark.operators.similarity import (
-        brute_force_topk,
-    )
     from pdf_document_extractor_spark.plans.run import extraction_plan
     from pdf_document_extractor_spark.sources.catalog import SnapshotTable
     from pdf_document_extractor_spark.sources.pages import (
@@ -91,9 +88,13 @@ def main() -> None:
         extract_pages(todo),
         ["BroadcastHashJoin LeftAnti", "ReadSchema: struct<url:string>"],
         "The committed-urls side scans ONLY the url column and broadcasts; "
-        "the pages side is never shuffled. With a large committed set the "
-        "broadcast flips to a shuffled hash join automatically (AQE) — "
-        "still keyed on url, co-partitioned with the bucket layout.",
+        "the pages side is never shuffled by the join. This holds only "
+        "while the committed side fits spark.sql.autoBroadcastJoinThreshold. "
+        "A larger committed set gives a SortMergeJoin under Exchange "
+        "hashpartitioning(url, spark.sql.shuffle.partitions) on the pages "
+        "side (200 by default); the job's placement then adds a "
+        "REPARTITION_BY_NUM exchange on top, so every payload byte is "
+        "shuffled twice.",
     )
 
     audit(
@@ -120,25 +121,6 @@ def main() -> None:
         "only wide dependency on the extraction path; the committed side "
         "is read with the schema its manifest entry records, so planning "
         "runs no inference job.",
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    audit(
-        "similarity top-k (query closure, one Arrow scan)",
-        brute_force_topk(emb, query_ids_below=10, k=5),
-        [
-            "MapInPandas",
-            "PushedFilters: [IsNotNull(vec_id)",
-            "WindowGroupLimit",
-        ],
-        "The tiny (bounded) query set rides the scoring closure; the "
-        "corpus is ONE Arrow-batched scan whose vectorized numpy fold "
-        "keeps the exact JVM float64 op order (round-6: replaces the "
-        "interpreted higher-order-function cross join, which cannot "
-        "codegen). vec_id range predicates push into parquet. "
-        "WindowGroupLimit runs BEFORE the exchange — each map task keeps "
-        "only its local top-k per query, so the shuffle moves "
-        "O(queries * k) rows, not the scored corpus.",
     )
 
     # -- LSH joins read one materialized state, keyed on band and doc ids --
